@@ -3491,9 +3491,10 @@ def q_kg_dict_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, _, triples = _kg_oracle_run(spark)
     triples = triples.localCheckpoint()
+    vocab = termdict.vocabulary(triples).localCheckpoint()
+    termdict.check_injective(vocab)
     enc = termdict.encode_triples(triples)
     ranks = graph.pagerank_edges(termdict.edge_list_encoded(enc))
-    vocab = termdict.vocabulary(triples)
     return (
         ranks.join(vocab, ranks.node == vocab.id)
         .select(F.col("term").alias("node"),

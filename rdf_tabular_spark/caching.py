@@ -22,6 +22,18 @@ _LIVE_CACHES: list[DataFrame] = []
 _MAX_LIVE_CACHES = 4
 
 
+def release(df: DataFrame) -> None:
+    """Unpersist *df*; when it is a localCheckpoint (a scan of a
+    checkpointed RDD) also free that RDD's blocks, which
+    ``DataFrame.unpersist`` does not reach — they would otherwise stay
+    until the JVM garbage-collects the RDD. Only for frames nothing reads
+    any more: a released checkpoint cannot be recomputed."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def cache_bounded(df: DataFrame) -> DataFrame:
     """Persist *df* and register it; evict (unpersist) the oldest entry
     beyond the bound."""

@@ -12,13 +12,14 @@ Scale design (10^12-file graph):
 - ``degrees`` is two partial+final hash aggregations and one
   shuffle-on-node full-outer merge — no windows, no sorts.
 - ``pagerank`` keeps the edge list partitioned on ``src`` once
-  (``repartition(src)`` + persist) so every iteration's
+  (``repartition(src)`` + localCheckpoint) so every iteration's
   contributions join reuses the same layout; per-iteration state is the
-  narrow (node, rank) table. Lineage is truncated by persisting each
-  iteration's ranks and unpersisting the previous one (same pattern as
-  link.connected_components — localCheckpoint would defeat AQE
-  coalescing on small inputs). Dangling mass is dropped, matching the
-  classic formulation rank = (1-d)/N + d * sum(in_contrib); that keeps
+  narrow (node, rank) table. The node and edge bases are localCheckpoint-
+  ed once, which flattens the upstream plan the loop re-references; each
+  iteration's ranks are persisted and the previous ones unpersisted, so
+  the loop itself runs at the AQE-coalesced partition count. Dangling
+  mass is dropped, matching the classic formulation
+  rank = (1-d)/N + d * sum(in_contrib); that keeps
   each iteration a single agg + left join, with no global re-sum of
   dangling nodes (at 10^12 nodes an extra global scalar per iteration
   is a driver barrier we don't need for link-analysis ranking).

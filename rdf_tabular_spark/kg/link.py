@@ -10,9 +10,16 @@ module get one canonical IRI. Pipeline — all set-level, skew-aware:
    this generalizes its cross-table IRI linking J2 into a similarity join)
 4. LSH blocking: explode band keys, self-join per (band, key) bucket;
    bucket sizes are capped (hot-bucket guard) before the pair join
-5. Jaccard rescoring on the shingle sets (``array_intersect/array_union``)
-6. connected components by iterative min-label propagation (driver loop,
-   localCheckpoint every iteration to cut lineage), canonical = min mention
+5. verify, then dedup: every joined candidate row gets its exact Jaccard
+   on the shingle sets (as injective long codes),
+   ``|A∩B| / (|A| + |B| - |A∩B|)``, and is filtered right after the join;
+   only the kept pairs, as narrow (a, b, jaccard) rows, reach the (a, b)
+   dedup shuffle. A pair that collides in several bands has the same
+   Jaccard in each, so the order changes nothing.
+6. connected components by fixed-step min-label propagation: a self-loop
+   per vertex makes a round one edges ⋈ labels join plus one aggregate;
+   convergence is checked only every 3rd round and on the last one, where
+   a localCheckpoint cuts the plan. canonical = min mention
 7. broadcast remap of the mention IRIs inside the triple stream
 """
 
@@ -30,6 +37,12 @@ MAX_BUCKET = 256  # hot-bucket guard: drop LSH buckets larger than this
 #: vocabulary is broadcast-sized anyway; a distributed LSH self-join + CC
 #: loop on a few thousand rows is pure scheduling latency). Same adaptive
 #: philosophy as AQE's broadcast-vs-SMJ choice from runtime stats.
+#: The two paths bucket differently: the driver twin's minhash is crc32,
+#: the distributed path's is Spark's murmur3 ``hash``, so they find
+#: different LSH candidates and the same names can group differently on
+#: either side of this threshold (the 4,837 names of the seed-401 kg_build
+#: benchmark input give 1,671 entities through the driver twin and 1,478
+#: through the distributed path).
 SMALL_VOCAB = 4096
 
 
@@ -44,6 +57,19 @@ def shingles(c, k: int = 3):
     padded = F.concat(F.lit("^"), c, F.lit("$"))
     idx = F.sequence(F.lit(1), F.greatest(F.length(padded) - (k - 1), F.lit(1)))
     return F.array_distinct(F.transform(idx, lambda i: F.substring(padded, i, k)))
+
+
+def shingle_code(t):
+    """The shingle *t* (at most 3 characters) as a long: code point + 1 of
+    each character in its own 21 bits, 0 for no character. Injective, so
+    set sizes over codes equal those over the strings, and set operations
+    on them run on primitive longs."""
+    code = F.lit(0).cast("long")
+    for p in range(3):
+        cp = F.ascii(F.substring(t, p + 1, 1)).cast("long") + 1
+        code = code + F.shiftleft(
+            F.when(F.length(t) > p, cp).otherwise(F.lit(0)), 21 * p)
+    return code
 
 
 def minhash_bands(sh):
@@ -165,8 +191,10 @@ def candidate_pairs(mentions: DataFrame, jaccard_threshold: float = 0.55) -> Dat
     # the distinct-mention set is orders of magnitude smaller than the
     # mention stream; localCheckpoint it so the LSH self-join's two sides
     # (and the downstream CC loop) don't each re-run the distinct + minhash
-    # over the full extraction output
-    m = m.localCheckpoint(eager=False)
+    # over the full extraction output. From here on the shingles are
+    # codes: the verification below intersects arrays of longs
+    m = m.withColumn("sh", F.transform("sh", shingle_code)) \
+        .localCheckpoint(eager=False)
     exploded = m.select(
         "mention", "sh", F.posexplode("bands").alias("band", "key"))
 
@@ -184,18 +212,19 @@ def candidate_pairs(mentions: DataFrame, jaccard_threshold: float = 0.55) -> Dat
         "band", "key", F.col("mention").alias("a"), F.col("sh").alias("sh_a"))
     b = bucketed.select(
         "band", "key", F.col("mention").alias("b"), F.col("sh").alias("sh_b"))
+    # verify before the dedup: the shuffle then carries the few kept
+    # (a, b, jaccard) rows instead of every candidate with both shingle
+    # arrays; |A∪B| comes from the set sizes, one array_intersect per row
     pairs = (
         a.join(b, ["band", "key"])
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "sh_a", "sh_b")
-        .dropDuplicates(["a", "b"])
+        .withColumn("i", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn(
             "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
+            F.col("i") / (F.size("sh_a") + F.size("sh_b") - F.col("i")))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("a", "b", "jaccard")
+        .dropDuplicates(["a", "b"])
     )
     return pairs
 
@@ -307,67 +336,64 @@ def tfidf_rescore(mentions: DataFrame, pairs: DataFrame) -> DataFrame:
 def connected_components(
     mentions: DataFrame, pairs: DataFrame, max_iter: int = 10
 ) -> DataFrame:
-    """(mention, canonical) via iterative min-label propagation."""
-    from ..caching import cache_bounded
+    """(mention, canonical) via fixed-step min-label propagation: after
+    *max_iter* rounds (or earlier, once a round changes nothing) each
+    mention's canonical is the min label within that many hops. Pair
+    endpoints missing from *mentions* are dropped, and a null mention
+    stays its own (null) entity."""
+    from ..caching import cache_bounded, release
 
-    labels = mentions.select("mention").distinct().withColumn(
-        "label", F.col("mention")).persist()
-    cached = labels  # the currently-persisted handle (see unpersist below)
+    # a self-loop per vertex folds the vertex's own label into the
+    # neighbour min, so a round is one join + one aggregate; the self-loop
+    # also tells vertices from pair endpoints missing from `mentions`
+    own = F.col("x").eqNullSafe(F.col("y"))
+    p = pairs.filter(F.col("a") != F.col("b"))
     edges = (
-        pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .union(pairs.select(F.col("b").alias("x"), F.col("a").alias("y")))
+        p.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        .union(p.select(F.col("b").alias("x"), F.col("a").alias("y")))
+        .union(mentions.select(F.col("mention").alias("x"),
+                               F.col("mention").alias("y")).distinct())
     ).persist()
-    if edges.isEmpty():  # nothing to merge: every mention is its own entity
-        out = labels.select("mention", F.col("label").alias("canonical"))
-        edges.unpersist()
-        cache_bounded(labels)
-        return out
-    # persist (not localCheckpoint) per iteration: checkpointing each loop
-    # forces eager materialization at the full shuffle-partition count and
-    # defeats AQE partition coalescing — on a high-core session that made
-    # each tiny iteration pay hundreds of empty tasks. Lineage depth is
-    # bounded by max_iter, BUT the plan TREE is not: each step references
-    # labels twice (own label + neighbor-min), so the logical tree doubles
-    # per iteration, and the plan-description string Spark renders for the
-    # SQL listener grows 2^k — on a long-diameter graph that OOMs the
-    # driver before any data moves. Cut the tree with a localCheckpoint
-    # every few iterations: 8x growth between cuts, both costs bounded.
-    for it in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.y == labels.mention)
-            .groupBy("x")
-            .agg(F.min("label").alias("nl"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.mention == neighbor_min.x, "left")
-            .select(
-                "mention",
-                F.col("label").alias("old_label"),
-                F.least(F.col("label"), F.coalesce(F.col("nl"), F.col("label"))).alias("label"),
+    labels = edges.filter(own).select(
+        F.col("x").alias("mention"), F.col("y").alias("label"))
+    # Each round references the previous labels once, so the plan grows
+    # by one join + aggregate per round; every 3rd and the last round cut
+    # it with a localCheckpoint (a persisted frame keeps its plan, and
+    # nested callers such as smush(smush(...)) render it into every
+    # explain string) and check convergence there. Rounds after a fixed
+    # point change nothing, so stopping there keeps the fixed-step result
+    # the SQL twins compute.
+    held = None  # the last checkpointed frame
+    try:
+        for it in range(max_iter):
+            step = (
+                edges.join(labels, F.col("y").eqNullSafe(F.col("mention")))
+                .groupBy("x")
+                .agg(F.min("label").alias("label"),
+                     F.min(F.when(own, F.col("label"))).alias("old"))
+                .filter(F.col("old").isNotNull() | F.col("x").isNull())
             )
-        )
-        if (it + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint()
-        else:
-            new_labels = new_labels.persist()
-        changed = (
-            new_labels.filter(F.col("label") != F.col("old_label"))
-            .limit(1).count()
-        )
-        # unpersist the actual persisted HANDLE: labels is a select()
-        # projection from iteration 2 on, whose plan never matches the
-        # cache entry, so unpersisting the projection silently leaked
-        # every iteration's cache (review r2)
-        cached.unpersist()
-        cached = new_labels
-        labels = new_labels.select("mention", "label")
-        if changed == 0:
-            break
-    edges.unpersist()
-    # the final iteration's frame stays persisted for the caller to
-    # materialize from; register it with the bounded session registry so
-    # repeated CC calls in a long-lived session cannot accumulate caches
-    cache_bounded(cached)
+            labels = step.select(F.col("x").alias("mention"), "label")
+            if (it + 1) % 3 and it + 1 < max_iter:
+                continue
+            step = step.localCheckpoint()
+            if held is not None:
+                release(held)
+            held = step
+            labels = step.select(F.col("x").alias("mention"), "label")
+            changed = step.filter(F.col("label") != F.col("old"))
+            if not changed.limit(1).count():
+                break
+    except BaseException:
+        if held is not None:
+            release(held)
+        raise
+    finally:
+        edges.unpersist()
+    if held is not None:
+        # registered so repeated calls in a long-lived session cannot
+        # accumulate caches
+        cache_bounded(held)
     return labels.select("mention", F.col("label").alias("canonical"))
 
 

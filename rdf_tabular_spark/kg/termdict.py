@@ -98,6 +98,13 @@ def check_injective(vocab: DataFrame) -> None:
             "switch to the 128-bit encoding (two salted xxhash64 ids)")
 
 
+def bucket_of(h, buckets: int):
+    """Bucket ``0..buckets-1`` of the int hash column *h*. ``pmod``, not
+    ``abs(h) % buckets``: abs of Int.MinValue fails the query under ANSI
+    and stays negative without it, which lands outside the bucket range."""
+    return F.pmod(h, F.lit(buckets))
+
+
 def dense_ids(vocab: DataFrame, buckets: int = 4096) -> DataFrame:
     """Assign dense ``0..V-1`` ids over the vocabulary: md5 bucket →
     rank within bucket (partitioned window — never a global sort) →
@@ -107,8 +114,8 @@ def dense_ids(vocab: DataFrame, buckets: int = 4096) -> DataFrame:
     ``(term, id, dense_id)``."""
     from pyspark.sql import Window
 
-    b = F.abs(F.hash(F.md5(F.col("term")))) % buckets
-    with_b = vocab.withColumn("_b", b)
+    with_b = vocab.withColumn(
+        "_b", bucket_of(F.hash(F.md5(F.col("term"))), buckets))
     counts = dict(
         (r["_b"], r["n"]) for r in
         with_b.groupBy("_b").agg(F.count(F.lit(1)).alias("n")).collect())

@@ -501,8 +501,8 @@ def dedup_clusters(
     deduplicated corpus, singletons keep themselves.
 
     Scale shape: min-label propagation over the PAIR graph only
-    (kg/link.connected_components — per-iteration hash agg + left join on
-    narrow (id, label) rows, lineage truncated per round); docs touched
+    (kg/link.connected_components — one join + hash agg per round on
+    narrow (id, label) rows); docs touched
     once by the final left join. Pair graphs are tiny relative to the
     corpus (near-dup rate << 1), so the iteration cost is bounded by the
     duplicate population, not the corpus.

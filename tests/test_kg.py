@@ -300,3 +300,189 @@ def test_tfidf_rescore_partition_invariance(spark):
     b = sorted(map(tuple, tfidf_rescore(m.repartition(5),
                                         p.repartition(3)).collect()))
     assert a == b
+
+
+def _seeded_vocabulary(seed: int = 7) -> list[str]:
+    """Near-duplicate module names (edits, separator and case variants;
+    some with non-ASCII and astral characters), plus MAX_BUCKET + 20 case
+    variants of one name: they normalize alike, so every band bucket they
+    share is over the hot-bucket guard."""
+    import random
+
+    from rdf_tabular_spark.kg.link import MAX_BUCKET
+
+    rng = random.Random(seed)
+    letters = "abcdefghijklmnopqrstuvwxyz" * 3 + "éüß日本𝄞"
+    names: set[str] = set()
+    for _ in range(60):
+        parts = ["".join(rng.choice(letters) for _ in range(rng.randint(3, 8)))
+                 for _ in range(rng.randint(1, 3))]
+        base = ".".join(parts)
+        names.add(base)
+        for _ in range(rng.randint(1, 5)):
+            s = list(base)
+            i = rng.randrange(len(s))
+            op = rng.choice(("sub", "ins", "del", "sep", "case"))
+            if op == "sub":
+                s[i] = rng.choice(letters)
+            elif op == "ins":
+                s.insert(i, rng.choice(letters))
+            elif op == "del" and len(s) > 3:
+                del s[i]
+            elif op == "sep":
+                s = list(base.replace(".", rng.choice("-_/")))
+            else:
+                s = list(base.upper())
+            names.add("".join(s))
+    hot = "hotbucketname"
+    variants: set[str] = set()
+    while len(variants) < MAX_BUCKET + 20:
+        variants.add("".join(c.upper() if rng.random() < 0.5 else c
+                             for c in hot))
+    return sorted(names | variants)
+
+
+def test_candidate_pairs_equals_python_reference(spark):
+    """Verify-then-dedup returns exactly the pairs a plain-Python LSH
+    reference finds from the same (mention, shingles, bands) rows: every
+    (a < b) pair sharing a bucket at or under MAX_BUCKET, kept when its
+    exact Jaccard reaches the threshold, once however many bands hit."""
+    from collections import Counter, defaultdict
+
+    from rdf_tabular_spark.kg import link
+
+    names = _seeded_vocabulary()
+    mentions = spark.createDataFrame([(n,) for n in names], "mention string")
+    rows = (
+        mentions.withColumn("sh", link.shingles(
+            link.normalize_mention(F.col("mention"))))
+        .withColumn("bands", link.minhash_bands(F.col("sh")))
+        .collect())
+    sh = {r["mention"]: set(r["sh"]) for r in rows}
+    buckets: dict[tuple[int, int], list[str]] = defaultdict(list)
+    for r in rows:
+        for band, key in enumerate(r["bands"]):
+            buckets[(band, key)].append(r["mention"])
+    hits: Counter = Counter()
+    for members in buckets.values():
+        if len(members) <= link.MAX_BUCKET:
+            hits.update((a, b) for a in members for b in members if a < b)
+    expect = {}
+    for a, b in hits:
+        j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+        if j >= 0.55:
+            expect[(a, b)] = j
+    # the vocabulary exercises the guard and multi-band collisions
+    assert max(len(m) for m in buckets.values()) > link.MAX_BUCKET
+    assert any(n > 1 for (a, b), n in hits.items() if (a, b) in expect)
+
+    out = link.candidate_pairs(mentions, 0.55).collect()
+    got = {(r["a"], r["b"]): r["jaccard"] for r in out}
+    assert len(out) == len(got)
+    assert got == expect
+
+
+def _python_cc(vertices, pairs, max_iter):
+    """Fixed-step min-label propagation: every round, each vertex takes the
+    min of its own and its neighbours' labels. Pairs with an endpoint
+    outside *vertices* are dropped; a None vertex keeps the None label."""
+    vs = set(vertices)
+    adj: dict = {v: set() for v in vs}
+    for a, b in pairs:
+        if a in vs and b in vs and None not in (a, b) and a != b:
+            adj[a].add(b)
+            adj[b].add(a)
+    label = {v: v for v in vs}
+    for _ in range(max_iter):
+        label = {v: v if v is None else
+                 min([label[v]] + [label[u] for u in adj[v]]) for v in vs}
+    return label
+
+
+def _spark_cc(spark, vertices, pairs, max_iter=10):
+    from rdf_tabular_spark.kg import link
+
+    mentions = spark.createDataFrame([(v,) for v in vertices],
+                                     "mention string")
+    p = spark.createDataFrame(pairs, "a string, b string")
+    out = link.connected_components(mentions, p, max_iter).collect()
+    assert len(out) == len({r["mention"] for r in out})
+    return {r["mention"]: r["canonical"] for r in out}
+
+
+PATH = [f"p{i:02d}" for i in range(14)]
+
+
+@pytest.mark.parametrize("max_iter", [1, 2, 10])
+def test_connected_components_truncated_path(spark, max_iter):
+    """A 14-node path needs 13 rounds; fewer rounds stop where a fixed-step
+    propagation stops, including a last round that is no check round."""
+    pairs = list(zip(PATH, PATH[1:]))
+    got = _spark_cc(spark, PATH, pairs, max_iter)
+    assert got == _python_cc(PATH, pairs, max_iter)
+    assert got["p13"] == PATH[max(0, 13 - max_iter)]
+
+
+@pytest.mark.parametrize("case", ["isolated", "no_pairs", "missing",
+                                  "null"])
+def test_connected_components_matches_reference(spark, case):
+    vertices, pairs = {
+        # components of several sizes next to isolated vertices; repeated
+        # mentions and pairs count once
+        "isolated": (["x1", "x2", "x3", "y1", "y2", "solo", "x1"],
+                     [("x2", "x3"), ("x1", "x2"), ("y2", "y1"),
+                      ("x1", "x2")]),
+        "no_pairs": (["b", "a", "c"], []),
+        # an endpoint outside the mentions neither bridges nor appears,
+        # even when it would be the smallest label
+        "missing": (["b1", "b2", "c1"],
+                    [("b1", "a0"), ("a0", "b2"), ("c1", "zz")]),
+        "null": ([None, "n1", "n2"], [("n1", "n2"), (None, "n1")]),
+    }[case]
+    got = _spark_cc(spark, vertices, pairs)
+    assert got == _python_cc(vertices, pairs, 10)
+
+
+def test_connected_components_releases_caches(spark, monkeypatch):
+    """After a call only the checkpoint behind the returned frame stays
+    (the registry's in-memory copy of it goes with release_caches); a
+    failure mid-loop leaves nothing persisted."""
+    from rdf_tabular_spark import caching
+    from rdf_tabular_spark.kg import link
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def checkpoints(df) -> set:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return {leaves.apply(i).rdd().id() for i in range(leaves.size())
+                if leaves.apply(i).nodeName() == "LogicalRDD"}
+
+    mentions = spark.createDataFrame([(n,) for n in PATH], "mention string")
+    pairs = spark.createDataFrame(list(zip(PATH, PATH[1:])),
+                                  "a string, b string")
+    caching.release_caches()
+    before = persisted()
+    out = link.connected_components(mentions, pairs, max_iter=10)
+    out.collect()
+    caching.release_caches()
+    assert persisted() - before == checkpoints(out)
+    assert len(checkpoints(out)) == 1
+
+    frame_class = type(mentions)  # the classic DataFrame subclass
+    real_count = frame_class.count
+    calls = []
+
+    def count_failing_second(self):
+        calls.append(self)
+        if len(calls) == 2:  # the check after round 6
+            raise RuntimeError("injected")
+        return real_count(self)
+
+    monkeypatch.setattr(frame_class, "count", count_failing_second)
+    kept = persisted()
+    with pytest.raises(RuntimeError, match="injected"):
+        link.connected_components(mentions, pairs, max_iter=10)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert not persisted() - kept

@@ -129,3 +129,41 @@ def test_pagerank_edges_invariant_under_encoding(spark):
     r_id = sorted(round(r["rank"], 9)
                   for r in pagerank_edges(e_id, iterations=4).collect())
     assert r_str == r_id
+
+
+def test_bucket_of_int_min_hash(spark):
+    """A hash of Int.MinValue gets a bucket in 0..buckets-1 with ANSI on
+    (abs overflowed there) and off (abs stayed negative there)."""
+    from rdf_tabular_spark.kg import termdict
+
+    h = F.lit(-2 ** 31).cast("int")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            row = spark.range(1).select(
+                termdict.bucket_of(h, 4096).alias("b4096"),
+                termdict.bucket_of(h, 1000).alias("b1000"),
+                termdict.bucket_of(F.lit(-5), 4096).alias("neg")).first()
+            assert tuple(row) == (0, 352, 4091), mode
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_dict_pagerank_checks_injectivity(spark, triples, monkeypatch):
+    """The id-path PageRank decodes through the vocabulary, so it must
+    refuse to run on a vocabulary whose ids collide."""
+    import __spark_entry__ as entry
+    from rdf_tabular_spark.kg import termdict
+
+    class Collision(RuntimeError):
+        pass
+
+    def clash(vocab):
+        raise Collision("term-id collision")
+
+    monkeypatch.setattr(entry, "_kg_oracle_run",
+                        lambda spark: (None, None, triples))
+    monkeypatch.setattr(termdict, "check_injective", clash)
+    with pytest.raises(Collision):
+        entry.q_kg_dict_pagerank(spark, "")

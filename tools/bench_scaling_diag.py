@@ -10,9 +10,10 @@ Three probes, each run in a fresh confined JVM at local[N]:
   for every shuffle-bearing stage (each executor of a real cluster
   has its own bus + NIC; the north rule's N vs 4N criterion is about
   that topology).
-* ``link``   — extraction (cached) + mention linking only: the LSH
-  banding + connected-components rounds, the suspected deficit.
-* ``tail``   — everything after linking: edge dedup + union + count.
+* ``link``   — extraction + mention linking, counted: the LSH banding
+  + connected-components rounds, the suspected deficit.
+* ``extract`` — extraction alone, counted: the Arrow-UDF stage that
+  ``link`` runs first, so the difference of the two isolates linking.
 
 Usage: python tools/bench_scaling_diag.py [n_files] [probe ...]
 Prints one JSON line per (probe, cpus).
