@@ -3387,69 +3387,21 @@ def sql_kg_streaming_triples() -> str:
     """
 
 
-def _kg_pipeline(src: DataFrame):
-    """extract -> annotate -> link -> canonical dedup over a source table of
-    input_hint shape (repo, path, commit, lang, content [, content_sha256])."""
-    from rdf_tabular_spark.kg import annotate, extract, link
-    from rdf_tabular_spark import TRIPLE_COLUMNS
-
-    if "content_sha256" not in src.columns:
-        src = src.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-    # extraction feeds both the triple stream and the mention stream —
-    # persist so the mapInPandas UDF runs once (the checkpointed KGPipeline
-    # gets this for free from its per-stage parquet writes)
-    # layout="source": the production source table (Iceberg, 10^12 files)
-    # is written sorted by (repo, path); extraction is row-local, so the
-    # hot path never re-shuffles content. The checkpointed KGPipeline keeps
-    # the explicit repartitionByRange where stage outputs are written.
-    # The persisted cache is projected to the columns the graph stages
-    # actually read (commit/lang/content_sha256 ride the src scan instead)
-    # — cache bytes are heap churn, and heap bandwidth is the scaling
-    # ceiling of the JVM-side stages.
-    # DISK_ONLY: the cache serializes once to spark.local.dir (tmpfs here,
-    # executor NVMe on a cluster) instead of living as columnar blocks in
-    # the heap — heap bandwidth is the scaling ceiling of the JVM stages,
-    # and the measured whole-job throughput is ~10% higher this way.
-    from pyspark import StorageLevel
-
-    # emit_file_rows: the extraction UDF also emits one per-file row
-    # (kind='file', detail='commit|lang|sha256'), so the per-file triple
-    # bundle derives from the SAME scan — without it the graph stage
-    # re-reads every content byte for sha256 (a second 100 TB scan, the
-    # single largest cost of the production job)
-    extracted_all = extract.extract_structures(
-        src.drop("content_sha256"), layout="source", carry_sha=False,
-        emit_file_rows=True).select(
-        "repo", "path", "kind", "name", "detail", "row_idx").persist(
-        StorageLevel.DISK_ONLY)
-    file_rows = extracted_all.filter(F.col("kind") == "file")
-    extracted = extracted_all.filter(F.col("kind") != "file")
-    mentions = extracted.filter(F.col("kind").isin("import", "dep")).select(
-        F.col("name").alias("mention"))
-    labels = link.link_mentions(mentions, 0.55)
-    entities = link.entity_table(labels)
-    # set semantics without any triple-level dedup shuffle — see
-    # rdf_tabular_spark/kg/assemble.py
-    from rdf_tabular_spark.kg.assemble import build_graph
-
-    triples = build_graph(src, extracted, labels, file_rows=file_rows)
-    return src, entities, triples
-
-
 def _kg_run(spark: SparkSession, n_files: int = 300):
     from rdf_tabular_spark.kg import synth
+    from rdf_tabular_spark.kg.pipeline import build_kg
 
-    src = synth.synth_source_table(spark, n_files).withColumn(
-        "content_sha256", F.sha2(F.col("content"), 256))
-    return _kg_pipeline(src)
+    out = build_kg(synth.synth_source_table(spark, n_files))
+    return out["source"], out["entities"], out["triples"]
 
 
 def _kg_oracle_run(spark: SparkSession):
     """The full pipeline over the STAGED oracle source (same parquet the
     DuckDB twin reads)."""
-    src = spark.read.parquet(_kg_oracle_source_path()).withColumn(
-        "content_sha256", F.sha2(F.col("content"), 256))
-    return _kg_pipeline(src)
+    from rdf_tabular_spark.kg.pipeline import build_kg
+
+    out = build_kg(spark.read.parquet(_kg_oracle_source_path()))
+    return out["source"], out["entities"], out["triples"]
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3925,8 +3877,7 @@ def q_kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v1 = spark.read.parquet(_kg_oracle_source_path())
     v2 = spark.read.parquet(_kg_oracle_v2_path())
-    prev = extract.extract_structures(
-        v1, layout="source", carry_sha=False, emit_file_rows=True)
+    prev = extract.extract_structures(v1)
     _, _, triples = delta.incremental_graph(prev, v2)
     return triples
 
@@ -3941,11 +3892,10 @@ def q_kg_graph_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged majority never materializes. The twin recomputes BOTH
     graph versions from the staged sources and diffs them in SQL."""
     from rdf_tabular_spark.kg.delta import graph_diff
+    from rdf_tabular_spark.kg.pipeline import build_kg
 
     _, _, old = _kg_oracle_run(spark)
-    v2 = spark.read.parquet(_kg_oracle_v2_path()).withColumn(
-        "content_sha256", F.sha2(F.col("content"), 256))
-    _, _, new = _kg_pipeline(v2)
+    new = build_kg(spark.read.parquet(_kg_oracle_v2_path()))["triples"]
     # each graph feeds BOTH anti-joins: materialize once per version
     # (production diffs already-written snapshot tables)
     return graph_diff(old.localCheckpoint(), new.localCheckpoint())
@@ -4422,13 +4372,12 @@ def q_kg_time_travel_sparql(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the plain v1 staged parquet — a green row proves the
     time-travel read is byte-identical to the historical corpus all the
     way through pipeline + query."""
+    from rdf_tabular_spark.kg.pipeline import build_kg
     from rdf_tabular_spark.kg.sparql import sparql
     from rdf_tabular_spark.sources.snapshots import SnapshotTable
 
     t = SnapshotTable(_kg_snapshot_table(spark))
-    src = t.read(spark, 1).withColumn(
-        "content_sha256", F.sha2(F.col("content"), 256))
-    _, _, triples = _kg_pipeline(src)
+    triples = build_kg(t.read(spark, 1))["triples"]
     out = sparql(triples, f"""
         PREFIX kg: <{_KG}>
         SELECT ?repo (COUNT(?f) AS ?n_files) WHERE {{
@@ -4458,9 +4407,7 @@ def q_kg_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_tabular_spark.sources.snapshots import SnapshotTable
 
     t = SnapshotTable(_kg_snapshot_table(spark))
-    prev = extract.extract_structures(
-        t.read(spark, 1), layout="source", carry_sha=False,
-        emit_file_rows=True)
+    prev = extract.extract_structures(t.read(spark, 1))
     _, _, triples = delta.incremental_graph(prev, t.read(spark, 2))
     return triples
 
@@ -5866,12 +5813,11 @@ def q_kg_charsets_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         characteristic_sets_incremental,
         charset_state,
     )
+    from rdf_tabular_spark.kg.pipeline import build_kg
 
     _, _, old = _kg_oracle_run(spark)
     old_c = old.localCheckpoint()
-    v2 = spark.read.parquet(_kg_oracle_v2_path()).withColumn(
-        "content_sha256", F.sha2(F.col("content"), 256))
-    _, _, new = _kg_pipeline(v2)
+    new = build_kg(spark.read.parquet(_kg_oracle_v2_path()))["triples"]
     diff = graph_diff(old_c, new)
     state2 = characteristic_sets_incremental(charset_state(old_c), diff)
     return characteristic_sets_from_state(state2)
@@ -8048,7 +7994,8 @@ def q_kg_link_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_tabular_spark.kg import extract, link
 
     src = spark.read.parquet(_kg_oracle_source_path())
-    ext = extract.extract_structures(src, layout="source", carry_sha=False)
+    ext = extract.extract_structures(src).filter(
+        F.col("kind") != extract.FILE_ROW_KIND)
     # ALL extracted names — module mentions AND defined symbols (the
     # north rule canonicalizes "repo/path/symbol entities")
     mentions = ext.select(F.col("name").alias("mention"))
@@ -8240,8 +8187,8 @@ def q_kg_polyglot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_tabular_spark.kg import extract
 
     src = spark.read.parquet(_kg_polyglot_source_path())
-    return extract.extract_structures(
-        src, layout="source", carry_sha=False).select(
+    return extract.extract_structures(src).filter(
+        F.col("kind") != extract.FILE_ROW_KIND).select(
         "repo", "path", "kind", "name", "detail",
         F.col("row_idx").cast("int").alias("row_idx"))
 

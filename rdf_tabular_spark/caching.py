@@ -10,8 +10,8 @@ arrays, PageRank ranks, closure frontiers, CC labels...).
 
 One home on purpose: the registry used to be a private helper of
 ops/dedup that kg/graph and ops/vocab reached into across packages —
-the KG layer depending on a dedup-private symbol. Both packages import
-it from here now; ops/dedup re-exports the old names for back-compat.
+the KG layer depending on a dedup-private symbol. Every user imports
+it from here now.
 """
 
 from __future__ import annotations

@@ -124,8 +124,3 @@ def lexical_regex_for(base: str) -> str | None:
     if base == "datetime":
         return LEXICAL_RE["dateTime"]
     return LEXICAL_RE.get(base)
-
-
-def expand_datatype(name: str) -> str:
-    """Datatype name -> IRI; unknown names pass through (may be an IRI)."""
-    return DATATYPES.get(name, name)

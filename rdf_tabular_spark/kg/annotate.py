@@ -61,8 +61,9 @@ def _t(subj, pred, obj, is_iri=True, dt=None, lang=None) -> Column:
     )
 
 
-def file_level_triples(source_with_sha: DataFrame) -> DataFrame:
-    """Per-file triples straight off the source scan — no shuffle, and
+def file_level_triples(files: DataFrame) -> DataFrame:
+    """Per-file triples from a (repo, path, commit, lang, content_sha256)
+    table (the source, or ``extract.unpack_files``) — no shuffle, and
     **unique by construction** (one bundle per distinct file IRI):
     type/containment/lang/commit/sha256. Repo-level triples come from
     :func:`repo_triples` so they are emitted once per repo, not once per
@@ -80,25 +81,9 @@ def file_level_triples(source_with_sha: DataFrame) -> DataFrame:
            dt=XSD + "hexBinary"),
     )
     return (
-        source_with_sha.select(F.explode(arr).alias("t"))
+        files.select(F.explode(arr).alias("t"))
         .select(*[F.col(f"t.{c}").alias(c) for c in TRIPLE_COLUMNS])
     )
-
-
-def file_level_triples_from_rows(file_rows: DataFrame) -> DataFrame:
-    """:func:`file_level_triples` from the extraction UDF's per-file rows
-    (``kind='file'``, ``detail='commit|lang|sha256'`` — extract.py
-    FILE_ROW_KIND packing) instead of the source table. The whole graph
-    then derives from ONE content scan; at 100 TB the avoided second scan
-    is the single largest cost in the job."""
-    parts = F.split(F.col("detail"), r"\|")
-    unpacked = file_rows.select(
-        "repo", "path",
-        parts.getItem(0).alias("commit"),
-        parts.getItem(1).alias("lang"),
-        parts.getItem(2).alias("content_sha256"),
-    )
-    return file_level_triples(unpacked)
 
 
 def repo_triples(source: DataFrame) -> DataFrame:

@@ -25,15 +25,15 @@ from .. import TRIPLE_COLUMNS
 from . import annotate, link
 
 
-def build_graph(src: DataFrame, extracted: DataFrame,
-                labels: DataFrame,
-                file_rows: DataFrame | None = None) -> DataFrame:
-    """(source, extracted structures, mention labels) -> final triple set.
+def build_graph(files: DataFrame, extracted: DataFrame,
+                labels: DataFrame) -> DataFrame:
+    """(files, extraction rows, mention labels) -> final triple set.
 
-    With *file_rows* (the extraction UDF's per-file rows,
-    ``extract_structures(emit_file_rows=True)``) the per-file bundle and
-    repo types derive from the extraction output and *src* is never
-    re-scanned — one content scan for the whole job."""
+    *files* holds (repo, path, commit, lang, content_sha256) per file:
+    either the source table with its sha column, or
+    :func:`~rdf_tabular_spark.kg.extract.unpack_files` of the extraction
+    output, which keeps the whole job on one content scan. *extracted*
+    may include the file rows; only the structure kinds are read."""
     canon = link.canonicalize_mentions(extracted, labels)
     defs = extracted.filter(F.col("kind").isin("def", "class"))
     # one dedup shuffle for all edges, on ONLY the columns edge emission
@@ -48,17 +48,11 @@ def build_graph(src: DataFrame, extracted: DataFrame,
         .otherwise(F.col("kind")))
     edges = edge_stream.dropDuplicates(
         ["repo", "path", "_ekey", "name"]).drop("_ekey")
-    if file_rows is not None:
-        file_stream = annotate.file_level_triples_from_rows(file_rows)
-        repo_stream = annotate.repo_triples(file_rows)
-    else:
-        file_stream = annotate.file_level_triples(src)
-        repo_stream = annotate.repo_triples(src)
     return (
         annotate.edge_triples(edges)
         .unionByName(link.module_metadata_from_labels(labels, canon))
         .unionByName(annotate.symbol_metadata_triples(defs))
-        .unionByName(file_stream)
-        .unionByName(repo_stream)
+        .unionByName(annotate.file_level_triples(files))
+        .unionByName(annotate.repo_triples(files))
         .select(*TRIPLE_COLUMNS)
     )

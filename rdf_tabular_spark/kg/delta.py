@@ -1,14 +1,16 @@
 """Incremental KG maintenance: re-extract only what changed.
 
 At 10^12 files the content scan inside extraction is the dominant cost
-of the pipeline (SURVEY §7, annotate.file_level_triples_from_rows). A
-daily snapshot touches a tiny fraction of files, so recomputing the
-whole graph re-reads ~100 TB to change ~0.1 %. The incremental path:
+of the pipeline (SURVEY §7). A daily snapshot touches a tiny fraction
+of files, so recomputing the whole graph re-reads ~100 TB to change
+~0.1 %. The incremental path:
 
 1. ``source_diff`` — compare snapshots by (repo, path) + content sha256.
    Both sides project down to three narrow columns BEFORE the join, so
    the diff never shuffles content; the join is a plain shuffle join on
-   (repo, path) (sha equality checked post-join).
+   (repo, path) (sha equality checked post-join). The OLD side is the
+   previous extraction's file rows (``extract.unpack_files``): the old
+   content is never needed, or retained, for diffing.
 2. ``incremental_structures`` — keep the previous snapshot's extraction
    rows for unchanged files (anti-join against the changed/removed key
    set), run the extraction UDF ONLY over added/changed files (semi-join
@@ -65,18 +67,12 @@ def source_diff(old_src: DataFrame, new_src: DataFrame) -> DataFrame:
 
 
 def incremental_structures(prev_structs: DataFrame, new_src: DataFrame,
-                           diff: DataFrame, **extract_kwargs) -> DataFrame:
-    """Extraction output for the NEW snapshot, touching content only for
-    added/changed files. This is the single home of the delta-merge
-    invariant (every diff status invalidates; only added/changed
-    re-extract) — pipeline.run_incremental calls it too.
-
-    *extract_kwargs* must reproduce the flags *prev_structs* was built
-    with (defaults = the kg/delta.py flavor: source layout, no sha
-    column, per-file rows emitted)."""
-    extract_kwargs.setdefault("layout", "source")
-    extract_kwargs.setdefault("carry_sha", False)
-    extract_kwargs.setdefault("emit_file_rows", True)
+                           diff: DataFrame) -> DataFrame:
+    """Extraction output (file rows included) for the NEW snapshot,
+    touching content only for added/changed files. This is the single
+    home of the delta-merge invariant (every diff status invalidates;
+    only added/changed re-extract) — pipeline.run_incremental calls it
+    too."""
     stale_keys = diff.select(*FILE_KEY)  # every diff status invalidates
     fresh_keys = diff.filter(
         F.col("status").isin("added", "changed")).select(*FILE_KEY)
@@ -84,8 +80,7 @@ def incremental_structures(prev_structs: DataFrame, new_src: DataFrame,
         F.broadcast(stale_keys), FILE_KEY, "left_anti")
     # broadcast the delta keys: the semi-join must not shuffle `content`
     fresh_src = new_src.join(F.broadcast(fresh_keys), FILE_KEY, "left_semi")
-    fresh = extract.extract_structures(fresh_src, **extract_kwargs)
-    return kept.unionByName(fresh)
+    return kept.unionByName(extract.extract_structures(fresh_src))
 
 
 def incremental_graph(prev_structs: DataFrame, new_src: DataFrame,
@@ -94,26 +89,14 @@ def incremental_graph(prev_structs: DataFrame, new_src: DataFrame,
 
     Returns (structs, labels, triples); ``structs`` is the new snapshot's
     extraction table — persist it as the input for the NEXT delta."""
-    diff = source_diff(_prev_file_source(prev_structs), new_src)
+    diff = source_diff(extract.unpack_files(prev_structs), new_src)
     structs = incremental_structures(prev_structs, new_src, diff)
     mentions = structs.filter(
         F.col("kind").isin("import", "dep")).select(
         F.col("name").alias("mention"))
     labels = link.link_mentions(mentions, jaccard_threshold)
-    file_rows = structs.filter(F.col("kind") == extract.FILE_ROW_KIND)
-    triples = build_graph(None, structs, labels, file_rows=file_rows)
+    triples = build_graph(extract.unpack_files(structs), structs, labels)
     return structs, labels, triples
-
-
-def _prev_file_source(prev_structs: DataFrame) -> DataFrame:
-    """Reconstruct the (repo, path, content_sha256) view of the OLD
-    snapshot from its per-file extraction rows — the old content itself
-    is never needed (or retained) for diffing."""
-    parts = F.split(F.col("detail"), r"\|")
-    return (
-        prev_structs.filter(F.col("kind") == extract.FILE_ROW_KIND)
-        .select(*FILE_KEY, parts.getItem(2).alias("content_sha256"))
-    )
 
 
 def graph_diff(old_triples: DataFrame, new_triples: DataFrame) -> DataFrame:

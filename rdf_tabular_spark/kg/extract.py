@@ -1,16 +1,19 @@
 """Stage 1: per-file tabular-structure extraction (imports / symbol defs /
 manifest dependency rows) via vectorized Arrow UDFs.
 
-Layout first: ``repartitionByRange(repo, path)`` colocates each repo's files
-(north_rule requirement) so downstream per-repo work is shuffle-local.
 Inside ``mapInPandas`` everything is pandas ``str.extractall`` — vectorized
 over Arrow record batches, never row-at-a-time Python. Per-file row
-numbering (`_row` = index of the structure within its file) happens here,
-not in a global window (SURVEY.md §7.4-4).
+numbering (``row_idx`` = index of the structure within its file) happens
+here, not in a global window (SURVEY.md §7.4-4). The input is extracted
+straight off the scan unless the caller asks for a
+``repartitionByRange(repo, path)`` layout first.
 
 The per-row invariant ``content_sha256 = sha256(content)`` is computed
-JVM-side (``F.sha2``) before the UDF and carried through every stage
-(BASELINE.json input_hint).
+JVM-side (``F.sha2``) when the source does not already carry it, and
+leaves the UDF once per file, on the ``kind='file'`` row that every
+extraction emits (BASELINE.json input_hint). Structure rows carry no sha;
+:func:`unpack_files` turns the file rows back into the file table the
+graph's per-file triples derive from, so the job reads content once.
 """
 
 from __future__ import annotations
@@ -22,13 +25,10 @@ from pyspark.sql import functions as F
 
 EXTRACT_SCHEMA = (
     "repo string, path string, commit string, lang string, "
-    "content_sha256 string, kind string, name string, detail string, "
-    "row_idx int"
+    "kind string, name string, detail string, row_idx int"
 )
-#: hot-path variant: the per-row sha invariant is emitted from the source
-#: scan itself (annotate.file_level_triples), so extraction need not hash +
-#: Arrow-transfer it per structure row
-EXTRACT_SCHEMA_NO_SHA = EXTRACT_SCHEMA.replace("content_sha256 string, ", "")
+_CARRY = ["repo", "path", "commit", "lang"]
+_OUT_COLS = _CARRY + ["kind", "name", "detail", "row_idx"]
 
 # per-language extraction rules == the CSVW-style "metadata" of the virtual
 # tables (each regex plays the role of a column datatype/format annotation)
@@ -87,62 +87,42 @@ LANG_RULES: dict[str, list[tuple[str, str, int]]] = {
 }
 
 
-#: separator-packed payload of the per-file row emitted when
-#: ``emit_file_rows=True``: detail = "commit|lang|sha256". commit is hex,
-#: lang is from a closed set — neither can contain '|'.
+#: ``kind`` of the one row per input file that extraction always emits:
+#: ``name`` null, ``row_idx`` -1, ``detail`` = sha256(content) as hex
 FILE_ROW_KIND = "file"
 
 
-def extract_structures(source: DataFrame, range_partitions: int | None = None,
-                       for_streaming: bool = False,
-                       layout: str = "range",
-                       carry_sha: bool = True,
-                       emit_file_rows: bool = False) -> DataFrame:
-    """source(repo,path,commit,lang,content) -> one row per extracted
-    structure.
+def extract_structures(source: DataFrame,
+                       range_partitions: int | None = None) -> DataFrame:
+    """source(repo, path, commit, lang, content[, content_sha256]) -> one
+    row per extracted structure plus one :data:`FILE_ROW_KIND` row per
+    file, all of :data:`EXTRACT_SCHEMA`.
 
-    *layout*:
+    *range_partitions* ``None`` extracts straight off the scan. One
+    source row IS one file, so extraction and per-file numbering never
+    need colocation, and a production source table at 10^12 files is
+    already written sorted by (repo, path): re-shuffling 100 TB of
+    ``content`` to recreate that layout would be the job's largest cost.
+    Scan parallelism then comes from file splits (size
+    ``spark.sql.files.maxPartitionBytes`` accordingly). An int first
+    ``repartitionByRange(n, repo, path)``s the input, so the output lands
+    repo-contiguous.
 
-    - ``"range"`` (default): explicit ``repartitionByRange(repo, path)``
-      before the UDF — the checkpointed pipeline uses this so its stage
-      writes land repo-contiguous (resume ranges, partition pruning).
-    - ``"source"``: trust the input table's own layout and extract
-      straight off the scan. One source row IS one file, so extraction
-      and per-file numbering never need colocation — and a production
-      Iceberg source table at 10^12 files is already written sorted by
-      (repo, path); re-shuffling 100 TB of `content` to recreate a layout
-      the table already has would make the content shuffle the whole
-      job's bottleneck. Scan parallelism then comes from file splits
-      (size `spark.sql.files.maxPartitionBytes` accordingly).
-
-    *for_streaming* forces the source layout (repartitionByRange is
-    unsupported on streaming DataFrames; micro-batch file boundaries
-    already colocate a file's rows).
-
-    *emit_file_rows*: additionally emit ONE row per input file with
-    ``kind='file'``, ``row_idx=-1`` and ``detail='commit|lang|sha256'``
-    (:data:`FILE_ROW_KIND` packing). This lets the graph stages emit the
-    per-file triple bundle (type/containment/lang/commit/sha) from the
-    extraction output instead of RE-SCANNING the source — at 100 TB the
-    second content scan would be the single largest cost in the job. The
-    Arrow transfer grows by one narrow row per file, not per structure."""
+    ``content_sha256`` is computed JVM-side (``F.sha2``) only when the
+    source lacks it, and rides into the UDF as a column; it leaves only on
+    the file rows, which carry the per-file triple bundle (see
+    :func:`unpack_files`), so the graph never re-scans content for it."""
     import pandas as pd
 
     from ..deploy import ensure_py_files
 
     ensure_py_files(source.sparkSession)
-    if carry_sha:
-        arranged = source.withColumn(
+    if "content_sha256" not in source.columns:
+        source = source.withColumn(
             "content_sha256", F.sha2(F.col("content"), 256))
-    else:
-        arranged = source
-    if not (for_streaming or layout == "source"):
-        n = range_partitions or source.sparkSession.sparkContext.defaultParallelism * 2
-        arranged = arranged.repartitionByRange(n, "repo", "path")
-
-    carry = ["repo", "path", "commit", "lang"] + (
-        ["content_sha256"] if carry_sha else [])
-    out_cols = carry + ["kind", "name", "detail", "row_idx"]
+    arranged = source.select(*_CARRY, "content", "content_sha256")
+    if range_partitions is not None:
+        arranged = arranged.repartitionByRange(range_partitions, "repo", "path")
 
     def run(iterator):
         compiled = {
@@ -151,19 +131,6 @@ def extract_structures(source: DataFrame, range_partitions: int | None = None,
         }
         for pdf in iterator:
             outs = []
-            file_rows = None
-            if emit_file_rows and not pdf.empty:
-                import hashlib
-
-                sha = (pdf["content_sha256"] if carry_sha else pdf["content"].map(
-                    lambda c: hashlib.sha256(c.encode("utf-8")).hexdigest()))
-                file_rows = pd.DataFrame(
-                    {c: pdf[c].values for c in carry} | {
-                        "kind": FILE_ROW_KIND,
-                        "name": None,
-                        "detail": (pdf["commit"] + "|" + pdf["lang"] + "|" + sha).values,
-                        "row_idx": -1,
-                    })[out_cols]
             for lang, rules in compiled.items():
                 sub = pdf[pdf["lang"] == lang]
                 if sub.empty:
@@ -177,25 +144,37 @@ def extract_structures(source: DataFrame, range_partitions: int | None = None,
                     src_labels = found.index.get_level_values(0)
                     src = sub.loc[src_labels]
                     frame = pd.DataFrame(
-                        {c: src[c].values for c in carry} | {
+                        {c: src[c].values for c in _CARRY} | {
                             "kind": kind,
                             "name": found["name"].values,
                             "detail": found["detail"].values
                             if "detail" in found else None,
                         })
                     outs.append(frame)
-            if not outs:
-                if file_rows is not None:
-                    yield file_rows
-                else:
-                    yield pd.DataFrame({c: [] for c in out_cols})
-                continue
-            allf = pd.concat(outs, ignore_index=True)
-            # per-file structure numbering — no global window (C16 analog)
-            allf["row_idx"] = allf.groupby(["repo", "path"]).cumcount().astype("int32")
-            if file_rows is not None:
-                allf = pd.concat([allf, file_rows], ignore_index=True)
-            yield allf
+            if outs:
+                allf = pd.concat(outs, ignore_index=True)
+                # per-file structure numbering — no global window (C16 analog)
+                allf["row_idx"] = allf.groupby(
+                    ["repo", "path"]).cumcount().astype("int32")
+                outs = [allf]
+            file_rows = pd.DataFrame(
+                {c: pdf[c].values for c in _CARRY} | {
+                    "kind": FILE_ROW_KIND,
+                    "name": None,
+                    "detail": pdf["content_sha256"].values,
+                    "row_idx": -1,
+                })
+            yield pd.concat(outs + [file_rows], ignore_index=True)[_OUT_COLS]
 
-    return arranged.mapInPandas(
-        run, schema=EXTRACT_SCHEMA if carry_sha else EXTRACT_SCHEMA_NO_SHA)
+    return arranged.mapInPandas(run, schema=EXTRACT_SCHEMA)
+
+
+def unpack_files(extracted: DataFrame) -> DataFrame:
+    """The (repo, path, commit, lang, content_sha256) table of the files
+    an extraction output covers, read from its file rows — the columns
+    :func:`~rdf_tabular_spark.kg.annotate.file_level_triples` and
+    :func:`~rdf_tabular_spark.kg.annotate.repo_triples` need, and the
+    snapshot key :func:`~rdf_tabular_spark.kg.delta.source_diff`
+    compares, without the content."""
+    return extracted.filter(F.col("kind") == FILE_ROW_KIND).select(
+        *_CARRY, F.col("detail").alias("content_sha256"))

@@ -20,7 +20,8 @@ module get one canonical IRI. Pipeline — all set-level, skew-aware:
    per vertex makes a round one edges ⋈ labels join plus one aggregate;
    convergence is checked only every 3rd round and on the last one, where
    a localCheckpoint cuts the plan. canonical = min mention
-7. broadcast remap of the mention IRIs inside the triple stream
+7. canonicalize_mentions: a broadcast alias join rewrites the mention
+   names on the narrow extracted rows, before assembly emits any triple
 """
 
 from __future__ import annotations
@@ -409,28 +410,6 @@ def entity_table(labels: DataFrame) -> DataFrame:
             F.col("aliases"),
         )
     )
-
-
-def remap_triples(triples: DataFrame, labels: DataFrame) -> DataFrame:
-    """Rewrite mention-level module IRIs to canonical IRIs. The mention map
-    is tiny relative to the triple stream -> broadcast hash joins, no
-    shuffle of the triples."""
-    iri_map = labels.filter(F.col("mention") != F.col("canonical")).select(
-        module_iri(F.col("mention")).alias("from_iri"),
-        module_iri(F.col("canonical")).alias("to_iri"),
-    )
-    bmap = F.broadcast(iri_map)
-    out = (
-        triples.join(bmap, triples.subj == bmap.from_iri, "left")
-        .withColumn("subj", F.coalesce(F.col("to_iri"), F.col("subj")))
-        .drop("from_iri", "to_iri")
-    )
-    out = (
-        out.join(bmap, (out.obj == bmap.from_iri) & out.obj_is_iri, "left")
-        .withColumn("obj", F.coalesce(F.col("to_iri"), F.col("obj")))
-        .drop("from_iri", "to_iri")
-    )
-    return out
 
 
 def canonicalize_mentions(extracted: DataFrame, labels: DataFrame) -> DataFrame:

@@ -1,17 +1,26 @@
-"""Stage orchestration: checkpointed, resumable, lineage-tracked (north rule:
-"resumable from checkpoint with per-partition lineage + metrics").
+"""The batch KG job, defined once: source -> extract -> labels ->
+entities -> graph (:func:`_stages`).
 
-Every stage writes its output to ``<checkpoint_dir>/<stage>/`` keyed by a
-config hash; a re-run with the same config **skips** completed stages
-(parquet `_SUCCESS` is the completion marker) and re-reads the checkpoint —
-idempotent because every generated id in the pipeline is deterministic
-(skolem IRIs, content hashes). A ``lineage`` table records per-stage row
-counts, wall time and the stage input's config hash.
+Two ways to run it:
 
-The per-row invariant — ``sha256(content)`` computed at the source scan —
-is carried through extraction and into the ``kg:sha256`` triples;
-:meth:`KGPipeline.verify_invariant` re-derives it from the source and
-checks set equality end-to-end.
+- :class:`KGPipeline` — checkpointed, resumable, lineage-tracked (north
+  rule: "resumable from checkpoint with per-partition lineage +
+  metrics"). Every stage writes its output to
+  ``<checkpoint_dir>/<stage>-<config hash>/``; a re-run with the same
+  config **skips** completed stages (parquet ``_SUCCESS`` is the
+  completion marker) and re-reads the checkpoint — idempotent because
+  every generated id in the pipeline is deterministic (skolem IRIs,
+  content hashes). A ``lineage`` table records per-stage row counts,
+  wall time and the config hash.
+- :func:`build_kg` — the same stages on a DataFrame with no checkpoint
+  dir: only the extraction, which linking and assembly both read, is
+  persisted (DISK_ONLY), so the UDF runs once.
+
+The per-row invariant — ``sha256(content)``, computed JVM-side at the
+source scan — reaches the ``kg:sha256`` triples through the extraction's
+per-file rows (``extract.unpack_files``), so the graph stage never reads
+content; :meth:`KGPipeline.verify_invariant` re-derives it from the
+source and checks set equality end-to-end.
 """
 
 from __future__ import annotations
@@ -22,10 +31,60 @@ import os
 import time
 from dataclasses import asdict, dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import annotate, extract, link, synth
+from .assemble import build_graph
+
+#: layout version of the stage outputs, hashed into every checkpoint path:
+#: a checkpoint dir written under another layout is rebuilt, never resumed
+#: (2: the extract stage holds one ``kind='file'`` row per file and no
+#: per-structure sha)
+CHECKPOINT_FORMAT = 2
+
+
+def _stages(stage, source, extract_stage,
+            jaccard_threshold: float) -> dict[str, DataFrame]:
+    """source -> extract -> labels -> entities -> graph. ``stage(name,
+    build)`` materializes one stage from its zero-argument builder;
+    ``extract_stage(src)`` builds the extraction (file rows included).
+    ``extracted`` in the result is the structure rows only."""
+    src = stage("source", source)
+    extracted_all = stage("extract", lambda: extract_stage(src))
+    extracted = extracted_all.filter(
+        F.col("kind") != extract.FILE_ROW_KIND)
+    mentions = extracted.filter(
+        F.col("kind").isin("import", "dep")).select(
+        F.col("name").alias("mention"))
+    labels = stage(
+        "labels", lambda: link.link_mentions(mentions, jaccard_threshold))
+    entities = stage("entities", lambda: link.entity_table(labels))
+    triples = stage("graph", lambda: build_graph(
+        extract.unpack_files(extracted_all), extracted, labels))
+    return {
+        "source": src,
+        "extracted": extracted,
+        "labels": labels,
+        "entities": entities,
+        "triples": triples,
+    }
+
+
+def build_kg(source: DataFrame,
+             jaccard_threshold: float = 0.55) -> dict[str, DataFrame]:
+    """The KG job over *source* (repo, path, commit, lang, content
+    [, content_sha256]) without checkpoints. The extraction is persisted
+    DISK_ONLY: it serializes once to ``spark.local.dir`` instead of living
+    as columnar blocks in the heap, whose bandwidth is the scaling ceiling
+    of the JVM-side stages. Every other stage stays lazy."""
+    def stage(name: str, build) -> DataFrame:
+        out = build()
+        return out.persist(StorageLevel.DISK_ONLY) if name == "extract" else out
+
+    return _stages(stage, lambda: source, extract.extract_structures,
+                   jaccard_threshold)
 
 
 @dataclass
@@ -39,8 +98,9 @@ class KGConfig:
 
     @property
     def config_hash(self) -> str:
-        return hashlib.sha256(
-            json.dumps(asdict(self), sort_keys=True).encode()).hexdigest()[:12]
+        return hashlib.sha256(json.dumps(
+            {"format": CHECKPOINT_FORMAT, **asdict(self)},
+            sort_keys=True).encode()).hexdigest()[:12]
 
 
 class KGPipeline:
@@ -138,71 +198,35 @@ class KGPipeline:
                 self.config.range_partitions)
         return src.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
-    def run(self) -> dict[str, DataFrame]:
-        src = self._run_stage("source", self.source)
+    def _run(self, extract_stage) -> dict[str, DataFrame]:
+        results = _stages(self._run_stage, self.source, extract_stage,
+                          self.config.jaccard_threshold)
+        self._write_lineage()
+        return results
 
-        extracted = self._run_stage(
-            "extract",
-            lambda: extract.extract_structures(
-                src.drop("content_sha256"), self.config.range_partitions))
-        return self._finish(src, extracted)
+    def run(self) -> dict[str, DataFrame]:
+        return self._run(lambda src: extract.extract_structures(
+            src, self.config.range_partitions))
 
     def run_incremental(self, prev: "KGPipeline") -> dict[str, DataFrame]:
         """Same outputs as :meth:`run`, but extraction touches content only
         for files that differ from *prev*'s completed run (kg/delta.py
         shapes): the snapshot diff compares (repo, path, content_sha256) —
-        prev's source checkpoint already stores the sha, so the OLD
-        content is never re-read — and the new source joins the
+        the old sha comes from the file rows of prev's extract checkpoint,
+        so the OLD content is never re-read — and the new source joins the
         (broadcast) delta key set before the extraction UDF. The merged
         extraction lands in THIS run's ``extract`` checkpoint, so later
         resumes (full or incremental) skip it identically; relinking and
         assembly always run globally over the narrow rows (a new alias
         can re-canonicalize an old mention)."""
-        from . import delta as delta_mod
+        from . import delta
 
-        src = self._run_stage("source", self.source)
-
-        def build_extract() -> DataFrame:
-            prev_src = self.spark.read.parquet(
-                prev._stage_path("source")).select(
-                "repo", "path", "content_sha256")
+        def extract_stage(src: DataFrame) -> DataFrame:
             prev_ext = self.spark.read.parquet(prev._stage_path("extract"))
-            diff = delta_mod.source_diff(prev_src, src)
-            # extract flags must match what run() built prev's checkpoint
-            # with: range layout, sha carried, no file rows
-            return delta_mod.incremental_structures(
-                prev_ext, src.drop("content_sha256"), diff,
-                range_partitions=self.config.range_partitions,
-                layout="range", carry_sha=True, emit_file_rows=False)
+            diff = delta.source_diff(extract.unpack_files(prev_ext), src)
+            return delta.incremental_structures(prev_ext, src, diff)
 
-        extracted = self._run_stage("extract", build_extract)
-        return self._finish(src, extracted)
-
-    def _finish(self, src: DataFrame,
-                extracted: DataFrame) -> dict[str, DataFrame]:
-        mentions = extracted.filter(
-            F.col("kind").isin("import", "dep")).select(
-            F.col("name").alias("mention"))
-        labels = self._run_stage(
-            "labels",
-            lambda: link.link_mentions(
-                mentions, self.config.jaccard_threshold))
-
-        entities = self._run_stage("entities", lambda: link.entity_table(labels))
-
-        from .assemble import build_graph
-
-        final = self._run_stage(
-            "graph", lambda: build_graph(src, extracted, labels))
-
-        self._write_lineage()
-        return {
-            "source": src,
-            "extracted": extracted,
-            "labels": labels,
-            "entities": entities,
-            "triples": final,
-        }
+        return self._run(extract_stage)
 
     # -- invariants -----------------------------------------------------------
     def verify_invariant(self, results: dict[str, DataFrame]) -> bool:

@@ -157,22 +157,3 @@ def validate_shapes(triples: DataFrame, shapes: list[dict]) -> DataFrame:
     if out is None:
         raise ValueError("no shapes given")
     return out.dropDuplicates()
-
-
-def code_shapes(kg: str) -> list[dict]:
-    """The built-in shape set for the annotate.py vocabulary; *kg* is
-    the namespace prefix (annotate.KG)."""
-    xsd = "http://www.w3.org/2001/XMLSchema#"
-    return [
-        {"name": "FileSha", "target_class": kg + "File",
-         "property": kg + "sha256", "min_count": 1, "max_count": 1,
-         "datatype": xsd + "hexBinary"},
-        {"name": "FileRepo", "target_class": kg + "File",
-         "property": kg + "inRepo", "min_count": 1, "max_count": 1,
-         "node_kind": "IRI"},
-        {"name": "ImportsTyped", "target_class": kg + "File",
-         "property": kg + "imports", "class": kg + "Module"},
-        {"name": "ModuleMention", "target_class": kg + "Module",
-         "property": kg + "mention", "min_count": 1,
-         "node_kind": "Literal"},
-    ]

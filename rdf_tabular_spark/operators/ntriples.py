@@ -340,12 +340,6 @@ def nquads_parse_problems(lines: DataFrame,
             .select(c.alias("line")))
 
 
-def read_nquads(spark, path: str) -> DataFrame:
-    """Distributed N-Quads file scan -> quad DataFrame."""
-    return parse_nquads_lines(spark.read.text(path).withColumnRenamed(
-        "value", "line"))
-
-
 def read_ntriples(spark, path: str) -> DataFrame:
     """Distributed N-Triples file scan -> triple DataFrame."""
     return parse_ntriples_lines(spark.read.text(path).withColumnRenamed(

@@ -21,12 +21,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import cache_bounded as _cache
 from .text import normalize_text
-
-# the bounded cache registry moved to rdf_tabular_spark.caching (it is
-# shared by kg/graph and ops/vocab too); re-exported here for back-compat
-from ..caching import cache_bounded as _cache  # noqa: F401
-from ..caching import release_caches  # noqa: F401
 
 
 def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
@@ -41,13 +37,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " ")))
-
-
-def word_shingles(c: Column, k: int = 3) -> Column:
-    """Distinct word-k-gram shingles of the normalized text. Prefer
-    :func:`with_shingles` / :func:`shingles_from_tokens` over a staged
-    token column in anything hot — see the lambda-capture note there."""
-    return shingles_from_tokens(F.split(normalize_text(c), " "), k)
 
 
 def with_shingles(df: DataFrame, text_col: str, k: int,

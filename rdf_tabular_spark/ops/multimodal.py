@@ -24,11 +24,6 @@ import zlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, "
-    "width int, height int, duration_ms int"
-)
-
 FEATURE_DIM = 16
 
 
@@ -488,28 +483,6 @@ def extract_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
             })
 
     return media.mapInPandas(run, schema=schema)
-
-
-def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Resize stub: passes metadata through with the target dims; the
-    payload transform raises in-sandbox (decode_strict) but the plumbing —
-    filter-pushdown on kind, mapInPandas signature — is real."""
-    import pandas as pd
-
-    from ..deploy import ensure_py_files
-
-    ensure_py_files(media.sparkSession)
-
-    def run(iterator):
-        for pdf in iterator:
-            out = pdf.copy()
-            out["width"] = width
-            out["height"] = height
-            # real path: out["payload"] = [decode_strict("image", p).resize(...) ...]
-            yield out
-
-    images = media.filter(F.col("kind") == "image")
-    return images.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:

@@ -290,7 +290,7 @@ def negative_samples(emb: DataFrame, k: int = 4,
     dense id to attach the negative's payload. N is a driver scalar
     (one count) — at 10^12 rows prefer reading it from table metadata.
     """
-    from .dedup import _cache
+    from ..caching import cache_bounded as _cache
     from ..ops.split import hash_bucket
 
     n = emb.count()

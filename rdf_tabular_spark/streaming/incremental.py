@@ -41,10 +41,11 @@ def incremental_triples(src_stream: DataFrame) -> DataFrame:
     triples; entity linking stays a periodic batch job over the sink —
     linking needs the global mention vocabulary, which a stream by
     definition hasn't seen yet)."""
+    # the file bundle comes from the source columns: reading it from the
+    # extraction's file rows would run the UDF twice per micro-batch
     with_sha = src_stream.withColumn(
         "content_sha256", F.sha2(F.col("content"), 256))
-    extracted = extract.extract_structures(
-        src_stream, for_streaming=True)
+    extracted = extract.extract_structures(with_sha)
     return (
         annotate.file_level_triples(with_sha)
         .unionByName(annotate.edge_triples(extracted))

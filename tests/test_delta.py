@@ -45,13 +45,11 @@ def _v2(spark):
 
 
 def _full_graph(src):
-    structs = extract.extract_structures(
-        src, layout="source", carry_sha=False, emit_file_rows=True)
+    structs = extract.extract_structures(src)
     mentions = structs.filter(F.col("kind").isin("import", "dep")).select(
         F.col("name").alias("mention"))
     labels = link.link_mentions(mentions)
-    file_rows = structs.filter(F.col("kind") == extract.FILE_ROW_KIND)
-    return build_graph(None, structs, labels, file_rows=file_rows)
+    return build_graph(extract.unpack_files(structs), structs, labels)
 
 
 def test_source_diff(spark):
@@ -65,8 +63,7 @@ def test_source_diff(spark):
 
 def test_incremental_equals_full_recompute(spark):
     v1, v2 = _v1(spark), _v2(spark)
-    prev_structs = extract.extract_structures(
-        v1, layout="source", carry_sha=False, emit_file_rows=True)
+    prev_structs = extract.extract_structures(v1)
     _, _, inc_triples = delta.incremental_graph(prev_structs, v2)
     full_triples = _full_graph(v2)
     assert inc_triples.exceptAll(full_triples).isEmpty()
@@ -113,7 +110,6 @@ def test_pipeline_run_incremental(spark, tmp_path):
 def test_noop_delta_is_empty_and_stable(spark):
     v1 = _v1(spark)
     assert delta.source_diff(v1, _v1(spark)).isEmpty()
-    prev_structs = extract.extract_structures(
-        v1, layout="source", carry_sha=False, emit_file_rows=True)
+    prev_structs = extract.extract_structures(v1)
     _, _, inc_triples = delta.incremental_graph(prev_structs, _v1(spark))
     assert inc_triples.exceptAll(_full_graph(v1)).isEmpty()

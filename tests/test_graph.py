@@ -277,7 +277,7 @@ def test_clustering_oriented_equals_plain(spark):
     table = src.synth_source_table(spark, 300)
     from rdf_tabular_spark.kg import annotate, extract
     from pyspark.sql import functions as F
-    ext = extract.extract_structures(table, layout="source", carry_sha=False)
+    ext = extract.extract_structures(table)
     triples = annotate.structure_triples(ext)
     a = sorted(map(tuple, graph.clustering_coefficient(
         triples, orient=True).collect()))

@@ -14,10 +14,12 @@ def _src(spark, rows):
 
 
 def _extract(spark, rows):
+    from pyspark.sql import functions as F
+
     from rdf_tabular_spark.kg import extract
 
-    out = extract.extract_structures(
-        _src(spark, rows), layout="source", carry_sha=False)
+    out = extract.extract_structures(_src(spark, rows)).filter(
+        F.col("kind") != extract.FILE_ROW_KIND)
     return sorted(
         (r["kind"], r["name"], r["detail"], r["row_idx"])
         for r in out.collect())
@@ -128,17 +130,16 @@ def test_polyglot_through_full_pipeline(spark):
     """The new langs flow through annotate → link → assemble with the
     existing kind vocabulary (no special-casing downstream)."""
     from rdf_tabular_spark.kg import synth
+    from rdf_tabular_spark.kg.pipeline import build_kg
     from pyspark.sql import functions as F
-    import __spark_entry__ as E
 
     rows = []
     for i in range(8):
         lang = synth.POLY_LANGS[i % len(synth.POLY_LANGS)]
         rows.append({"repo": f"r{i % 2}", "path": f"f{i}.{lang}",
                      "lang": lang, "content": synth.make_content(i, lang)})
-    src = _src(spark, rows).withColumn(
-        "content_sha256", F.sha2(F.col("content"), 256))
-    _, entities, triples = E._kg_pipeline(src)
+    res = build_kg(_src(spark, rows))
+    entities, triples = res["entities"], res["triples"]
     n = triples.count()
     assert n > 8  # per-file bundles + edges
     # every file node got its sha triple

@@ -110,13 +110,9 @@ def test_incremental_kg_from_snapshot_diff(spark, tmp_path):
     t.commit(v1, mode="overwrite")
     t.commit(v2, mode="overwrite")
 
-    prev = extract.extract_structures(
-        t.read(spark, 1), layout="source", carry_sha=False,
-        emit_file_rows=True)
+    prev = extract.extract_structures(t.read(spark, 1))
     _, _, inc = delta.incremental_graph(prev, t.read(spark, 2))
-    full_prev = extract.extract_structures(
-        t.read(spark, 2), layout="source", carry_sha=False,
-        emit_file_rows=True)
+    full_prev = extract.extract_structures(t.read(spark, 2))
     _, _, full = delta.incremental_graph(full_prev, t.read(spark, 2))
     assert _rows(inc) == _rows(full)
 

@@ -48,8 +48,7 @@ def probe_link(spark, n_files: int) -> int:
     from rdf_tabular_spark.kg import extract, link
 
     src = spark.read.parquet(bench.ensure_kg_source(spark, n_files))
-    ext = extract.extract_structures(
-        src, layout="source", carry_sha=False)
+    ext = extract.extract_structures(src)
     mentions = ext.filter(F.col("kind").isin("import", "dep")).select(
         F.col("name").alias("mention"))
     return link.link_mentions(mentions, 0.55).count()
@@ -60,8 +59,7 @@ def probe_extract(spark, n_files: int) -> int:
     from rdf_tabular_spark.kg import extract
 
     src = spark.read.parquet(bench.ensure_kg_source(spark, n_files))
-    return extract.extract_structures(
-        src, layout="source", carry_sha=False).count()
+    return extract.extract_structures(src).count()
 
 
 PROBES = {"host": probe_host, "link": probe_link,

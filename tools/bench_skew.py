@@ -54,7 +54,10 @@ def jobs(spark, src_path: str) -> dict[str, float]:
     from rdf_tabular_spark.ops.vocab import vocab_counts
 
     src = spark.read.parquet(src_path)
-    extracted = extract_structures(src)
+    # range layout, as the round-3 numbers were taken: the monorepo's
+    # files land in contiguous partitions
+    extracted = extract_structures(
+        src, spark.sparkContext.defaultParallelism * 2)
     extracted.write.mode("overwrite").parquet(src_path + ".extracted")
     extracted = spark.read.parquet(src_path + ".extracted")
     edges = edge_triples(extracted)

@@ -17,9 +17,10 @@ Local smoke:
         tools/submit_kg_job.py --n-files 2000 --output /tmp/kg_out
 
 Reads the source table of input_hint shape (repo, path, commit, lang,
-content), runs extract -> annotate -> entity-link -> canonical dedup with
-per-stage checkpoints and lineage when --checkpoint-dir is given, writes
-the triple + entity tables, and prints a one-line JSON report.
+content), runs the batch KG job of rdf_tabular_spark/kg/pipeline.py
+(extract -> link -> entities -> graph) — with per-stage checkpoints and
+lineage when --checkpoint-dir is given — writes the triple + entity
+tables, and prints a one-line JSON report.
 """
 
 from __future__ import annotations
@@ -66,27 +67,14 @@ def main() -> None:
             jaccard_threshold=args.jaccard_threshold,
         )
         results = KGPipeline(spark, cfg).run()
-        triples, entities = results["triples"], results["entities"]
     else:
-        from pyspark.sql import functions as F
-
-        from rdf_tabular_spark.kg import annotate, extract, link, synth
-        from rdf_tabular_spark.operators.dedup import dedupe_triples
-        from rdf_tabular_spark import TRIPLE_COLUMNS
+        from rdf_tabular_spark.kg import synth
+        from rdf_tabular_spark.kg.pipeline import build_kg
 
         src = (spark.read.parquet(args.source) if args.source
                else synth.synth_source_table(spark, args.n_files))
-        src = src.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-        extracted = extract.extract_structures(src.drop("content_sha256")).persist()
-        raw = annotate.file_level_triples(src).unionByName(
-            annotate.structure_triples(extracted))
-        mentions = extracted.filter(F.col("kind").isin("import", "dep")) \
-            .select(F.col("name").alias("mention"))
-        labels = link.connected_components(
-            mentions, link.candidate_pairs(mentions, args.jaccard_threshold))
-        entities = link.entity_table(labels)
-        triples = dedupe_triples(
-            link.remap_triples(raw, labels)).select(*TRIPLE_COLUMNS)
+        results = build_kg(src, args.jaccard_threshold)
+    triples, entities = results["triples"], results["entities"]
 
     from rdf_tabular_spark.kg.materialize import (
         graph_json_lines,
