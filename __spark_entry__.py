@@ -5066,15 +5066,22 @@ def _drained_stream_sink(spark: SparkSession, sf_dir: str, kind: str,
     checkpoint — accumulated unbounded temp data, and a failed
     awaitTermination orphaned the checkpoint). A failed drain now
     removes its .tmp work dir before raising; the committed dir is
-    bounded at one per (kind, source-content) pair."""
+    bounded at one per (kind, source-content, code) triple: the key also
+    hashes streaming/incremental.py's source, so a sink drained by other
+    code is never served for this code's output."""
+    import hashlib
     import os
     import shutil
     import tempfile
 
+    from rdf_tabular_spark.streaming import incremental
+
     src = _event_stream_dir(sf_dir)
     key = _staging_key(f"{sf_dir}/events.parquet")
+    with open(incremental.__file__, "rb") as f:
+        code = hashlib.sha256(f.read()).hexdigest()[:12]
     work = os.path.join(
-        tempfile.gettempdir(), f"rdf_tabular_spark_{kind}_sink_{key}")
+        tempfile.gettempdir(), f"rdf_tabular_spark_{kind}_sink_{key}_{code}")
     marker = os.path.join(work, "_DRAINED")
     if os.path.exists(marker):
         return spark.read.parquet(os.path.join(work, "sink"))

@@ -1,4 +1,7 @@
-"""Graph analytics over the assembled triple table: degrees + PageRank.
+"""Graph analytics over the assembled triple table: degrees, centrality
+(PageRank, HITS, betweenness), reachability and shortest paths,
+communities (components, label propagation, modularity, Louvain),
+cohesive cores (k-core, k-truss, triangles) and link prediction.
 
 The reference's product is a static triple set; these rollups answer the
 questions a KG consumer asks next ("which modules is everything pulling
@@ -11,15 +14,17 @@ Scale design (10^12-file graph):
   IsIn over a low-cardinality column.
 - ``degrees`` is two partial+final hash aggregations and one
   shuffle-on-node full-outer merge — no windows, no sorts.
+- Every iterative algorithm runs its rounds through
+  :func:`rdf_tabular_spark.caching.iterate`, which cuts the plan
+  (localCheckpoint of the round's state), runs the convergence probe
+  and releases the loop's frames and loop-invariant bases on every
+  exit. The functions here only say what one round computes and what
+  the loop reads unchanged (an edge layout, an adjacency).
 - ``pagerank`` keeps the edge list partitioned on ``src`` once
   (``repartition(src)`` + localCheckpoint) so every iteration's
   contributions join reuses the same layout; per-iteration state is the
-  narrow (node, rank) table. The node and edge bases are localCheckpoint-
-  ed once, which flattens the upstream plan the loop re-references; each
-  iteration's ranks are persisted and the previous ones unpersisted, so
-  the loop itself runs at the AQE-coalesced partition count. Dangling
-  mass is dropped, matching the classic formulation
-  rank = (1-d)/N + d * sum(in_contrib); that keeps
+  narrow (node, rank) table. Dangling mass is dropped, matching the
+  classic formulation rank = (1-d)/N + d * sum(in_contrib); that keeps
   each iteration a single agg + left join, with no global re-sum of
   dangling nodes (at 10^12 nodes an extra global scalar per iteration
   is a driver barrier we don't need for link-analysis ranking).
@@ -30,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import caching
 from .annotate import KG
 
 #: predicates that constitute the dependency graph's edges
@@ -73,6 +79,46 @@ def edge_list(triples: DataFrame,
     )
 
 
+def _nodes(edges: DataFrame, name: str = "node") -> DataFrame:
+    """The distinct endpoints of a ``(src, dst)`` edge list, as *name*."""
+    return (edges.select(F.col("src").alias(name))
+            .union(edges.select(F.col("dst").alias(name)))
+            .distinct())
+
+
+def _undirected(edges: DataFrame, self_loops: bool) -> DataFrame:
+    """Both directions of every edge as distinct ``(src, dst)`` string
+    pairs; self-loops kept only with *self_loops*."""
+    s, d = F.col("src").cast("string"), F.col("dst").cast("string")
+    both = edges.select(s.alias("src"), d.alias("dst")).unionByName(
+        edges.select(d.alias("src"), s.alias("dst")))
+    if not self_loops:
+        both = both.filter(F.col("src") != F.col("dst"))
+    return both.distinct()
+
+
+def _simple_pairs(edges: DataFrame) -> DataFrame:
+    """The undirected simple graph: one ``(a, b)`` string row per edge
+    with ``a < b``; duplicates and self-loops drop."""
+    s, d = F.col("src").cast("string"), F.col("dst").cast("string")
+    return (edges.select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct())
+
+
+def _weighted_pairs(edges: DataFrame, weight_col: str | None) -> DataFrame:
+    """``(a, b, w)`` with ``a <= b``: with *weight_col* None the simple
+    graph at weight 1 (self-loops drop: meaningless in simple-graph
+    semantics); otherwise the weights summed per unordered pair,
+    self-loops kept (graph contraction produces them)."""
+    if weight_col is None:
+        return _simple_pairs(edges).withColumn("w", F.lit(1).cast("long"))
+    s, d = F.col("src").cast("string"), F.col("dst").cast("string")
+    return (edges.select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"),
+                         F.col(weight_col).cast("long").alias("w"))
+            .groupBy("a", "b").agg(F.sum("w").alias("w")))
+
+
 def degrees(triples: DataFrame,
             predicates: tuple[str, ...] = EDGE_PREDICATES) -> DataFrame:
     """Per-node out/in degree over the dependency edges.
@@ -106,21 +152,21 @@ def components(triples: DataFrame, max_iter: int = 10,
     linker's clustering core) over the undirected dependency edge list.
     Early convergence exit is safe for oracle comparison: once converged,
     further steps are identity, so a fixed-step SQL twin that runs all
-    ``max_iter`` steps lands on the same labels. Bases are
-    localCheckpoint-ed first — same driver-side plan-text blowup as
-    pagerank otherwise (each propagation step re-references them).
+    ``max_iter`` steps lands on the same labels. The edge list is
+    localCheckpoint-ed first, so the propagation rounds read the
+    upstream plan once instead of carrying it, and released once the
+    labels are cut.
     """
     from .link import connected_components
 
     edges = edge_list(triples, predicates).localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("mention"))
-        .union(edges.select(F.col("dst").alias("mention")))
-        .distinct()
-        .localCheckpoint()
-    )
     pairs = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    labels = connected_components(nodes, pairs, max_iter=max_iter)
+    labels = None
+    try:
+        labels = connected_components(_nodes(edges, "mention"), pairs,
+                                      max_iter=max_iter)
+    finally:
+        caching.release_unread([edges], labels)
     return labels.select(F.col("mention").alias("node"),
                          F.col("canonical").alias("component"))
 
@@ -254,28 +300,16 @@ def pagerank_edges(edges: DataFrame, damping: float = 0.85,
     entry point for DICTIONARY-ENCODED graphs (kg/termdict.py), where
     nodes are int64 term ids and the iteration's shuffles move 8-byte
     keys instead of IRI strings. Node column type follows the input."""
-    # localCheckpoint (eager), NOT persist: the iteration loop re-references
-    # these bases 8+ times, and a persisted DataFrame still carries its full
-    # logical plan — over an upstream as deep as the KG pipeline the
-    # combined plan TEXT grows multiplicatively per iteration and OOMs the
-    # driver while Spark renders the explain string. Checkpointing flattens
-    # them to a LogicalRDD so every iteration's plan is constant-size.
-    # (On a real cluster prefer reliable .checkpoint() to a checkpoint dir —
-    # localCheckpoint blocks die with their executor.)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    # localCheckpoint (eager), NOT persist: every round re-references
+    # these bases, and a persisted DataFrame still carries its full
+    # logical plan — over an upstream as deep as the KG pipeline each
+    # round would re-render it. Checkpointing flattens them to a
+    # LogicalRDD. (On a real cluster prefer reliable .checkpoint() to a
+    # checkpoint dir — localCheckpoint blocks die with their executor.)
+    nodes = _nodes(edges).localCheckpoint()
     n_nodes = nodes.count()
     if n_nodes == 0:
-        from pyspark.sql.types import StructField, StructType, DoubleType
-
-        return edges.sparkSession.createDataFrame(
-            [], StructType([
-                StructField("node", edges.schema["src"].dataType),
-                StructField("rank", DoubleType())]))
+        return nodes.withColumn("rank", F.lit(0.0))
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out_degree"))
     # weight each edge once, up front: contribution factor = d / out_deg(src).
     # partitioned on src so every iteration's ranks join lands on the same
@@ -299,30 +333,19 @@ def pagerank_edges(edges: DataFrame, damping: float = 0.85,
             .otherwise(F.lit(0.0))
         init_col = F.when(F.col("node").isin(seeds),
                           F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
-    ranks = nodes.select("node", init_col.alias("rank")).persist()
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         contribs = (
             weighted.join(ranks, weighted.src == ranks.node)
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
         )
-        new_ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .select(
-                "node",
-                (base_col + F.coalesce("contrib", F.lit(0.0))).alias("rank"),
-            )
-            .persist()
-        )
-        new_ranks.count()  # materialize before dropping the parent cache
-        ranks.unpersist()
-        ranks = new_ranks
-    # the final iteration's ranks stay persisted for the caller; register
-    # them with the bounded cache registry so repeated invocations in a
-    # long-lived session can't accumulate cached blocks (ADVICE r1)
-    from ..caching import cache_bounded as _cache
+        return nodes.join(contribs, nodes.node == contribs.dst, "left").select(
+            "node", (base_col + F.coalesce("contrib", F.lit(0.0))).alias("rank"))
 
-    return _cache(ranks)
+    ranks, _ = caching.iterate(nodes.select("node", init_col.alias("rank")),
+                               step, iterations, bases=(nodes, weighted))
+    return ranks
 
 
 def hits(triples: DataFrame, iterations: int = 3,
@@ -342,66 +365,42 @@ def hits(triples: DataFrame, iterations: int = 3,
     scalar division. Raises if any pre-normalization score leaves the
     exact-integer range (deepen with care: scores grow ~deg^(2T)).
 
-    Scale shape: per round two shuffle joins + two map-side-combined
-    aggs over the EDGE list (same as pagerank's one); the edge base is
-    localCheckpoint-ed once and reused; per-round persist/unpersist
-    keeps the plan flat. The final normalization is one scalar agg.
+    Scale shape: the state is one (node, hub, auth) table; a round is
+    two driver rounds, the auth half then the hub half, each one
+    shuffle join + one map-side-combined agg over the EDGE list (the
+    checkpointed base) + one left join onto the state, so auth is
+    computed once per round. The final normalization is one scalar agg.
     """
-    edges = edge_list(triples, predicates).localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
     if iterations < 1:
         raise ValueError("hits needs at least one iteration")
-    if nodes.isEmpty():
-        return triples.sparkSession.createDataFrame(
-            [], "node string, hub double, auth double")
-    hub = nodes.select("node", F.lit(1.0).alias("hub")).persist()
-    auth = None
-    for _ in range(iterations):
-        new_auth = (
-            nodes.join(
-                edges.join(hub, edges.src == hub.node)
-                .groupBy("dst").agg(F.sum("hub").alias("s")),
-                nodes.node == F.col("dst"), "left")
-            .select("node", F.coalesce("s", F.lit(0.0)).alias("auth"))
-            .persist()
-        )
-        new_auth.count()
-        new_hub = (
-            nodes.join(
-                edges.join(new_auth, edges.dst == new_auth.node)
-                .groupBy("src").agg(F.sum("auth").alias("s")),
-                nodes.node == F.col("src"), "left")
-            .select("node", F.coalesce("s", F.lit(0.0)).alias("hub"))
-            .persist()
-        )
-        new_hub.count()
-        hub.unpersist()
-        if auth is not None:
-            auth.unpersist()
-        hub, auth = new_hub, new_auth
-    scores = hub.join(auth, "node").localCheckpoint()
+    edges = edge_list(triples, predicates).localCheckpoint()
+
+    def half(s: DataFrame, i: int) -> DataFrame:
+        # odd driver rounds push hub along edges into auth, even ones
+        # pull the new auth back into hub
+        src, dst, old, new = (("src", "dst", "hub", "auth") if i % 2
+                              else ("dst", "src", "auth", "hub"))
+        sums = (edges.join(s, edges[src] == s.node)
+                .groupBy(dst).agg(F.sum(old).alias("_s")))
+        return s.join(sums, s.node == sums[dst], "left").select(
+            "node", old, F.coalesce("_s", F.lit(0.0)).alias(new))
+
+    start = _nodes(edges).select("node", F.lit(1.0).alias("hub"),
+                                 F.lit(0.0).alias("auth"))
+    scores, _ = caching.iterate(start, half, 2 * iterations, bases=(edges,))
     sums = scores.agg(
         F.sum("hub").alias("hs"), F.sum("auth").alias("as_"),
         F.max(F.greatest("hub", "auth")).alias("mx")).collect()[0]
     if sums.mx is not None and sums.mx >= 2.0 ** 53:
+        caching.release(scores)
         raise ValueError(
             f"HITS scores left the exact-integer double range ({sums.mx!r});"
             " reduce iterations")
     hs = sums.hs or 1.0
     austotal = sums.as_ or 1.0
-    hub.unpersist()
-    auth.unpersist()
-    out = scores.select(
+    return scores.select(
         "node", (F.col("hub") / F.lit(hs)).alias("hub"),
         (F.col("auth") / F.lit(austotal)).alias("auth"))
-    from ..caching import cache_bounded as _cache
-
-    return _cache(out.persist())
 
 
 def reachability(edges: DataFrame, max_hops: int = 6) -> DataFrame:
@@ -420,46 +419,33 @@ def reachability(edges: DataFrame, max_hops: int = 6) -> DataFrame:
     a revisited node produces only already-seen pairs, which the
     anti-join removes, emptying the frontier.
 
-    Scale shape: state is two narrow (src, dst[, hops]) tables; each
-    round is one shuffle join on ``dst``/``src`` plus one anti-join on
-    the pair key. No windows, no global sorts, lineage truncated per
-    round via persist + early-exit when the frontier drains. At 10^12
-    edges the closure itself can be large — callers bound it with
-    *max_hops* (and should pre-filter ``edges`` to the predicate of
-    interest; see edge_list).
+    Scale shape: the state is the narrow (src, dst, hops) result, whose
+    frontier is its ``hops == h - 1`` slice; each round is one shuffle
+    join on ``dst``/``src`` plus one anti-join on the pair key, and the
+    loop driver cuts the plan every round and stops early when a round
+    adds nothing. No windows, no global sorts. At 10^12 edges the
+    closure itself can be large — callers bound it with *max_hops* (and
+    should pre-filter ``edges`` to the predicate of interest; see
+    edge_list).
     """
-    from ..caching import cache_bounded as _cache
-
     base = edges.select("src", "dst").distinct().persist()
-    result = base.withColumn("hops", F.lit(1)).persist()
-    frontier = result
-    for h in range(2, max_hops + 1):
+
+    def step(result: DataFrame, i: int) -> DataFrame:
         grown = (
-            frontier.alias("f")
+            result.filter(F.col("hops") == i).alias("f")
             .join(base.alias("e"), F.col("f.dst") == F.col("e.src"))
             .select(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
             .distinct()
             .join(result.select("src", "dst"), ["src", "dst"], "left_anti")
-            .withColumn("hops", F.lit(h))
-            .persist()
+            .withColumn("hops", F.lit(i + 1))
         )
-        if grown.isEmpty():
-            grown.unpersist()
-            if frontier is not result:
-                frontier.unpersist()
-            break
-        new_result = result.union(grown).persist()
-        new_result.count()  # materialize before dropping parents
-        result.unpersist()
-        if frontier is not result:
-            frontier.unpersist()
-        result, frontier = new_result, grown
-    else:
-        # natural exit at max_hops: the last frontier is a separate cache
-        if frontier is not result:
-            frontier.unpersist()
-    base.unpersist()
-    return _cache(result)
+        return result.unionByName(grown)
+
+    result, _ = caching.iterate(
+        base.withColumn("hops", F.lit(1)), step, max_hops - 1,
+        until=lambda r, i: r.filter(F.col("hops") == i + 1).isEmpty(),
+        bases=(base,))
+    return result
 
 
 def sssp_hops(edges: DataFrame, source: str,
@@ -478,34 +464,28 @@ def sssp_hops(edges: DataFrame, source: str,
     Early exit when the frontier drains (cycles terminate for free: a
     revisited node is dropped by the anti-join). Node ids compare as
     strings (type-agnostic, same convention as ops/dedup.dedup_clusters).
-
-    Each round's frontier is ``localCheckpoint``-ed (kcore's pattern, not
-    reachability's persist): at 20 rounds the anti-join re-references the
-    whole visited union every round, and without a plan cut the logical
-    plan grows superlinearly — deep-graph runs OOMed the DRIVER building
-    plan strings before any executor did real work. After the cut,
-    ``visited`` is a flat union of materialized leaves."""
-    spark = edges.sparkSession
+    The visited set is the loop state, cut every round by the driver."""
     base = edges.select(
         F.col("src").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst")).distinct().persist()
-    visited = spark.createDataFrame(
-        [(source, 0)], "node string, hops int").localCheckpoint()
-    frontier = visited
-    for h in range(1, max_hops + 1):
+
+    def step(visited: DataFrame, i: int) -> DataFrame:
+        frontier = visited.filter(F.col("hops") == i - 1)
         grown = (
             frontier.join(base, frontier["node"] == base["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), ["node"], "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint()  # eager: materializes + cuts the plan
+            .withColumn("hops", F.lit(i))
         )
-        if grown.isEmpty():
-            break
-        visited = visited.union(grown)
-        frontier = grown
-    base.unpersist()
+        return visited.unionByName(grown)
+
+    start = edges.sparkSession.createDataFrame([(source, 0)],
+                                               "node string, hops int")
+    visited, _ = caching.iterate(
+        start, step, max_hops,
+        until=lambda v, i: v.filter(F.col("hops") == i).isEmpty(),
+        bases=(base,))
     return visited
 
 
@@ -527,33 +507,26 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     against the undirected adjacency, one (node, label) count aggregation
     (map-side combined), one arg-min-by-(-count, label) struct
     aggregation — no windows over unbounded groups, no global sorts.
-    Per-round localCheckpoint cuts the plan chain. Hot nodes (a label
-    counted across 10^6 neighbors) partial-aggregate before the shuffle."""
-    und = (
-        edges.select(F.col("src").cast("string").alias("x"),
-                     F.col("dst").cast("string").alias("y"))
-        .unionByName(edges.select(
-            F.col("dst").cast("string").alias("x"),
-            F.col("src").cast("string").alias("y")))
-        .distinct()
-        .persist()
-    )
-    labels = und.select(F.col("x").alias("node")).distinct() \
-        .withColumn("label", F.col("node")).localCheckpoint()
-    for _ in range(iterations):
-        neigh = und.join(labels, und["y"] == labels["node"]).select(
-            F.col("x").alias("node"), "label")
-        counts = neigh.groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("cnt"))
+    Hot nodes (a label counted across 10^6 neighbors) partial-aggregate
+    before the shuffle."""
+    und = _undirected(edges, self_loops=True).persist()
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        counts = (
+            und.join(labels, und["dst"] == labels["node"])
+            .groupBy(F.col("src").alias("node"), "label")
+            .agg(F.count(F.lit(1)).alias("cnt")))
         # arg-min over (-cnt, label): max count, then smallest label
-        labels = (
+        return (
             counts.groupBy("node")
             .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
                                 F.col("label").alias("l"))).alias("b"))
             .select("node", F.col("b.l").alias("label"))
-            .localCheckpoint()
         )
-    und.unpersist()
+
+    start = (und.select(F.col("src").alias("node")).distinct()
+             .withColumn("label", F.col("node")))
+    labels, _ = caching.iterate(start, step, iterations, bases=(und,))
     return labels
 
 
@@ -641,6 +614,13 @@ def coimport_triangles(triples: DataFrame, min_files: int = 2,
     )
 
 
+def _pair_degrees(pairs: DataFrame) -> DataFrame:
+    """(node, degree) over an undirected ``(mod_a, mod_b)`` pair list."""
+    return (pairs.select(F.col("mod_a").alias("node"))
+            .unionByName(pairs.select(F.col("mod_b").alias("node")))
+            .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
+
+
 def clustering_coefficient(triples: DataFrame, min_files: int = 2,
                            predicates: tuple[str, ...] = MODULE_PREDICATES,
                            orient: bool = True) -> DataFrame:
@@ -666,10 +646,7 @@ def clustering_coefficient(triples: DataFrame, min_files: int = 2,
             .select(F.col("p1.mod_a").alias("a"),
                     F.col("p1.mod_b").alias("b"),
                     F.col("p2.mod_b").alias("c")))
-    deg = (
-        pairs.select(F.col("mod_a").alias("node"))
-        .unionByName(pairs.select(F.col("mod_b").alias("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
+    deg = _pair_degrees(pairs)
     tcnt = (
         tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node").agg(F.count(F.lit(1)).alias("triangles")))
@@ -699,37 +676,34 @@ def kcore(triples: DataFrame, k: int = 2, min_files: int = 2,
     map-side-combined degree agg); rounds are bounded by the peel depth
     (degeneracy ordering length), with a driver isEmpty probe per round
     — the same bounded-probe shape as components/reachability. Output:
-    (node, core_degree) for every k-core member."""
+    (node, core_degree) for every k-core member; warns when *max_iter*
+    rounds end before the fixpoint."""
     _, pairs = coimport_pairs(triples, min_files, predicates)
-    edges = pairs.select("mod_a", "mod_b")
-    for _ in range(max_iter):
-        deg = (
-            edges.select(F.col("mod_a").alias("node"))
-            .unionByName(edges.select(F.col("mod_b").alias("node")))
-            .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
-        low = deg.filter(F.col("degree") < k).select("node")
-        if low.isEmpty():
-            return deg.select("node", F.col("degree").alias("core_degree"))
-        edges = (
-            edges.join(low.withColumnRenamed("node", "mod_a"),
-                       "mod_a", "left_anti")
-            .join(low.withColumnRenamed("node", "mod_b"),
-                  "mod_b", "left_anti")
-            .localCheckpoint())  # cut the per-round plan growth
-    # ran out of rounds: the edge set is NOT a fixpoint — the degree>=k
-    # filter below is an upper bound on the true k-core, so say so
-    # loudly instead of silently returning it
-    import warnings
 
-    warnings.warn(
-        f"kcore: peel did not converge within max_iter={max_iter} "
-        f"rounds; result is a non-fixpoint superset of the true "
-        f"{k}-core — raise max_iter")
-    deg = (
-        edges.select(F.col("mod_a").alias("node"))
-        .unionByName(edges.select(F.col("mod_b").alias("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
-    return deg.filter(F.col("degree") >= k).select(
+    def low(edges: DataFrame) -> DataFrame:
+        return _pair_degrees(edges).filter(F.col("degree") < k).select("node")
+
+    def peel(edges: DataFrame, _: int) -> DataFrame:
+        drop = low(edges)
+        return (edges.join(drop.withColumnRenamed("node", "mod_a"),
+                           "mod_a", "left_anti")
+                .join(drop.withColumnRenamed("node", "mod_b"),
+                      "mod_b", "left_anti"))
+
+    edges, converged = caching.iterate(
+        pairs.select("mod_a", "mod_b"), peel, max_iter,
+        until=lambda e, _: low(e).isEmpty())
+    if not converged:
+        # the edge set is NOT a fixpoint — the degree>=k filter below is
+        # an upper bound on the true k-core, so say so loudly instead of
+        # silently returning it
+        import warnings
+
+        warnings.warn(
+            f"kcore: peel did not converge within max_iter={max_iter} "
+            f"rounds; result is a non-fixpoint superset of the true "
+            f"{k}-core — raise max_iter")
+    return _pair_degrees(edges).filter(F.col("degree") >= k).select(
         "node", F.col("degree").alias("core_degree"))
 
 
@@ -754,9 +728,8 @@ def ktruss(triples: DataFrame, k: int = 3, min_files: int = 2,
     (support counted IN the truss). Warns loudly on non-convergence,
     like kcore."""
     _, pairs = coimport_pairs(triples, min_files, predicates)
-    edges = pairs.select("mod_a", "mod_b")
-    sup = None
-    for _ in range(max_iter):
+
+    def support(edges: DataFrame) -> DataFrame:
         tri = _oriented_triangles(edges)
         sup = (
             tri.select(F.col("a").alias("mod_a"), F.col("b").alias("mod_b"))
@@ -765,21 +738,25 @@ def ktruss(triples: DataFrame, k: int = 3, min_files: int = 2,
             .unionByName(tri.select(F.col("b").alias("mod_a"),
                                     F.col("c").alias("mod_b")))
             .groupBy("mod_a", "mod_b").agg(F.count("*").alias("support")))
-        scored = edges.join(sup, ["mod_a", "mod_b"], "left") \
-            .select("mod_a", "mod_b",
-                    F.coalesce("support", F.lit(0)).alias("support"))
-        low = scored.filter(F.col("support") < k - 2)
-        if low.isEmpty():
-            return scored
-        edges = (scored.filter(F.col("support") >= k - 2)
-                 .select("mod_a", "mod_b").localCheckpoint())
-    import warnings
+        return edges.join(sup, ["mod_a", "mod_b"], "left").select(
+            "mod_a", "mod_b", F.coalesce("support", F.lit(0)).alias("support"))
 
-    warnings.warn(
-        f"ktruss: peel did not converge within max_iter={max_iter} "
-        f"rounds; result is a non-fixpoint superset of the true "
-        f"{k}-truss — raise max_iter")
-    return scored.filter(F.col("support") >= k - 2)
+    def peel(edges: DataFrame, _: int) -> DataFrame:
+        return (support(edges).filter(F.col("support") >= k - 2)
+                .select("mod_a", "mod_b"))
+
+    edges, converged = caching.iterate(
+        pairs.select("mod_a", "mod_b"), peel, max_iter,
+        until=lambda e, _: support(e).filter(F.col("support") < k - 2)
+        .isEmpty())
+    if not converged:
+        import warnings
+
+        warnings.warn(
+            f"ktruss: peel did not converge within max_iter={max_iter} "
+            f"rounds; result is a non-fixpoint superset of the true "
+            f"{k}-truss — raise max_iter")
+    return support(edges).filter(F.col("support") >= k - 2)
 
 
 def betweenness(edges: DataFrame, k_sources: int = 8, max_hops: int = 4,
@@ -807,24 +784,16 @@ def betweenness(edges: DataFrame, k_sources: int = 8, max_hops: int = 4,
     undirected double-count) for the normalized estimate.
 
     Scale shape: all pivots advance TOGETHER in one (root, node, dist,
-    σ) state table — each BFS round is one equi-join of the frontier
-    against the undirected adjacency + one (root, node) sum-agg + one
-    anti-join against the visited set; the backward pass is one
-    equi-join per layer between consecutive layers. No windows, no
-    global sorts, no driver data beyond the k pivot rows; per-round
-    localCheckpoint cuts the plan chain (sssp_hops' argument). Frontier
-    size is bounded by k × |V|; a celebrity node fans out k ways only.
+    σ) state table holding every BFS layer — each forward round is one
+    equi-join of the frontier layer against the undirected adjacency +
+    one (root, node) sum-agg + one anti-join against the visited rows;
+    each backward round is one equi-join between consecutive layers.
+    Both passes run on the loop driver, which cuts the plan every
+    round. No windows, no global sorts, no driver data. Frontier size
+    is bounded by k × |V|; a celebrity node fans out k ways only.
     """
-    und = (
-        edges.select(F.col("src").cast("string").alias("x"),
-                     F.col("dst").cast("string").alias("y"))
-        .unionByName(edges.select(F.col("dst").cast("string").alias("x"),
-                                  F.col("src").cast("string").alias("y")))
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .persist()
-    )
-    nodes = und.select(F.col("x").alias("node")).distinct()
+    und = _undirected(edges, self_loops=False).persist()
+    nodes = und.select(F.col("src").alias("node")).distinct()
     # deterministic pivots: k smallest md5(seed|node) — a tiny
     # TakeOrderedAndProject, never a global sort of the node set
     pivots = (
@@ -835,38 +804,42 @@ def betweenness(edges: DataFrame, k_sources: int = 8, max_hops: int = 4,
     layer0 = pivots.select(
         F.col("node").alias("root"), F.col("node"),
         F.lit(0).alias("dist"), F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint()
-    layers = [layer0]
-    visited = layer0.select("root", "node").localCheckpoint()
-    frontier = layer0
-    for h in range(1, max_hops + 1):
+    ).localCheckpoint()  # the first round reads it three times
+
+    def forward(state: DataFrame, h: int) -> DataFrame:
         grown = (
-            frontier.join(und, frontier["node"] == und["x"])
-            .groupBy(F.col("root"), F.col("y").alias("node"))
+            state.filter(F.col("dist") == h - 1)
+            .join(und, F.col("node") == und["src"])
+            .groupBy("root", F.col("dst").alias("node"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(visited, ["root", "node"], "left_anti")
-            .withColumn("dist", F.lit(h))
-            .select("root", "node", "dist", "sigma")
-            .localCheckpoint()
+            .join(state.select("root", "node"), ["root", "node"], "left_anti")
+            .select("root", "node", F.lit(h).alias("dist"), "sigma")
         )
-        if grown.isEmpty():
-            break
-        layers.append(grown)
-        visited = visited.union(grown.select("root", "node")).localCheckpoint()
-        frontier = grown
-    # backward: deepest layer has δ=0; fold one layer up per step.
+        return state.unionByName(grown)
+
+    depth = max_hops
+
+    def drained(state: DataFrame, h: int) -> bool:
+        nonlocal depth
+        if state.filter(F.col("dist") == h).isEmpty():
+            depth = h - 1  # the deepest layer reached
+            return True
+        return False
+
+    layers, _ = caching.iterate(layer0, forward, max_hops, until=drained,
+                                bases=(und,))
+
+    # backward: deepest layer has δ=0; fold one layer up per round.
     # succ(v) = neighbors of v in the NEXT layer of the same root — in an
     # unweighted BFS every shortest-path-DAG edge spans consecutive
     # layers, so consecutive-layer joins cover the whole DAG.
-    deltas = []  # (root, node, delta) per layer, pivots excluded at the end
-    delta_up = layers[-1].select(
-        "root", "node", "sigma", F.lit(0).cast("long").alias("delta"))
-    for d in range(len(layers) - 2, -1, -1):
-        v = layers[d].alias("v")
-        w = delta_up.alias("w")
+    def backward(acc: DataFrame, i: int) -> DataFrame:
+        d = depth - i
+        v = layers.filter(F.col("dist") == d).alias("v")
+        w = acc.filter(F.col("dist") == d + 1).alias("w")
         contrib = (
-            v.join(und, F.col("v.node") == F.col("x"))
-            .join(w, (F.col("y") == F.col("w.node"))
+            v.join(und, F.col("v.node") == und["src"])
+            .join(w, (und["dst"] == F.col("w.node"))
                   & (F.col("v.root") == F.col("w.root")))
             .select(
                 F.col("v.root").alias("root"), F.col("v.node").alias("node"),
@@ -874,21 +847,19 @@ def betweenness(edges: DataFrame, k_sources: int = 8, max_hops: int = 4,
                 .alias("c"))
             .groupBy("root", "node").agg(F.sum("c").alias("dsum"))
         )
-        delta_up = (
-            layers[d].join(contrib, ["root", "node"], "left")
-            .select("root", "node", "sigma",
-                    F.coalesce("dsum", F.lit(0)).cast("long").alias("delta"))
-            .localCheckpoint()
-        )
-        deltas.append(delta_up.filter(F.col("node") != F.col("root"))
-                      .select("root", "node", "delta"))
-    und.unpersist()
-    acc = deltas[0] if deltas else layer0.limit(0).select(
-        "root", "node", F.lit(0).cast("long").alias("delta"))
-    for d in deltas[1:]:
-        acc = acc.unionByName(d)
-    per_node = acc.groupBy("node").agg(
-        F.sum("delta").alias("betweenness_micro"))
+        return acc.unionByName(
+            layers.filter(F.col("dist") == d)
+            .join(contrib, ["root", "node"], "left")
+            .select("root", "node", "dist", "sigma",
+                    F.coalesce("dsum", F.lit(0)).cast("long").alias("delta")))
+
+    deepest = layers.filter(F.col("dist") == depth).withColumn(
+        "delta", F.lit(0).cast("long"))
+    # the forward loop released und; this loop reads it again
+    deltas, _ = caching.iterate(deepest, backward, depth,
+                                bases=(und.persist(), layers))
+    per_node = (deltas.filter(F.col("node") != F.col("root"))
+                .groupBy("node").agg(F.sum("delta").alias("betweenness_micro")))
     return (
         nodes.join(per_node, "node", "left")
         .select("node", F.coalesce("betweenness_micro", F.lit(0))
@@ -921,15 +892,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     |communities| keys, and one 1-row final fold with the m scalar
     joined via broadcast crossJoin (the accepted 1-row pattern)."""
     _require_exact_int64(edges, "modularity")
-    pairs = (
-        edges.select(F.least(F.col("src").cast("string"),
-                             F.col("dst").cast("string")).alias("a"),
-                     F.greatest(F.col("src").cast("string"),
-                                F.col("dst").cast("string")).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
+    pairs = _simple_pairs(edges)
     lab = labels.select(F.col("node").cast("string").alias("node"), "label")
     deg = (
         pairs.select(F.col("a").alias("node"))
@@ -968,7 +931,6 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
             "CAST((q_numer * 1000000 - (((q_numer * 1000000) % (4 * m_edges * m_edges)"
             " + (4 * m_edges * m_edges)) % (4 * m_edges * m_edges)))"
             " DIV (4 * m_edges * m_edges) AS BIGINT)").alias("q_micro"))
-    pairs.unpersist()
     return out
 
 
@@ -1028,31 +990,9 @@ def modularity_refine(edges: DataFrame, labels: DataFrame | None = None,
     adjacency, one (node, label) count, one per-label degree agg
     (|communities| keys), one broadcast of the 1-row 2m scalar folded
     in as a literal, and one arg-min struct agg per node. No windows,
-    no global sorts; localCheckpoint per round cuts lineage. Hot
-    communities partial-aggregate map-side (same argument as
-    label_propagation)."""
-    if weight_col is None:
-        # unweighted: duplicates collapse, self-loops DROP (meaningless
-        # in simple-graph semantics; the weighted path keeps them
-        # because contraction produces them)
-        canon = (
-            edges.select(F.least(F.col("src").cast("string"),
-                                 F.col("dst").cast("string")).alias("a"),
-                         F.greatest(F.col("src").cast("string"),
-                                    F.col("dst").cast("string")).alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .withColumn("w", F.lit(1).cast("long"))
-        )
-    else:
-        canon = (
-            edges.select(F.least(F.col("src").cast("string"),
-                                 F.col("dst").cast("string")).alias("a"),
-                         F.greatest(F.col("src").cast("string"),
-                                    F.col("dst").cast("string")).alias("b"),
-                         F.col(weight_col).cast("long").alias("w"))
-            .groupBy("a", "b").agg(F.sum("w").alias("w"))
-        )
+    no global sorts. Hot communities partial-aggregate map-side (same
+    argument as label_propagation)."""
+    canon = _weighted_pairs(edges, weight_col)
     nonself = canon.filter(F.col("a") != F.col("b"))
     selfw = canon.filter(F.col("a") == F.col("b")).select(
         F.col("a").alias("node"), F.col("w").alias("w_self"))
@@ -1073,12 +1013,13 @@ def modularity_refine(edges: DataFrame, labels: DataFrame | None = None,
     )
     two_m = deg.agg(F.sum("ki")).collect()[0][0] or 0  # Σki = 2m exactly
     if labels is None:
-        lab = deg.select("node", F.col("node").alias("label"))
+        start = deg.select("node", F.col("node").alias("label"))
     else:
-        lab = labels.select(F.col("node").cast("string").alias("node"),
-                            F.col("label").cast("string").alias("label"))
-    lab = lab.localCheckpoint()
-    for _ in range(rounds):
+        start = labels.select(F.col("node").cast("string").alias("node"),
+                              F.col("label").cast("string").alias("label"))
+    start = start.localCheckpoint()  # the first round reads it four times
+
+    def step(lab: DataFrame, _: int) -> DataFrame:
         d_c = (
             lab.join(deg, "node")
             .groupBy("label").agg(F.sum("ki").alias("d_c"))
@@ -1137,13 +1078,10 @@ def modularity_refine(edges: DataFrame, labels: DataFrame | None = None,
         # with it, dissolved communities collapse back to self-labels and
         # the minimum-labeling guard can finish the merge next round.
         canon = moved.groupBy("label").agg(F.min("node").alias("_c"))
-        lab = (
-            moved.join(canon, "label")
-            .select("node", F.col("_c").alias("label"))
-            .localCheckpoint()
-        )
-    und.unpersist()
-    deg.unpersist()
+        return moved.join(canon, "label").select(
+            "node", F.col("_c").alias("label"))
+
+    lab, _ = caching.iterate(start, step, rounds, bases=(und, deg))
     return lab
 
 
@@ -1158,15 +1096,15 @@ def weighted_sssp(wedges: DataFrame, source: str,
     fixpoint with no accumulation error, so cross-engine equality is
     structural (the twin relaxes the same rounds).
 
-    Shape per round: one equi-join of the improved frontier against the
-    src-hash edge layout (built once, reused every round), one min-agg,
-    one merge-min against the best table, one anti-semi filter keeping
-    strictly-improved rows (label-correcting: relaxing only improved
-    rows computes the same fixpoint as full Bellman-Ford rounds, since
-    un-improved rows would only re-derive known distances). Early exit
-    when no row improves. No windows, no global sorts."""
+    Shape per round: the state is ``(node, dist, improved)``; one
+    equi-join of its improved rows against the src-hash edge layout
+    (built once, reused every round), one min-agg, and one full-outer
+    merge-min onto the state that flags the strictly-improved rows
+    (label-correcting: relaxing only improved rows computes the same
+    fixpoint as full Bellman-Ford rounds, since un-improved rows would
+    only re-derive known distances). Early exit when no row improves.
+    No windows, no global sorts."""
     _require_exact_int64(wedges, "weighted_sssp")
-    spark = wedges.sparkSession
     e = (
         wedges.select(F.col("src").cast("string").alias("src"),
                       F.col("dst").cast("string").alias("dst"),
@@ -1174,27 +1112,33 @@ def weighted_sssp(wedges: DataFrame, source: str,
         .groupBy("src", "dst").agg(F.min("w").alias("w"))
         .repartition("src").localCheckpoint(eager=False)
     )
-    best = spark.createDataFrame([(source, 0)], "node string, dist long") \
-        .localCheckpoint()
-    frontier = best
-    for _ in range(max_hops):
+
+    def relax(best: DataFrame, _: int) -> DataFrame:
         reached = (
-            frontier.join(e, frontier["node"] == e["src"])
+            best.filter("improved").join(e, F.col("node") == e["src"])
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("dist")))
-        merged = (
-            best.unionByName(reached)
-            .groupBy("node").agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False))
-        frontier = (
-            merged.join(best.select("node", F.col("dist").alias("_old")),
-                        "node", "left")
-            .filter(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-            .select("node", "dist"))
-        if frontier.isEmpty():
-            return merged
-        best = merged
-    return best
+            .agg(F.min(F.col("dist") + F.col("w")).alias("cand")))
+        return merge_improved(best, reached, "dist", F.least)
+
+    start = wedges.sparkSession.createDataFrame(
+        [(source, 0, True)], "node string, dist long, improved boolean")
+    best, _ = caching.iterate(
+        start, relax, max_hops,
+        until=lambda b, _: b.filter("improved").isEmpty(), bases=(e,))
+    return best.select("node", "dist")
+
+
+def merge_improved(best: DataFrame, reached: DataFrame, col: str,
+                   better) -> DataFrame:
+    """Merge candidate values ``reached(node, cand)`` into the relaxation
+    state ``best(node, <col>, improved)``: *col* becomes the *better*
+    (``F.least`` or ``F.greatest``) of old and candidate, and
+    ``improved`` flags rows whose value is new or strictly better."""
+    old, cand = F.col(col), F.col("cand")
+    return best.drop("improved").join(reached, "node", "full_outer").select(
+        "node", better(old, cand).alias(col),
+        (cand.isNotNull() & (old.isNull() | (better(old, cand) != old)))
+        .alias("improved"))
 
 
 def assortativity(edges: DataFrame) -> DataFrame:
@@ -1219,15 +1163,7 @@ def assortativity(edges: DataFrame) -> DataFrame:
     DECIMAL(38) intermediates; BIGINT is exact to ~3·10⁹ edges of
     10³ degree."""
     _require_exact_int64(edges, "assortativity")
-    pairs = (
-        edges.select(F.least(F.col("src").cast("string"),
-                             F.col("dst").cast("string")).alias("a"),
-                     F.greatest(F.col("src").cast("string"),
-                                F.col("dst").cast("string")).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
+    pairs = _simple_pairs(edges)
     deg = (
         pairs.select(F.col("a").alias("node"))
         .unionByName(pairs.select(F.col("b").alias("node")))
@@ -1255,7 +1191,6 @@ def assortativity(edges: DataFrame) -> DataFrame:
                  % (2 * m_edges * s2 - s1 * s1)))
               DIV (2 * m_edges * s2 - s1 * s1) END AS BIGINT)
         """).alias("r_micro"))
-    pairs.unpersist()
     return out
 
 
@@ -1271,28 +1206,7 @@ def contract_graph(edges: DataFrame, labels: DataFrame,
     One dedup of the edge list, two node-keyed label joins, one
     (community, community) sum — the super-graph is |communities|-sized,
     so every later level costs a vanishing fraction of level 1."""
-    if weight_col is None:
-        # unweighted: duplicates collapse, self-loops DROP (meaningless
-        # in simple-graph semantics; the weighted path keeps them
-        # because contraction produces them)
-        canon = (
-            edges.select(F.least(F.col("src").cast("string"),
-                                 F.col("dst").cast("string")).alias("a"),
-                         F.greatest(F.col("src").cast("string"),
-                                    F.col("dst").cast("string")).alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .withColumn("w", F.lit(1).cast("long"))
-        )
-    else:
-        canon = (
-            edges.select(F.least(F.col("src").cast("string"),
-                                 F.col("dst").cast("string")).alias("a"),
-                         F.greatest(F.col("src").cast("string"),
-                                    F.col("dst").cast("string")).alias("b"),
-                         F.col(weight_col).cast("long").alias("w"))
-            .groupBy("a", "b").agg(F.sum("w").alias("w"))
-        )
+    canon = _weighted_pairs(edges, weight_col)
     la = labels.select(F.col("node").alias("a"), F.col("label").alias("la"))
     lb = labels.select(F.col("node").alias("b"), F.col("label").alias("lb"))
     return (
@@ -1307,22 +1221,23 @@ def louvain(edges: DataFrame, levels: int = 2, rounds: int = 3) -> DataFrame:
     """Multi-level Louvain (Blondel et al. 2008): refine → contract →
     refine on the weighted super-graph, *levels* times; returns the
     ORIGINAL nodes mapped to their top-level community. Level 1 runs
-    :func:`modularity_refine` from singletons; every later level runs
-    its weighted path on the contracted graph, where a community's
-    internal weight rides along as a self-loop. Deterministic end to
-    end (each stage is), so the twin replays the whole pyramid."""
-    mapping = modularity_refine(edges, rounds=rounds)
-    cur_edges, cur_w, cur_labels = edges, None, mapping
-    for _ in range(1, levels):
-        wg = contract_graph(cur_edges, cur_labels, cur_w).localCheckpoint()
-        up = modularity_refine(wg, rounds=rounds, weight_col="w")
-        mapping = (
+    :func:`modularity_refine` from singletons; every later level
+    contracts the edge list through the current mapping and runs the
+    weighted path on that super-graph, where a community's internal
+    weight rides along as a self-loop (weights are integer sums, so
+    contracting the original edges equals contracting the previous
+    level's super-graph). Deterministic end to end (each stage is), so
+    the twin replays the whole pyramid."""
+    def level(mapping: DataFrame, _: int) -> DataFrame:
+        up = modularity_refine(contract_graph(edges, mapping), rounds=rounds,
+                               weight_col="w")
+        return (
             mapping.join(up.select(F.col("node").alias("label"),
                                    F.col("label").alias("_up")), "label")
-            .select("node", F.col("_up").alias("label"))
-            .localCheckpoint()
-        )
-        cur_edges, cur_w, cur_labels = wg, "w", up
+            .select("node", F.col("_up").alias("label")))
+
+    mapping, _ = caching.iterate(modularity_refine(edges, rounds=rounds),
+                                 level, levels - 1)
     return mapping
 
 
@@ -1341,15 +1256,7 @@ def eccentricity_probe(edges: DataFrame, max_hops: int = 8,
     windows), and two 1-row argmax probes to the driver — the only
     driver data is the pivot and the peak."""
     spark = edges.sparkSession
-    und = (
-        edges.select(F.col("src").cast("string").alias("src"),
-                     F.col("dst").cast("string").alias("dst"))
-        .unionByName(edges.select(F.col("dst").cast("string").alias("src"),
-                                  F.col("src").cast("string").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges, self_loops=False).localCheckpoint()
     start = (
         und.select("src").distinct()
         .withColumn("_h", F.md5(F.concat(F.lit(f"ecc|{seed}|"),

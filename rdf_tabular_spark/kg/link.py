@@ -342,7 +342,7 @@ def connected_components(
     mention's canonical is the min label within that many hops. Pair
     endpoints missing from *mentions* are dropped, and a null mention
     stays its own (null) entity."""
-    from ..caching import cache_bounded, release
+    from .. import caching
 
     # a self-loop per vertex folds the vertex's own label into the
     # neighbour min, so a round is one join + one aggregate; the self-loop
@@ -355,47 +355,30 @@ def connected_components(
         .union(mentions.select(F.col("mention").alias("x"),
                                F.col("mention").alias("y")).distinct())
     ).persist()
-    labels = edges.filter(own).select(
-        F.col("x").alias("mention"), F.col("y").alias("label"))
+
+    def step(state: DataFrame, _: int) -> DataFrame:
+        labels = state.select(F.col("x").alias("mention"), "label")
+        return (
+            edges.join(labels, F.col("y").eqNullSafe(F.col("mention")))
+            .groupBy("x")
+            .agg(F.min("label").alias("label"),
+                 F.min(F.when(own, F.col("label"))).alias("old"))
+            .filter(F.col("old").isNotNull() | F.col("x").isNull())
+        )
+
     # Each round references the previous labels once, so the plan grows
-    # by one join + aggregate per round; every 3rd and the last round cut
-    # it with a localCheckpoint (a persisted frame keeps its plan, and
-    # nested callers such as smush(smush(...)) render it into every
-    # explain string) and check convergence there. Rounds after a fixed
-    # point change nothing, so stopping there keeps the fixed-step result
-    # the SQL twins compute.
-    held = None  # the last checkpointed frame
-    try:
-        for it in range(max_iter):
-            step = (
-                edges.join(labels, F.col("y").eqNullSafe(F.col("mention")))
-                .groupBy("x")
-                .agg(F.min("label").alias("label"),
-                     F.min(F.when(own, F.col("label"))).alias("old"))
-                .filter(F.col("old").isNotNull() | F.col("x").isNull())
-            )
-            labels = step.select(F.col("x").alias("mention"), "label")
-            if (it + 1) % 3 and it + 1 < max_iter:
-                continue
-            step = step.localCheckpoint()
-            if held is not None:
-                release(held)
-            held = step
-            labels = step.select(F.col("x").alias("mention"), "label")
-            changed = step.filter(F.col("label") != F.col("old"))
-            if not changed.limit(1).count():
-                break
-    except BaseException:
-        if held is not None:
-            release(held)
-        raise
-    finally:
-        edges.unpersist()
-    if held is not None:
-        # registered so repeated calls in a long-lived session cannot
-        # accumulate caches
-        cache_bounded(held)
-    return labels.select("mention", F.col("label").alias("canonical"))
+    # by one join + aggregate per round; cutting every 3rd and the last
+    # round bounds it, and the convergence check runs there. Rounds after
+    # a fixed point change nothing, so stopping there keeps the
+    # fixed-step result the SQL twins compute.
+    state, _ = caching.iterate(
+        edges.filter(own).select("x", F.col("y").alias("label")), step,
+        max_iter, cut_every=3,
+        until=lambda s, _: not s.filter(F.col("label") != F.col("old"))
+        .limit(1).count(),
+        bases=(edges,))
+    return state.select(F.col("x").alias("mention"),
+                        F.col("label").alias("canonical"))
 
 
 def entity_table(labels: DataFrame) -> DataFrame:

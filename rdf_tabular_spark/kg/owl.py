@@ -41,7 +41,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import TRIPLE_COLUMNS
+from .. import TRIPLE_COLUMNS, caching
 
 OWL = "http://www.w3.org/2002/07/owl#"
 INVERSE_OF = OWL + "inverseOf"
@@ -87,12 +87,15 @@ def _compile_rules(inverse, symmetric, transitive, chains, ontology):
     return swap_pairs, chain_rules, vocab
 
 
-def _closure_loop(spark, all_edges: DataFrame, frontier: DataFrame,
+def _closure_loop(spark, closed: DataFrame | None, frontier: DataFrame,
                   swap_pairs, chain_rules, max_rounds: int,
                   caller: str) -> DataFrame:
     """Semi-naive fixpoint shared by full and incremental closure:
     each round applies every rule with the new edges from the previous
-    round on at least one premise. Returns the closed edge set."""
+    round on at least one premise. The edges are *closed* (already
+    closed among themselves, or None) plus the new *frontier*; the loop
+    state is all edges with a ``_new`` flag on the last round's
+    conclusions. Returns the closed edge set."""
     swaps = F.broadcast(spark.createDataFrame(
         swap_pairs or [("", "")], "p string, q string").filter(
         F.col("p") != ""))
@@ -138,8 +141,9 @@ def _closure_loop(spark, all_edges: DataFrame, frontier: DataFrame,
                         F.col("_m.obj_datatype").alias("obj_datatype"),
                         F.col("_m.obj_lang").alias("obj_lang")))
 
-    converged = False
-    for _ in range(max_rounds):
+    def step(state: DataFrame, _: int) -> DataFrame:
+        frontier = state.filter("_new").drop("_new")
+        all_edges = state.drop("_new")
         new = apply_swap(frontier)
         if chain_rules:
             new = new.unionByName(apply_chain(frontier, all_edges))
@@ -147,18 +151,21 @@ def _closure_loop(spark, all_edges: DataFrame, frontier: DataFrame,
         new = dedup_det(new).join(
             all_edges.select("subj", "pred", "obj"),
             ["subj", "pred", "obj"], "left_anti")
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
-            converged = True
-            break
-        all_edges = all_edges.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
+        return all_edges.withColumn("_new", F.lit(False)).unionByName(
+            new.withColumn("_new", F.lit(True)))
+
+    state = frontier.withColumn("_new", F.lit(True))
+    if closed is not None:
+        state = closed.withColumn("_new", F.lit(False)).unionByName(state)
+    state, converged = caching.iterate(
+        state, step, max_rounds,
+        until=lambda s, _: s.filter("_new").isEmpty())
     if not converged:
         warnings.warn(
             f"{caller} exited after {max_rounds} rounds without "
             "reaching the fixpoint; the returned closure is truncated "
             "— raise max_rounds", stacklevel=3)
-    return all_edges
+    return state.drop("_new")
 
 
 def owl_property_materialize(
@@ -186,7 +193,7 @@ def owl_property_materialize(
     # the only pass over the full stream: pushed-down predicate filter
     in_vocab = asserted.filter(F.col("pred").isin(vocab))
     all_edges = _closure_loop(
-        triples.sparkSession, in_vocab, in_vocab, swap_pairs,
+        triples.sparkSession, None, in_vocab, swap_pairs,
         chain_rules, max_rounds, "owl_property_materialize")
 
     inferred = all_edges.join(
@@ -249,8 +256,7 @@ def owl_incremental_delta(
     mat_vocab = base.filter(F.col("pred").isin(vocab))
     frontier = new_delta.filter(F.col("pred").isin(vocab))
     all_edges = _closure_loop(
-        materialized.sparkSession,
-        mat_vocab.unionByName(frontier), frontier, swap_pairs,
+        materialized.sparkSession, mat_vocab, frontier, swap_pairs,
         chain_rules, max_rounds, "owl_incremental")
     # net-new closure rows: not in the closed base, not in the delta
     inferred = all_edges.join(

@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import caching
+from ..kg.graph import merge_improved
+
 __all__ = ["earliest_arrival", "latest_departure"]
 
 
@@ -42,31 +45,7 @@ def earliest_arrival(edges: DataFrame, sources: DataFrame, *,
     has column ``node``; sources start at ``start_ts`` (i.e. they may
     take any edge), and their own ``arrive`` in the output is
     ``start_ts``."""
-    e = (edges.select("src", "dst", "ts").distinct()
-         .repartition("src").localCheckpoint(eager=False))
-    best = sources.select(
-        "node", F.lit(start_ts).cast("timestamp").alias("arrive"))
-    frontier = best
-    for _ in range(max_hops):
-        reached = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .filter(F.col("ts") >= F.col("arrive"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("ts").alias("arrive")))
-        merged = (best.unionByName(reached)
-                  .groupBy("node").agg(F.min("arrive").alias("arrive"))
-                  .localCheckpoint(eager=False))
-        # only strictly-improved rows continue relaxing
-        frontier = (merged.join(
-            best.select("node", F.col("arrive").alias("_old")),
-            "node", "left")
-            .filter(F.col("_old").isNull()
-                    | (F.col("arrive") < F.col("_old")))
-            .select("node", "arrive"))
-        if frontier.isEmpty():
-            return merged
-        best = merged
-    return best
+    return _relax(edges, sources, max_hops, start_ts, forward=True)
 
 
 def latest_departure(edges: DataFrame, targets: DataFrame, *,
@@ -83,27 +62,38 @@ def latest_departure(edges: DataFrame, targets: DataFrame, *,
     Same shape as the forward problem: dst-keyed edge layout reused
     every round, one equi-join + max-agg, improved-rows-only frontier,
     pure max-of-timestamps fixpoint."""
+    return _relax(edges, targets, max_hops, deadline_ts, forward=False)
+
+
+def _relax(edges: DataFrame, seeds: DataFrame, max_hops: int, seed_ts: str,
+           forward: bool) -> DataFrame:
+    """Both directions of the label-correcting relaxation: the state is
+    ``(node, <time>, improved)``, seeded at *seed_ts*; each round relaxes
+    the improved rows across the edge layout and merges the candidates
+    with :func:`kg.graph.merge_improved`."""
+    near, far, col, agg, better = (
+        ("src", "dst", "arrive", F.min, F.least) if forward
+        else ("dst", "src", "depart", F.max, F.greatest))
     e = (edges.select("src", "dst", "ts").distinct()
-         .repartition("dst").localCheckpoint(eager=False))
-    best = targets.select(
-        "node", F.lit(deadline_ts).cast("timestamp").alias("depart"))
-    frontier = best
-    for _ in range(max_hops):
+         .repartition(near).localCheckpoint(eager=False))
+    # a path takes an edge only at or after its arrival at the edge's
+    # source (forward), or at or before the departure it must still make
+    # at the edge's destination (backward)
+    usable = (F.col("ts") >= F.col(col)) if forward \
+        else (F.col("ts") <= F.col(col))
+
+    def step(best: DataFrame, _: int) -> DataFrame:
         reached = (
-            frontier.join(e, frontier["node"] == e["dst"])
-            .filter(F.col("ts") <= F.col("depart"))
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.max("ts").alias("depart")))
-        merged = (best.unionByName(reached)
-                  .groupBy("node").agg(F.max("depart").alias("depart"))
-                  .localCheckpoint(eager=False))
-        frontier = (merged.join(
-            best.select("node", F.col("depart").alias("_old")),
-            "node", "left")
-            .filter(F.col("_old").isNull()
-                    | (F.col("depart") > F.col("_old")))
-            .select("node", "depart"))
-        if frontier.isEmpty():
-            return merged
-        best = merged
-    return best
+            best.filter("improved").join(e, F.col("node") == e[near])
+            .filter(usable)
+            .groupBy(F.col(far).alias("node"))
+            .agg(agg("ts").alias("cand")))
+        return merge_improved(best, reached, col, better)
+
+    start = seeds.select("node").distinct().select(
+        "node", F.lit(seed_ts).cast("timestamp").alias(col),
+        F.lit(True).alias("improved"))
+    best, _ = caching.iterate(
+        start, step, max_hops,
+        until=lambda b, _: b.filter("improved").isEmpty(), bases=(e,))
+    return best.select("node", col)

@@ -444,9 +444,8 @@ def test_connected_components_matches_reference(spark, case):
 
 
 def test_connected_components_releases_caches(spark, monkeypatch):
-    """After a call only the checkpoint behind the returned frame stays
-    (the registry's in-memory copy of it goes with release_caches); a
-    failure mid-loop leaves nothing persisted."""
+    """After a call only the checkpoint behind the returned frame stays;
+    a failure mid-loop leaves nothing persisted."""
     from rdf_tabular_spark import caching
     from rdf_tabular_spark.kg import link
 

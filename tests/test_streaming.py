@@ -453,3 +453,47 @@ def test_stream_stream_join_pairs_cross_batches(spark, tmp_path):
     # u1: view#1 + click#4 (cross-batch 0->1); click#7 is 170 min after
     # view#6 -> out of window; u2: view#3 + click#5 (cross-batch 1->2)
     assert got == {(1, 4), (3, 5)}
+
+
+def test_drained_sink_is_keyed_on_the_streaming_code(spark, tmp_path,
+                                                     monkeypatch):
+    """A drained sink is served again only to the code that drained it:
+    once streaming/incremental.py changes, the sink is drained anew."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    from rdf_tabular_spark.streaming import incremental
+
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({"ts": pa.array([3, 1, 2], pa.timestamp("us")),
+                             "user_id": [1, 1, 2]}),
+                   str(sf / "events.parquet"))
+
+    class Drained:
+        def awaitTermination(self, timeout):
+            return True
+
+    def runner(tag):
+        def run(spark, src, sink, ckpt, schema):
+            os.makedirs(sink)
+            pq.write_table(pa.table({"tag": [tag]}),
+                           os.path.join(sink, "part-0.parquet"))
+            return Drained()
+        return run
+
+    def drain(tag):
+        return [r.tag for r in E._drained_stream_sink(
+            spark, str(sf), "probe", runner(tag)).collect()]
+
+    assert drain("first") == ["first"]
+    assert drain("unused") == ["first"]  # same code: the sink is reused
+    changed = tmp_path / "incremental.py"
+    changed.write_bytes(open(incremental.__file__, "rb").read() + b"\n#\n")
+    monkeypatch.setattr(incremental, "__file__", str(changed))
+    assert drain("second") == ["second"]

@@ -4,10 +4,14 @@
 order-insensitive value hash over stringified cells.
 
 Usage: python tools/check_entry.py [query ...]
+
+Each argument is an exact query name or a shell-style pattern
+(``'kg_*'``); with none, every query runs.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import math
 import sys
@@ -64,10 +68,10 @@ def main() -> int:
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    only = set(sys.argv[1:])
+    only = sys.argv[1:]
     n_fail = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         t0 = time.time()
         try:
