@@ -519,10 +519,11 @@ def q_csvw_multiline_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, interior records never shuffle, and only the 2-per-chunk
     boundary fragments stitch — then records parse JVM-side with
     from_csv. The DuckDB twin re-frames the SAME bytes with its own
-    independent CSV reader: two framers, one answer. read_table routes
-    multiline files through this same module (sources/csv_source.py),
-    replacing the round-3 driver splitter / single-task JVM multiLine
-    reader (reference: Ruby CSV sequential framing, metadata.rb:860-880)."""
+    independent CSV reader: two framers, one answer. read_table
+    (sources/csv_source.py) frames through this same function every file
+    whose dialect it accepts and whose quoted cells embed a line
+    terminator (reference: Ruby CSV sequential framing,
+    metadata.rb:860-880)."""
     import os
 
     from rdf_tabular_spark.sources.framing import frame_records
@@ -5055,6 +5056,36 @@ def _event_stream_dir(sf_dir: str) -> str:
     return d
 
 
+def _keep_committed_parts(sink: str) -> None:
+    """Reduce a streaming file sink to plain parquet: delete every part
+    file its ``_spark_metadata`` commit log does not list, then the log.
+    A retried task leaves its failed attempt's part file behind; only the
+    log tells it apart, and read without the log it repeats rows."""
+    import json
+    import os
+    import shutil
+    from urllib.parse import unquote, urlparse
+
+    log = os.path.join(sink, "_spark_metadata")
+    if not os.path.isdir(log):
+        return
+    committed = set()
+    for name in os.listdir(log):
+        if name.startswith("."):  # checksum files
+            continue
+        with open(os.path.join(log, name), encoding="utf-8") as f:
+            for line in f.read().splitlines()[1:]:  # line 1: log version
+                entry = json.loads(line)
+                if entry["action"] == "add":
+                    committed.add(os.path.basename(
+                        unquote(urlparse(entry["path"]).path)))
+    shutil.rmtree(log)
+    for root, _dirs, files in os.walk(sink):
+        for name in files:
+            if name[0] not in "._" and name not in committed:
+                os.remove(os.path.join(root, name))
+
+
 def _drained_stream_sink(spark: SparkSession, sf_dir: str, kind: str,
                          runner) -> DataFrame:
     """Run a Structured Streaming query to completion into a
@@ -5098,12 +5129,9 @@ def _drained_stream_sink(spark: SparkSession, sf_dir: str, kind: str,
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
-    # a streaming FILE sink leaves a _spark_metadata commit log whose
-    # entries hold absolute .tmp paths — drop it before the rename (all
-    # part files are committed once the drain returned; the dir is then
-    # plain parquet)
-    shutil.rmtree(os.path.join(tmp, "sink", "_spark_metadata"),
-                  ignore_errors=True)
+    # the commit log's entries hold absolute .tmp paths: settle the sink
+    # to plain parquet before the rename
+    _keep_committed_parts(os.path.join(tmp, "sink"))
     with open(os.path.join(tmp, "_DRAINED"), "w") as f:
         f.write("ok")
     try:

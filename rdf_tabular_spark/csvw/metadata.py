@@ -102,16 +102,6 @@ class Dialect:
             return ["\r\n", "\n"]
         return [v] if isinstance(v, str) else [str(t) for t in v]
 
-    @property
-    def custom_line_sep(self) -> str | None:
-        """None when the terminators are a subset of the spec defaults —
-        standard line framing (Spark's text/CSV readers already split on
-        \\n and \\r\\n) — else the first non-standard terminator, which
-        routes the scan through the record-separator path."""
-        custom = [t for t in self.line_terminator_list
-                  if t not in ("\n", "\r\n")]
-        return custom[0] if custom else None
-
     @classmethod
     def from_json(cls, obj: dict | None) -> "Dialect":
         obj = obj or {}

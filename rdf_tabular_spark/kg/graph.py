@@ -1254,24 +1254,31 @@ def eccentricity_probe(edges: DataFrame, max_hops: int = 8,
     Shape: two :func:`sssp_hops` frontier iterations over the
     symmetrized edge list (per round: one equi-join + anti-join, no
     windows), and two 1-row argmax probes to the driver — the only
-    driver data is the pivot and the peak."""
+    driver data is the pivot and the peak. The result is built on the
+    driver, so every checkpoint is released on every exit."""
     spark = edges.sparkSession
     und = _undirected(edges, self_loops=False).localCheckpoint()
-    start = (
-        und.select("src").distinct()
-        .withColumn("_h", F.md5(F.concat(F.lit(f"ecc|{seed}|"),
-                                         F.col("src"))))
-        .orderBy("_h", "src").limit(1).collect()[0][0])
 
     def _far(source: str):
         d = sssp_hops(und, source, max_hops=max_hops)
-        b = d.agg(F.min(F.struct((-F.col("hops")).alias("nh"),
-                                 F.col("node").alias("n"))).alias("b")
-                  ).collect()[0]["b"]
+        try:
+            b = d.agg(F.min(F.struct((-F.col("hops")).alias("nh"),
+                                     F.col("node").alias("n"))).alias("b")
+                      ).collect()[0]["b"]
+        finally:
+            caching.release(d)
         return b["n"], -b["nh"]
 
-    peak, ecc1 = _far(start)
-    _, ecc2 = _far(peak)
+    try:
+        start = (
+            und.select("src").distinct()
+            .withColumn("_h", F.md5(F.concat(F.lit(f"ecc|{seed}|"),
+                                             F.col("src"))))
+            .orderBy("_h", "src").limit(1).collect()[0][0])
+        peak, ecc1 = _far(start)
+        _, ecc2 = _far(peak)
+    finally:
+        caching.release(und)
     return spark.createDataFrame(
         [(start, peak, ecc1, ecc2)],
         "start_node string, peak_node string, ecc_start long, ecc_peak long")

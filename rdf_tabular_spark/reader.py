@@ -448,15 +448,9 @@ def validate(
     tables_by_url: dict[str, CompiledTable] = {}
     for table in group.tables:
         scan = _scan_table(spark, table, html_text, url_map, search_dir)
-        # scan-level problems (e.g. ragged rows wider than the declared
-        # schema in the record-framing path) are validation findings too
-        if scan.problems:
-            parts.append(spark.createDataFrame(
-                [("scan", table.url, None, None, None, p)
-                 for p in scan.problems], out_schema))
         if scan.problems_df is not None:
-            # lazy ragged-row findings from the fast line path: stays a
-            # set-level plan, materialized only here in validation mode
+            # scan-level problems (ragged rows wider than the schema) are
+            # validation findings too: a lazy plan, materialized only here
             parts.append(scan.problems_df.select(
                 F.lit("scan").alias("kind"),
                 F.lit(table.url).alias("table"),

@@ -1,35 +1,49 @@
-"""Dialect-aware CSV scan (S1-S6).
+"""Dialect-aware single-file CSV scan (S1-S6).
 
-Strategy: read the file as text lines with a stable per-file line index,
-apply skipRows / header / comment / blank-row dialect logic as expression
-filters, and parse each data line JVM-side with ``from_csv`` (so quoting /
-escaping / delimiter come from the dialect, reference metadata.rb:1273-1280).
+:func:`read_table` is one pipeline for every table file:
 
-Line numbering uses ``zipWithIndex`` (two cheap passes, order-stable): a
-CSVW table is one url = one file, so this stays correct and avoids any
-global sort. The 10^12-file path (kg/) numbers rows inside the per-file
-extraction UDF instead and never comes through here.
+1. A *framer*, chosen from the dialect and the data, yields records
+   ``(_sourceRow long, value string)``:
 
-Cells containing embedded line terminators are detected up front (a line
-with an odd number of quote characters) and routed to a ``multiLine``
-``spark.read.csv`` fallback that numbers CSV *records* instead of physical
-lines — which matches the reference anyway: Ruby's CSV iterates records,
-so its sourceNumbers are record indices.
+   - the **line framer** takes UTF-8/ASCII files with exactly the default
+     terminators (``\\r\\n``, ``\\n``). It splits on LF and drops one
+     trailing CR, so a bare CR stays inside its cell, and numbers lines
+     JVM-side from one per-partition count aggregate over partitions
+     fixed at read time. The same aggregate
+     probes for quoted cells that embed a line terminator; a file where
+     the probe fires goes to record framing;
+   - :func:`~.framing.frame_records` frames, distributed, every dialect
+     :func:`~.framing.can_frame_distributed` accepts;
+   - the **splitter** takes the rest: overlapping or multi-char
+     terminators, encodings that are not byte-transparent (UTF-16) and
+     escape-mode quoting. One executor task streams the file in bounded
+     reads.
+
+2. One JVM ``from_csv`` parse turns records into cells (quoting, escaping
+   and delimiter from the dialect, reference metadata.rb:1273-1280); a
+   trailing ``_overflow`` slot catches rows wider than the schema.
+3. One dialect tail applies skipRows comments, header titles, comment
+   rows, blank rows, skipColumns and ``_row`` numbering.
+
+Row numbers are record numbers, as in the reference (Ruby's CSV iterates
+records). The many-file scan (:func:`scan_lines_df`) and kg/ do not come
+through here.
 """
 
 from __future__ import annotations
 
 import csv as pycsv
 import io
-import os
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.window import Window
 
 from ..csvw.metadata import CompiledTable, Dialect
+from . import framing
 
 
 @dataclass
@@ -40,15 +54,10 @@ class TableScan:
     header_titles: list[str] = field(default_factory=list)
     comments: list[str] = field(default_factory=list)
     n_physical_columns: int = 0
-    problems: list[str] = field(default_factory=list)  # e.g. ragged rows
-    #: lazy scan problems (source_row long, detail string) — the fast line
-    #: path surfaces ragged rows through this DataFrame so the ToRdf hot
-    #: path never pays a probe action; only validate() materializes it
+    #: lazy ragged-row problems (source_row long, detail string): the
+    #: ToRdf hot path never pays for them; only validate() materializes it
     problems_df: DataFrame | None = None
 
-
-#: (path, mtime, quoteChar, delimiter) -> does the file need record framing
-_MULTILINE_PROBE_CACHE: dict[tuple, bool] = {}
 
 #: driver-side bound on collected comment annotations (VERDICT r4 #4: a
 #: pathological 100 GB file that is mostly commentPrefix lines must not
@@ -57,6 +66,9 @@ _MULTILINE_PROBE_CACHE: dict[tuple, bool] = {}
 #: _COMMENT_CAP in source order — far beyond any real metadata header —
 #: and warn when truncating.
 _COMMENT_CAP = 10_000
+
+#: the CSVW default lineTerminators, the only set the line framer frames
+_DEFAULT_TERMINATORS = {"\r\n", "\n"}
 
 
 def _collect_comments_bounded(comment_rows: DataFrame, render) -> list[str]:
@@ -93,383 +105,235 @@ def _parse_csv_line(line: str, dialect: Dialect) -> list[str]:
     return []
 
 
-def _read_table_multiline(
-    spark: SparkSession, table: CompiledTable, path: str
-) -> TableScan:
-    """Fallback scan for files whose cells embed line terminators: let the
-    JVM CSV parser handle record framing (``multiLine``), then apply the
-    dialect's skip/comment/blank logic over *records*."""
-    d = table.dialect
-    skip = d.skipRows
-    header_n = d.header_row_count
+def _pinned(df: DataFrame) -> DataFrame:
+    """*df* over the one RDD its plan makes now, so every later action
+    reads the same partitions whatever the file-split settings or the
+    executor count are by then (per-partition line offsets hold only for
+    the partitions they were counted on). JVM-side: no row enters
+    Python."""
+    js = df.sparkSession._jsparkSession
+    return DataFrame(js.createDataFrame(
+        df._jdf.javaRDD(), js.parseDataType(df.schema.json())),
+        df.sparkSession)
 
-    custom_sep = d.custom_line_sep
-    term_alt = "|".join(
-        re.escape(t) for t in sorted(d.line_terminator_list,
-                                     key=len, reverse=True))
-    non_virtual = [c for c in table.columns if not c.virtual]
-    if non_virtual:
-        n_cols = len(non_virtual) + d.skipColumns
-    else:
-        import csv as _csv
 
-        with open(path, encoding=d.encoding or "utf-8", newline="") as f:
-            if custom_sep:
-                # width probe: the first record ends at ANY declared
-                # terminator (a ';'-terminated dialect may still list '\n')
-                first_rec = re.split(term_alt, f.read())[0]
-                first = next(_csv.reader([first_rec], delimiter=d.delimiter,
-                                         quotechar=d.quoteChar or '"'), [])
-            else:
-                first = next(_csv.reader(f, delimiter=d.delimiter,
-                                         quotechar=d.quoteChar or '"'), [])
-        n_cols = max(len(first), 1)
+def _line_records(spark: SparkSession, d: Dialect, path: str,
+                  n_head: int) -> tuple[DataFrame, list[str]] | None:
+    """Line framer: LF-split lines numbered JVM-side and the first
+    *n_head* of them, or None when a quoted cell embeds a line terminator
+    (the file needs record framing).
 
-    problems: list[str] = []
-    schema = StructType([
-        StructField(f"_x{i}", StringType()) for i in range(n_cols)])
-    src_field = StructField("_sourceRow", LongType())
+    ``monotonically_increasing_id`` holds the partition id in its upper 31
+    bits and the index inside the partition in its lower 33. One
+    per-partition aggregate gives each partition's line count, its first
+    *n_head* lines and the embedded-terminator probe; a driver prefix sum
+    of the counts gives every partition its offset."""
+    lines = _pinned(spark.read.option("lineSep", "\n").text(path)).select(
+        F.spark_partition_id().alias("_pid"),
+        (F.monotonically_increasing_id()
+         - F.shiftleft(F.spark_partition_id().cast("long"), 33))
+        .alias("_local"),
+        F.regexp_replace("value", "\r\\z", "").alias("value"))
+    aggs = [F.count(F.lit(1)).alias("n"),
+            F.collect_list(F.when(F.col("_local") < n_head, F.struct(
+                "_local", "value"))).alias("head")]
+    if d.quoteChar:
+        # a quoted cell embedding a line terminator leaves a line whose
+        # quote count is odd AND that has a quote at a field boundary
+        # (line start/end or next to the delimiter). Parity alone misroutes
+        # an unquoted mid-field quote (`5" x 4`); boundary counting alone
+        # misses `"a","b<NL>c","d"` and misroutes every fully-quoted file.
+        # With doubleQuote false a `\`-escaped quote counts for nothing.
+        q, de = re.escape(d.quoteChar), re.escape(d.delimiter)
+        text = F.col("value") if d.doubleQuote else \
+            F.regexp_replace("value", r"\\.", "")
+        n_quotes = F.length(text) - F.length(
+            F.replace(text, F.lit(d.quoteChar), F.lit("")))
+        boundary = F.regexp_count(text, F.lit(f"(^|{de}){q}|{q}({de}|$)"))
+        aggs.append(F.max(((n_quotes % 2 == 1) & (boundary > 0))
+                          .cast("int")).alias("embedded"))
+    stats = {r["_pid"]: r for r in lines.groupBy("_pid").agg(*aggs).collect()}
+    if d.quoteChar and any(r["embedded"] for r in stats.values()):
+        return None
+    offsets, head, acc = [], [], 0
+    for pid in range(max(stats, default=-1) + 1):
+        offsets.append(acc)
+        if pid in stats:
+            acc += stats[pid]["n"]
+            head += [v for _, v in sorted(stats[pid]["head"])]
+    off = F.get(F.lit(offsets or [0]).cast("array<bigint>"), F.col("_pid"))
+    return lines.select((off + F.col("_local") + 1).alias("_sourceRow"),
+                        "value"), head[:n_head]
+
+
+def _split_file(path: str, encoding: str, quote: str, terminators: list[str],
+                double_quote: bool, chunk: int = 1 << 20):
+    """The records of *path* in order, read *chunk* characters at a time:
+    memory holds one chunk and the record being read. The file decodes
+    with *encoding*; a terminator outside quotes ends a record (CSVW: ANY
+    listed terminator, longest first), and with *double_quote* false a
+    ``\\``-escaped character inside quotes never toggles the quote state
+    nor ends the record."""
+    terms = "|".join(re.escape(t) for t in sorted(terminators, key=len,
+                                                  reverse=True))
+    alts = [f"(?P<q>{re.escape(quote)})", f"(?P<t>{terms})"]
+    if not double_quote:
+        alts.insert(0, r"(?P<e>\\.)")
+    pat = re.compile("|".join(alts), re.S)
+    # a match starting this close to the end of the buffer may be cut
+    keep = max(2, *map(len, terminators))
+    buf, start, pos, quoted = "", 0, 0, False
+    with open(path, encoding=encoding, newline="") as f:
+        while True:
+            more = f.read(chunk)
+            buf, pos, start = buf[start:] + more, pos - start, 0
+            limit = len(buf) - keep if more else len(buf)
+            m = pat.search(buf, pos)
+            while m and m.start() < limit:
+                if m.lastgroup == "e":  # outside quotes `\` is literal
+                    pos = m.end() if quoted else m.start() + 1
+                elif m.lastgroup == "q":
+                    quoted, pos = not quoted, m.end()
+                else:
+                    pos = m.end()
+                    if not quoted:
+                        yield buf[start:m.start()]
+                        start = pos
+                m = pat.search(buf, pos)
+            if not more:
+                break
+    if start < len(buf):  # a trailing terminator yields no empty record
+        yield buf[start:]
+
+
+def _split_records(spark: SparkSession, d: Dialect, path: str) -> DataFrame:
+    """Splitter for the dialects ``frame_records`` declines: one executor
+    task streams the file through :func:`_split_file`. Like any
+    sequential reader it does not split the file across tasks."""
+    args = (path, d.encoding or "utf-8", d.quoteChar or '"',
+            d.line_terminator_list, d.doubleQuote)
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize([args], 1).flatMap(
+            lambda a: enumerate(_split_file(*a), 1)),
+        "_sourceRow long, value string")
+
+
+def _records(spark: SparkSession, d: Dialect, path: str,
+             n_head: int) -> tuple[DataFrame, list[str]]:
+    """``(_sourceRow, value)`` records of *path* from the framer its
+    dialect and data call for, and the values of the first *n_head*."""
     terms = d.line_terminator_list
-    customs = [t for t in terms if t not in ("\n", "\r\n")]
-    # the JVM lineSep option handles exactly ONE 1-char terminator and
-    # replaces the default framing entirely — it only applies when that is
-    # precisely what the dialect declares
-    jvm_line_sep = (len(customs) == 1 and len(customs[0]) == 1
-                    and set(terms) == {customs[0]})
-    # SPLITTABLE framing first (sources/framing.py): chunked byte ranges +
-    # a quote-parity prefix pass frame the records executor-side, so a
-    # 100 TB multiline file parallelizes instead of running on the driver
-    # (exotic terminators) or in ONE JVM task (multiLine). The framing
-    # quote matches the driver splitter's balance rule (quoteChar or '"').
-    from .framing import can_frame_distributed, frame_records
-
-    fq = d.quoteChar or '"'
-    if os.path.isfile(path) and can_frame_distributed(
-            terms, fq, d.encoding, d.doubleQuote):
-        recs_df = frame_records(spark, path, terms, fq, d.encoding)
-        probe_ddl = ", ".join(
-            f"`_x{i}` string" for i in range(n_cols)) + ", `_overflow` string"
-        opts = {"sep": d.delimiter, "quote": fq,
-                "escape": d.escape_char, "mode": "PERMISSIVE"}
-        parsed = recs_df.select(
-            "_sourceRow",
-            F.from_csv(F.col("value"), probe_ddl, opts).alias("r"))
-        # _x columns FIRST, _sourceRow last — downstream head/comment
-        # extraction slices rows positionally (tuple(r)[:n_cols])
-        df = parsed.select(
-            *[F.col(f"r._x{i}").alias(f"_x{i}") for i in range(n_cols)],
-            F.col("r._overflow").alias("_overflow"),
-            "_sourceRow")
-        # raggedness is a DATA-row problem, same contract as the JVM branch
-        ragged_probe = df.filter(F.col("_overflow").isNotNull()).filter(
-            F.col("_sourceRow") > skip + header_n)
-        if d.commentPrefix:
-            ragged_probe = ragged_probe.filter(
-                ~F.coalesce(F.col("_x0"), F.lit(""))
-                .startswith(d.commentPrefix))
-        problems.extend(
-            f"ragged row {r['_sourceRow']}: wider than the "
-            f"{n_cols}-column schema"
-            for r in ragged_probe.select("_sourceRow").collect())
-        df = df.drop("_overflow")
-    elif customs and not jvm_line_sep:
-        # multi-char terminator, or several terminators (CSVW: ANY listed
-        # terminator ends a row): split records on the driver — segments
-        # with an unbalanced quote count are re-joined (a quoted cell may
-        # embed a terminator). Files with exotic terminators are small
-        # one-offs; the distributed paths handle the standard framings.
-        with open(path, encoding=d.encoding or "utf-8", newline="") as f:
-            text = f.read()
-        q = d.quoteChar or '"'
-        pieces = re.split(f"({term_alt})", text)
-        recs: list[str] = []
-        buf = ""
-        for j, piece in enumerate(pieces):
-            if j % 2 == 0:
-                buf += piece
-            elif buf.count(q) % 2 == 0:
-                recs.append(buf)
-                buf = ""
-            else:
-                buf += piece  # quoted embedded terminator stays literal
-        if buf:
-            recs.append(buf)
-        parsed_rows = [_parse_csv_line(r, d) for r in recs]
-        for i, row in enumerate(parsed_rows):
-            # raggedness is a DATA-row problem: skipped/header/comment
-            # records are excluded (the reference only validates data rows)
-            if i < skip + header_n:
-                continue
-            if d.commentPrefix and recs[i].startswith(d.commentPrefix):
-                continue
-            if len(row) > n_cols:
-                problems.append(
-                    f"ragged row {i + 1}: {len(row)} cells, expected {n_cols}")
-        data = [
-            tuple((row + [None] * n_cols)[:n_cols]) + (i + 1,)
-            for i, row in enumerate(parsed_rows)
-        ]
-        df = spark.createDataFrame(
-            data, StructType(schema.fields + [src_field]))
+    if framing.charset_of(d.encoding) in ("UTF-8", "US-ASCII") \
+            and set(terms) == _DEFAULT_TERMINATORS:
+        lines = _line_records(spark, d, path, n_head)
+        if lines is not None:
+            return lines
+    quote = d.quoteChar or '"'
+    if framing.can_frame_distributed(terms, quote, d.encoding, d.doubleQuote):
+        records = framing.frame_records(spark, path, terms, quote, d.encoding)
     else:
-        opts = dict(
-            sep=d.delimiter, quote=d.quoteChar or '"',
-            escape=d.escape_char, multiLine=True, mode="PERMISSIVE",
-            encoding=d.encoding or "utf-8")
-        if jvm_line_sep:
-            # the sole declared terminator, single char (S1): JVM lineSep
-            opts["lineSep"] = customs[0]
-        # one overflow slot so rows wider than the declared schema surface
-        # as scan problems instead of being silently truncated (the
-        # line-based scan sizes columns from the widest observation)
-        probe = StructType(
-            schema.fields + [StructField("_overflow", StringType())])
-        parsed = spark.read.options(**opts).schema(probe).csv(path)
-        indexed = parsed.rdd.zipWithIndex().map(
-            lambda t: tuple(t[0]) + (t[1] + 1,))
-        df = spark.createDataFrame(
-            indexed, StructType(probe.fields + [src_field]))
-        # raggedness is a DATA-row problem: exclude the skipped/header
-        # region and comment records (the reference only validates data
-        # rows). The probe is one extra scan of the (rare, small) files
-        # that take this fallback; the collect returns only ragged rows.
-        ragged_probe = df.filter(F.col("_overflow").isNotNull()).filter(
-            F.col("_sourceRow") > skip + header_n)
-        if d.commentPrefix:
-            ragged_probe = ragged_probe.filter(
-                ~F.coalesce(F.col("_x0"), F.lit(""))
-                .startswith(d.commentPrefix))
-        ragged = ragged_probe.select("_sourceRow").collect()
-        problems.extend(
-            f"ragged row {r['_sourceRow']}: wider than the "
-            f"{n_cols}-column schema" for r in ragged)
-        df = df.drop("_overflow")
+        records = _split_records(spark, d, path)
+    # the text reader drops a UTF-8 byte-order mark; so do the other two
+    records = records.withColumn("value", F.when(
+        F.col("_sourceRow") == 1, F.regexp_replace("value", "^\ufeff", ""))
+        .otherwise(F.col("value")))
+    head = records.orderBy("_sourceRow").limit(n_head).collect() \
+        if n_head else []
+    return records, [r.value for r in head]
 
-    comments: list[str] = []
-    header_titles: list[str] = []
-    if skip or header_n:
-        head = df.orderBy("_sourceRow").limit(skip + header_n).collect()
-        for r in head[:skip]:
-            # skipped lines re-join on the DELIMITER and become comment
-            # annotations; dialect trim applies before prefix detection,
-            # the result is stripped and empties dropped
-            # (metadata.rb:1846-1853; full multi-char prefix removed where
-            # the reference's [1..-1] hardcodes one char)
-            text = d.delimiter.join(
-                v for v in tuple(r)[:n_cols] if v is not None)
-            trim_mode = d.effective_trim
-            if trim_mode in (True, "true", "start"):
-                text = text.lstrip()
-            if trim_mode in (True, "true", "end"):
-                text = text.rstrip()
-            if d.commentPrefix and text.startswith(d.commentPrefix):
-                text = text[len(d.commentPrefix):]
-            text = text.strip()
-            if text:
-                comments.append(text)
-        for r in head[skip:skip + header_n]:
-            cells = [v if v is not None else "" for v in tuple(r)[:n_cols]]
-            if d.commentPrefix and cells and str(cells[0]).startswith(d.commentPrefix):
-                comments.append(" ".join(map(str, cells))[len(d.commentPrefix):])
-                continue
-            if not header_titles:
-                header_titles = [str(c).strip() for c in cells[d.skipColumns:]]
-        df = df.filter(F.col("_sourceRow") > skip + header_n)
 
-    if d.commentPrefix:
-        first_col = F.coalesce(F.col("_x0"), F.lit(""))
-        comment_rows = df.filter(first_col.startswith(d.commentPrefix))
-        # data-region comments join on ' ', strip, drop empty
-        # (metadata.rb:882-886); bounded ordered collect — never the
-        # whole file to the driver
-        comments.extend(_collect_comments_bounded(
-            comment_rows,
-            lambda r: " ".join(
-                str(v) for v in tuple(r)[:n_cols] if v is not None)[
-                len(d.commentPrefix):].strip()))
-        df = df.filter(~first_col.startswith(d.commentPrefix))
-
-    cols = [F.col(f"_x{i + d.skipColumns}").alias(f"_c{i}")
-            for i in range(n_cols - d.skipColumns)]
-    out = df.select("_sourceRow", *cols)
-    if d.skipBlankRows:
-        concat_all = F.concat_ws(
-            "", *[F.coalesce(F.col(f"_c{i}"), F.lit(""))
-                  for i in range(n_cols - d.skipColumns)])
-        out = out.filter(concat_all != "")
-
-    from pyspark.sql.window import Window
-
-    if d.commentPrefix or d.skipBlankRows:
-        out = out.withColumn(
-            "_row", F.row_number().over(Window.orderBy("_sourceRow")).cast("long"))
-    else:
-        out = out.withColumn("_row", F.col("_sourceRow") - (skip + header_n))
-    return TableScan(
-        df=out,
-        header_titles=header_titles,
-        comments=comments,
-        n_physical_columns=n_cols,
-        problems=problems,
-    )
+def _comment(text: str, prefix: str) -> str:
+    """A comment row's annotation: its text after the prefix, stripped
+    (metadata.rb:882-886); empty ones are dropped."""
+    return text[len(prefix):].strip()
 
 
 def read_table(
     spark: SparkSession, table: CompiledTable, path: str
 ) -> TableScan:
     d = table.dialect
-    skip = d.skipRows
-    header_n = d.header_row_count
+    prefix = d.commentPrefix
+    n_head = d.skipRows + d.header_row_count
+    records, head = _records(spark, d, path, n_head)
 
-    # non-UTF-8 encodings and custom line terminators go through the JVM
-    # CSV reader, which honors the encoding/lineSep options;
-    # spark.read.text is UTF-8-only and \n/\r\n-framed (S1 dialect)
-    if d.encoding and d.encoding.lower().replace("-", "") not in ("utf8", "ascii"):
-        return _read_table_multiline(spark, table, path)
-    if d.custom_line_sep is not None:
-        return _read_table_multiline(spark, table, path)
-
-    lines = spark.read.text(path)
-    if d.quoteChar:
-        # embedded line terminators leave a line with an odd count of
-        # FIELD-BOUNDARY quotes (quote at line start/end or adjacent to the
-        # delimiter); such files go through the record-framing (multiLine)
-        # scan. Counting only boundary quotes keeps an unquoted mid-field
-        # quoteChar (`5" x 4`) from misrouting the file to the JVM parser,
-        # whose quoting semantics differ for such malformed-quote data.
-        q = d.quoteChar
-        qe, de = re.escape(q), re.escape(d.delimiter)
-        boundary = f"(^|{de}){qe}|{qe}({de}|$)"
-        # a line is suspicious when its TOTAL quote count is odd (a quoted
-        # cell embedding a line terminator leaves an unbalanced quote) AND
-        # at least one quote sits at a field boundary (so an unquoted
-        # mid-field quoteChar like `5" x 4` — odd count, no boundary quote
-        # — stays on the line scan). Parity alone misrouted mid-field
-        # quotes; boundary count alone both missed `"a","b<NL>c","d"`
-        # (non-overlapping matches consume the shared comma, even count)
-        # and misrouted every fully-quoted file (3 matches per line).
-        n_quotes = F.length(F.col("value")) - F.length(
-            F.replace(F.col("value"), F.lit(q), F.lit("")))
-        suspicious = (n_quotes % 2 == 1) & (
-            F.regexp_count(F.col("value"), F.lit(boundary)) > 0)
-        # cache the probe per (path, mtime, dialect): repeated reads of the
-        # same file (validate + to_triples + to_json in one run) would
-        # otherwise each pay an extra scan of every quoted file
-        try:
-            key = (path, os.path.getmtime(path), q, d.delimiter)
-        except OSError:
-            key = None
-        if key is None or key not in _MULTILINE_PROBE_CACHE:
-            needs = lines.filter(suspicious).limit(1).count() > 0
-            if key is not None:
-                _MULTILINE_PROBE_CACHE[key] = needs
-        else:
-            needs = _MULTILINE_PROBE_CACHE[key]
-        if needs:
-            return _read_table_multiline(spark, table, path)
-    indexed = lines.rdd.zipWithIndex().map(lambda t: (t[0][0], t[1] + 1))
-    df = spark.createDataFrame(
-        indexed,
-        StructType([
-            StructField("value", StringType()),
-            StructField("_sourceRow", LongType()),
-        ]),
-    )
-
+    # S2/S6: the skipped region and the header rows are few; inspect them
+    # on the driver. Comments keep the record's own text (quotes and
+    # delimiters as written), the text the commentPrefix test reads too.
     comments: list[str] = []
     header_titles: list[str] = []
+    for text in head[:d.skipRows]:
+        # trim before prefix detection, strip after removal, drop
+        # empties (metadata.rb:1846-1853)
+        if d.effective_trim in ("true", "start"):
+            text = text.lstrip()
+        if d.effective_trim in ("true", "end"):
+            text = text.rstrip()
+        if prefix and text.startswith(prefix):
+            text = text[len(prefix):]
+        comments.append(text.strip())
+    for text in head[d.skipRows:]:
+        if prefix and text.startswith(prefix):
+            comments.append(_comment(text, prefix))
+        elif not header_titles:
+            header_titles = [c.strip() for c in
+                             _parse_csv_line(text, d)[d.skipColumns:]]
+    comments = [c for c in comments if c]
+    body = records.filter(F.col("_sourceRow") > n_head)
 
-    # skipped-region + header rows are few: inspect on the driver (S2/S6)
-    if skip or header_n:
-        head = [r.value for r in df.orderBy("_sourceRow").limit(skip + header_n).collect()]
-        for line in head[:skip]:
-            # trim before prefix detection, strip after removal, drop
-            # empties (metadata.rb:1846-1853)
-            text = line
-            trim_mode = d.effective_trim
-            if trim_mode in ("true", "start"):
-                text = text.lstrip()
-            if trim_mode in ("true", "end"):
-                text = text.rstrip()
-            if d.commentPrefix and text.startswith(d.commentPrefix):
-                text = text[len(d.commentPrefix):]
-            text = text.strip()
-            if text:
-                comments.append(text)
-        for line in head[skip : skip + header_n]:
-            if d.commentPrefix and line.startswith(d.commentPrefix):
-                comments.append(line[len(d.commentPrefix):])
-                continue
-            cells = _parse_csv_line(line, d)[d.skipColumns:]
-            if not header_titles:
-                header_titles = [c.strip() for c in cells]
-        df = df.filter(F.col("_sourceRow") > skip + header_n)
-
-    # comment rows inside the data region (S3): strip, drop empty
-    # (metadata.rb:882-886)
-    if d.commentPrefix:
-        comment_rows = df.filter(F.col("value").startswith(d.commentPrefix))
+    # S3: comment rows inside the data region; a quoted first cell starts
+    # with the quote character, so `"#x",1` stays data
+    if prefix:
+        is_comment = F.col("value").startswith(prefix)
         comments.extend(_collect_comments_bounded(
-            comment_rows,
-            lambda r: r.value[len(d.commentPrefix):].strip()))
-        df = df.filter(~F.col("value").startswith(d.commentPrefix))
+            body.filter(is_comment), lambda r: _comment(r.value, prefix)))
+        body = body.filter(~is_comment)
 
-    # determine physical width: declared schema, else the header row, else
-    # (headerless file with no schema) the first data row — the reference
-    # creates `_col.N` columns on demand per row (metadata.rb:2060-2062);
-    # the fixed-schema scan sizes them once from the first row
+    # physical width: declared schema, else the header row, else (headerless
+    # file with no schema) the first data row — the reference creates
+    # `_col.N` columns on demand per row (metadata.rb:2060-2062); the
+    # fixed-schema scan sizes them once from the first row
     non_virtual = [c for c in table.columns if not c.virtual]
     if non_virtual:
         n_cols = len(non_virtual) + d.skipColumns
     elif header_titles:
         n_cols = len(header_titles) + d.skipColumns
     else:
-        first = df.orderBy("_sourceRow").select("value").limit(1).collect()
-        width = len(_parse_csv_line(first[0].value, d)) if first else 0
-        n_cols = max(width, 1)
+        first = body.orderBy("_sourceRow").limit(1).collect()
+        n_cols = max(len(_parse_csv_line(first[0].value, d)) if first else 0,
+                     1)
 
     # one overflow slot so data rows wider than the schema surface as
-    # ragged-row problems (lazily, via problems_df) instead of being
-    # silently truncated — same contract as the record-framing path
-    schema_ddl = ", ".join(f"`_x{i}` string" for i in range(n_cols)) \
+    # ragged-row problems instead of being silently truncated
+    ddl = ", ".join(f"`_x{i}` string" for i in range(n_cols)) \
         + ", `_overflow` string"
-    opts = {
-        "sep": d.delimiter,
-        "quote": d.quoteChar or '"',
-        "escape": d.escape_char,
-        "mode": "PERMISSIVE",
-    }
-    parsed = df.select(
-        "_sourceRow",
-        F.from_csv(F.col("value"), schema_ddl, opts).alias("r"),
-        "value",
-    )
+    opts = {"sep": d.delimiter, "quote": d.quoteChar or '"',
+            "escape": d.escape_char, "mode": "PERMISSIVE"}
+    parsed = body.select("_sourceRow", "value",
+                         F.from_csv(F.col("value"), ddl, opts).alias("r"))
     problems_df = parsed.filter(F.col("r._overflow").isNotNull()).select(
         F.col("_sourceRow").alias("source_row"),
-        F.concat(F.lit(f"ragged row wider than the {n_cols}-column schema"))
+        F.lit(f"ragged row wider than the {n_cols}-column schema")
         .alias("detail"))
-    cols = [F.col(f"r._x{i + d.skipColumns}").alias(f"_c{i}")
-            for i in range(n_cols - d.skipColumns)]
-    parsed = parsed.select("_sourceRow", "value", *cols)
+    width = n_cols - d.skipColumns
+    out = parsed.select(
+        "_sourceRow", "value",
+        *[F.col(f"r._x{i + d.skipColumns}").alias(f"_c{i}")
+          for i in range(width)])
 
+    # S4: a blank row has only empty cells (",," is blank too)
     if d.skipBlankRows:
-        concat_all = F.concat_ws(
-            "", *[F.coalesce(F.col(f"_c{i}"), F.lit(""))
-                  for i in range(n_cols - d.skipColumns)])
-        parsed = parsed.filter(F.trim(F.col("value")) != "").filter(concat_all != "")
+        cells = F.concat_ws("", *[F.coalesce(F.col(f"_c{i}"), F.lit(""))
+                                  for i in range(width)])
+        out = out.filter((F.trim(F.col("value")) != "") & (cells != ""))
 
-    # data-row numbering (C16): per single-file table a window over the line
-    # index is exact; arithmetic shortcut when nothing was filtered
-    from pyspark.sql.window import Window
-
-    if d.commentPrefix or d.skipBlankRows:
-        parsed = parsed.withColumn(
-            "_row", F.row_number().over(Window.orderBy("_sourceRow")).cast("long"))
+    # data-row numbering (C16): per single-file table a window over the
+    # record number is exact; arithmetic when no data row was dropped
+    if prefix or d.skipBlankRows:
+        row = F.row_number().over(Window.orderBy("_sourceRow")).cast("long")
     else:
-        parsed = parsed.withColumn("_row", F.col("_sourceRow") - (skip + header_n))
-
+        row = F.col("_sourceRow") - n_head
     return TableScan(
-        df=parsed.drop("value"),
+        df=out.withColumn("_row", row).drop("value"),
         header_titles=header_titles,
         comments=comments,
         n_physical_columns=n_cols,
@@ -494,14 +358,14 @@ def scan_lines_df(
     shuffle is the per-file numbering window, keyed by file. The
     single-file path (:func:`read_table`) keeps the richer driver-side
     semantics (embedded header extraction, comment aggregation,
-    multiLine records).
+    record framing).
 
     Cell parsing is JVM-side ``from_csv`` when the dialect declares a
     quoteChar (the default), so quoted cells embedding the delimiter
     parse correctly (ADVICE r2); only a dialect with quoting explicitly
     disabled takes the plain split. Being line-based, this path cannot
     frame cells that embed LINE TERMINATORS — those files need
-    :func:`read_table`'s multiLine fallback. The commentPrefix filter is
+    :func:`read_table`'s record framing. The commentPrefix filter is
     quote-safe as-is: a quoted first cell starts with the quote
     character at line level, so ``"#not a comment",x`` is kept.
 

@@ -1,10 +1,9 @@
 """Distributed record framing for multiline / custom-terminator CSV.
 
 The reference frames records with Ruby's CSV reader (a sequential
-single-pass parser, csv.rb via metadata.rb:860-880); the round-3 engine
-mirrored that on the DRIVER for exotic-terminator files and leaned on the
-JVM ``multiLine`` reader (whole-file, single-task) for standard ones.
-Neither survives a 100 TB file: framing must be SPLITTABLE.
+single-pass parser, csv.rb via metadata.rb:860-880). A driver-side or
+whole-file, single-task framer does not survive a 100 TB file: framing
+must be SPLITTABLE.
 
 This module frames records across fixed byte-range chunks of a file,
 fully executor-side:
@@ -37,8 +36,8 @@ guaranteed by :func:`chain_safe` — a multi-byte terminator (the only
 kind that can suppress) must never itself be suppressible, so
 suppression chains have depth 1 and a ``max_term-1`` lookbehind decides
 every owned position. Dialects outside these guards (self-overlapping
-terminators, escape-mode quoting, non-ASCII-transparent encodings) keep
-the driver/JVM fallbacks in csv_source.py.
+terminators, escape-mode quoting, non-ASCII-transparent encodings) go
+to the sequential splitter in csv_source.py.
 """
 
 from __future__ import annotations
@@ -85,7 +84,7 @@ def can_frame_distributed(terminators: list[str], quote: str | None,
                           encoding: str | None,
                           double_quote: bool = True) -> bool:
     """Gate for the distributed framing path (else csv_source falls back
-    to its driver splitter / JVM multiLine reader)."""
+    to its sequential splitter)."""
     if charset_of(encoding) is None:
         return False
     if quote is not None:

@@ -8,6 +8,13 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FIXTURE_DIR = "/root/reference/spec/data"
+#: checkout of the reference implementation: its golden corpus (spec/data)
+#: and etc/ files. Tests that read it skip, under one reason, where it is
+#: absent, and run unchanged where it exists.
+REFERENCE_DIR = os.path.dirname(os.path.dirname(FIXTURE_DIR))
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_DIR),
+    reason=f"reference corpus not found: {REFERENCE_DIR} is absent")
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 

@@ -9,7 +9,7 @@ import json
 import pytest
 
 from rdf_tabular_spark.__main__ import _infer_metadata, _run
-from tests.conftest import FIXTURE_DIR
+from tests.conftest import FIXTURE_DIR, needs_reference
 
 
 class _Args:
@@ -27,6 +27,7 @@ class _Args:
             setattr(self, k, v)
 
 
+@needs_reference
 def test_cli_ntriples(spark, capsys):
     args = _Args(input=f"{FIXTURE_DIR}/tree-ops.csv",
                  metadata=f"{FIXTURE_DIR}/tree-ops.csv-metadata.json",
@@ -37,6 +38,7 @@ def test_cli_ntriples(spark, capsys):
     assert all(line.endswith(" .") for line in out)
 
 
+@needs_reference
 def test_cli_json(spark, capsys, tmp_path):
     out_file = tmp_path / "out.json"
     args = _Args(input=f"{FIXTURE_DIR}/tree-ops.csv",
@@ -49,6 +51,7 @@ def test_cli_json(spark, capsys, tmp_path):
     assert got[0]["GID"] == "1"
 
 
+@needs_reference
 def test_cli_validate_detects_pk_violation(spark, capsys):
     args = _Args(input=f"{FIXTURE_DIR}/test232-metadata.json",
                  base="http://example.org/test232-metadata.json",
@@ -63,6 +66,7 @@ def test_cli_tsv_inference():
     assert base.startswith("file:///")
 
 
+@needs_reference
 def test_cli_turtle(spark, capsys):
     args = _Args(input=f"{FIXTURE_DIR}/tree-ops.csv",
                  metadata=f"{FIXTURE_DIR}/tree-ops.csv-metadata.json",
@@ -82,6 +86,7 @@ def test_cli_turtle(spark, capsys):
     assert len(parsed) == 10
 
 
+@needs_reference
 def test_cli_sparql_select(spark, capsys):
     args = _Args(input=f"{FIXTURE_DIR}/tree-ops.csv",
                  metadata=f"{FIXTURE_DIR}/tree-ops.csv-metadata.json",
@@ -96,6 +101,7 @@ def test_cli_sparql_select(spark, capsys):
                                                      "EMERSON ST"]
 
 
+@needs_reference
 def test_cli_sparql_construct_prints_ntriples(spark, capsys):
     args = _Args(input=f"{FIXTURE_DIR}/tree-ops.csv",
                  metadata=f"{FIXTURE_DIR}/tree-ops.csv-metadata.json",
@@ -107,6 +113,7 @@ def test_cli_sparql_construct_prints_ntriples(spark, capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert len(out) == 2 and all(" <http://e/street> " in ln for ln in out)
 
+@needs_reference
 def test_cli_canonical_ntriples(spark, capsys):
     """--canonical: two runs over the same input produce byte-identical
     sorted output with _:c-prefixed canonical labels.

@@ -99,8 +99,7 @@ def test_trim_dialect(spark, tmp_path):
 
 
 def test_multiline_cells(spark, tmp_path):
-    """Cells with embedded line terminators route through the multiLine
-    record-framing scan; row numbers are record indices (reference: Ruby
+    """Cells with embedded line terminators route to record framing; row numbers are record indices (reference: Ruby
     CSV iterates records, so sourceNumbers are record-based there too)."""
     from rdf_tabular_spark.csvw.metadata import parse_metadata
     from rdf_tabular_spark.sources.csv_source import read_table
@@ -121,6 +120,40 @@ def test_multiline_cells(spark, tmp_path):
     assert sorted(r["_sourceRow"] for r in rows.values()) == [2, 3, 4]
 
 
+@pytest.mark.parametrize("at_read,at_collect", [
+    ("512", "512"), (None, "512"), ("512", None)])
+def test_line_numbers_across_partitions(spark, tmp_path, at_read,
+                                        at_collect):
+    """The line framer numbers lines exactly when the file splits into
+    many partitions: each partition starts after the lines of those
+    before it, and the header comes from the first one. The numbers hold
+    when the split settings change between read_table and a later
+    action: the scan keeps reading the partitions it counted."""
+    content = "n,sq\n" + "".join(f"{i},{i * i}\n" for i in range(1, 301))
+    key = "spark.sql.files.maxPartitionBytes"
+
+    def split(value):
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+    try:
+        split(at_read)
+        scan, _ = _scan(spark, tmp_path, content, {})
+        split(at_collect)
+        rows = scan.df.collect()
+        split("512")
+        n_parts = spark.read.text(str(tmp_path / "t.csv")) \
+            .rdd.getNumPartitions()
+    finally:
+        spark.conf.unset(key)
+    assert n_parts > 2
+    assert scan.header_titles == ["n", "sq"]
+    assert sorted((r["_row"], r["_sourceRow"], r["_c0"]) for r in rows) == [
+        (i, i + 1, str(i)) for i in range(1, 301)]
+
+
 def test_multiline_not_triggered_by_balanced_quotes(spark, tmp_path):
     from rdf_tabular_spark.csvw.metadata import parse_metadata
     from rdf_tabular_spark.sources.csv_source import read_table
@@ -135,8 +168,8 @@ def test_multiline_not_triggered_by_balanced_quotes(spark, tmp_path):
 
 
 def test_non_utf8_encoding(spark, tmp_path):
-    """S1 dialect `encoding`: ISO-8859-1 input routes through the JVM CSV
-    reader, which honors the encoding option."""
+    """S1 dialect `encoding`: ISO-8859-1 input is framed on raw bytes and
+    decoded with the declared charset."""
     from rdf_tabular_spark.csvw.metadata import parse_metadata
     from rdf_tabular_spark.sources.csv_source import read_table
 
@@ -154,7 +187,7 @@ def test_non_utf8_encoding(spark, tmp_path):
 
 def test_custom_line_terminator(spark, tmp_path):
     """S1 dialect `lineTerminators`: a non-standard record separator routes
-    through the JVM reader's lineSep."""
+    through record framing."""
     from rdf_tabular_spark.csvw.metadata import parse_metadata
     from rdf_tabular_spark.sources.csv_source import read_table
 
@@ -171,11 +204,13 @@ def test_custom_line_terminator(spark, tmp_path):
     assert rows == [("1", "x"), ("2", "y")]
 
 
-def test_line_terminators_array_default_is_standard_path(spark, tmp_path):
+def test_line_terminators_array_default_is_standard_path(spark, tmp_path,
+                                                        monkeypatch):
     """`lineTerminators` is string-or-array; an array equal to the spec
     default must NOT reroute to the record-framing scan (round-1 advice:
     the scalar assumption crashed on any array value)."""
     from rdf_tabular_spark.csvw.metadata import parse_metadata
+    from rdf_tabular_spark.sources import framing
     from rdf_tabular_spark.sources.csv_source import read_table
 
     p = tmp_path / "arr.csv"
@@ -184,7 +219,7 @@ def test_line_terminators_array_default_is_standard_path(spark, tmp_path):
         {"url": "http://example.org/arr.csv",
          "dialect": {"lineTerminators": ["\r\n", "\n"]}},
         base="http://example.org/arr.csv").tables[0]
-    assert table.dialect.custom_line_sep is None
+    monkeypatch.setattr(framing, "frame_records", None)  # line framer only
     scan = read_table(spark, table, str(p))
     assert scan.header_titles == ["a", "b"]
     assert sorted((r["_c0"], r["_c1"]) for r in scan.df.collect()) == [
@@ -192,9 +227,8 @@ def test_line_terminators_array_default_is_standard_path(spark, tmp_path):
 
 
 def test_multichar_line_terminator(spark, tmp_path):
-    """A multi-char custom record separator ('||') exceeds the JVM lineSep
-    1-char limit -> driver-side record split, quoted embedded separators
-    preserved."""
+    """A multi-char custom record separator ('||') overlaps itself, so the
+    sequential splitter frames it; quoted embedded separators are preserved."""
     from rdf_tabular_spark.csvw.metadata import parse_metadata
     from rdf_tabular_spark.sources.csv_source import read_table
 
@@ -212,7 +246,7 @@ def test_multichar_line_terminator(spark, tmp_path):
 
 def test_unquoted_midfield_quote_stays_on_line_scan(spark, tmp_path):
     """An unquoted quoteChar inside a field (`5" x 4`) must not reroute the
-    file to the JVM multiLine parser (round-1 advice: the odd-quote
+    file to record framing (round-1 advice: the odd-quote
     heuristic counted every quote; now only field-boundary quotes count)."""
     from rdf_tabular_spark.csvw.metadata import parse_metadata
     from rdf_tabular_spark.sources.csv_source import read_table
@@ -240,36 +274,9 @@ def test_ragged_rows_surface_as_scan_problems(spark, tmp_path):
          "tableSchema": {"columns": [{"name": "a"}, {"name": "b"}]}},
         base="http://example.org/ragged.csv").tables[0]
     scan = read_table(spark, table, str(p))
-    assert any("ragged" in pr for pr in scan.problems), scan.problems
-
-
-def test_multiline_probe_cached_per_path(spark, tmp_path):
-    """The embedded-terminator probe result is cached per (path, mtime,
-    dialect), so repeated reads of the same quoted file (validate +
-    to_triples + to_json in one run) pay the extra scan once."""
-    from rdf_tabular_spark.csvw.metadata import parse_metadata
-    from rdf_tabular_spark.sources import csv_source
-
-    p = tmp_path / "quoted.csv"
-    p.write_text('a,b\n1,"x y"\n')
-    table = parse_metadata(
-        {"url": "http://example.org/quoted.csv"},
-        base="http://example.org/quoted.csv").tables[0]
-    csv_source._MULTILINE_PROBE_CACHE.clear()
-    first = csv_source.read_table(spark, table, str(p))
-    assert len(csv_source._MULTILINE_PROBE_CACHE) == 1
-    key = next(iter(csv_source._MULTILINE_PROBE_CACHE))
-    assert csv_source._MULTILINE_PROBE_CACHE[key] is False
-    again = csv_source.read_table(spark, table, str(p))
-    assert sorted(map(tuple, again.df.collect())) == \
-        sorted(map(tuple, first.df.collect()))
-    # touching the file invalidates the cache entry (new mtime, new key)
-    import os
-    import time
-
-    os.utime(p, (time.time() + 10, time.time() + 10))
-    csv_source.read_table(spark, table, str(p))
-    assert len(csv_source._MULTILINE_PROBE_CACHE) == 2
+    problems = scan.problems_df.collect()
+    assert [r["source_row"] for r in problems] == [2], problems
+    assert all("ragged" in r["detail"] for r in problems), problems
 
 
 def test_scan_lines_df_matches_single_file_scan(spark, tmp_path):
@@ -359,22 +366,24 @@ def test_fully_quoted_adjacent_fields_route_to_multiline(spark, tmp_path):
     assert rows == [("a", "b\nc", "d"), ("e", "f", "g")]
 
 
-def test_fully_quoted_simple_file_stays_on_line_scan(spark, tmp_path):
+def test_fully_quoted_simple_file_stays_on_line_scan(spark, tmp_path,
+                                                     monkeypatch):
     """A fully-quoted file WITHOUT embedded newlines has even per-line
-    quote counts and must stay on the distributed line scan (the
-    boundary-only probe misrouted every such file through the
-    driver-heavy multiline path)."""
+    quote counts and must stay on the line framer (the boundary-only
+    probe misrouted every such file to record framing)."""
     from rdf_tabular_spark.csvw.metadata import parse_metadata
-    from rdf_tabular_spark.sources import csv_source
+    from rdf_tabular_spark.sources import csv_source, framing
 
+    def no_record_framing(*args, **kwargs):
+        raise AssertionError("routed to record framing")
+
+    monkeypatch.setattr(framing, "frame_records", no_record_framing)
     p = tmp_path / "fq.csv"
     p.write_text('"h1","h2"\n"x","y"\n"z","w"\n')
     table = parse_metadata(
         {"url": "http://example.org/fq.csv"},
         base="http://example.org/fq.csv").tables[0]
-    csv_source._MULTILINE_PROBE_CACHE.clear()
     scan = csv_source.read_table(spark, table, str(p))
-    assert list(csv_source._MULTILINE_PROBE_CACHE.values()) == [False]
     rows = sorted((r["_c0"], r["_c1"]) for r in scan.df.collect())
     assert rows == [("x", "y"), ("z", "w")]
 
@@ -413,7 +422,7 @@ def test_ragged_detection_ignores_comment_and_header_rows(spark, tmp_path):
          "tableSchema": {"columns": [{"name": "a"}, {"name": "b"}]}},
         base="http://example.org/cw.csv").tables[0]
     scan = read_table(spark, table, str(p))
-    assert scan.problems == [], scan.problems
+    assert scan.problems_df.collect() == []
 
 
 def test_utf8_bom_stripped_from_header(spark, tmp_path):
@@ -475,3 +484,126 @@ def test_comment_collect_plan_is_top_k(spark, tmp_path):
     plan = buf.getvalue()
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan  # no shuffle: per-task heaps + driver merge
+
+
+#: content + dialect whose scan once depended on whether ANOTHER row
+#: embedded a line terminator; comments keep the record's own text
+PARITY_CASES = {
+    "quoted_first_cell_is_data": (
+        'a,b\n"#quoted",1\n2,x\n', {"commentPrefix": "#"},
+        [], [(1, 2, "#quoted", "1"), (2, 3, "2", "x")]),
+    "skipped_row_keeps_its_text": (
+        'skip,"a,b"\na,b\n1,2\n', {"skipRows": 1},
+        ['skip,"a,b"'], [(1, 3, "1", "2")]),
+    "header_region_comment": (
+        "a,b\n#c,d\n1,2\n", {"headerRowCount": 2, "commentPrefix": "#"},
+        ["c,d"], [(1, 3, "1", "2")]),
+    "bare_cr_stays_in_cell": (
+        "a,b\nx\ry,1\n", {}, [], [(1, 2, "x\ry", "1")]),
+    "utf8_bom_dropped": ("\ufeffa,b\n1,2\n", {}, [], [(1, 2, "1", "2")]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PARITY_CASES))
+def test_line_and_record_framing_scan_alike(spark, tmp_path, monkeypatch,
+                                            name):
+    """The same rows scan the same whether the line framer or record
+    framing reads the file: appending a row whose quoted cell embeds LF
+    sends the file to record framing, and the header titles, comments
+    and the other data rows stay as they were."""
+    from rdf_tabular_spark.sources import framing
+
+    content, dialect, comments, rows = PARITY_CASES[name]
+    framed = []
+    real = framing.frame_records
+
+    def recording(*args, **kwargs):
+        framed.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(framing, "frame_records", recording)
+    scans = []
+    for sub, text in (("line", content), ("record", content + '3,"p\nq"\n')):
+        (tmp_path / sub).mkdir()
+        scan, _ = _scan(spark, tmp_path / sub, text, dialect)
+        got = sorted((r["_row"], r["_sourceRow"], r["_c0"], r["_c1"])
+                     for r in scan.df.collect())
+        scans.append((scan.header_titles, scan.comments, got))
+    assert framed == [str(tmp_path / "record" / "t.csv")]
+    line, record = scans
+    assert record[2][-1][2:] == ("3", "p\nq")
+    assert (record[0], record[1], record[2][:-1]) == line
+    assert line[0] == ["a", "b"]
+    assert (line[1], line[2]) == (comments, rows)
+
+
+@pytest.mark.parametrize("tail,more_rows", [
+    ("", []),
+    # outside quotes a `\` is literal: the LF after `C:\tmp\` ends its
+    # record (univocity, too, escapes only inside quoted values)
+    ("C:\\tmp\\\nnext,row\n",
+     [(2, "C:\\tmp\\", None), (3, "next", "row")]),
+])
+def test_backslash_escape_with_embedded_newline(spark, tmp_path, tail,
+                                                more_rows):
+    """doubleQuote false: a backslash-escaped quote does not close the
+    quoted cell, so the LF after it stays inside the cell."""
+    scan, _ = _scan(spark, tmp_path, 'a,b\n"x\\"y\nq",1\n' + tail,
+                    {"doubleQuote": False})
+    assert scan.header_titles == ["a", "b"]
+    assert [(r["_row"], r["_c0"], r["_c1"]) for r in scan.df.collect()] \
+        == [(1, 'x"y\nq', "1")] + more_rows
+
+
+def test_escaped_quote_stays_on_line_framer(spark, tmp_path, monkeypatch):
+    """doubleQuote false without an embedded terminator: an escaped quote
+    leaves the line's quote count even, so the line framer reads it."""
+    from rdf_tabular_spark.sources import csv_source, framing
+
+    def no_record_framing(*args, **kwargs):
+        raise AssertionError("routed to record framing")
+
+    monkeypatch.setattr(framing, "frame_records", no_record_framing)
+    monkeypatch.setattr(csv_source, "_split_records", no_record_framing)
+    scan, _ = _scan(spark, tmp_path, 'a,b\n"x\\"y",1\n',
+                    {"doubleQuote": False})
+    assert [(r["_c0"], r["_c1"]) for r in scan.df.collect()] == [
+        ('x"y', "1")]
+
+
+@pytest.mark.parametrize("terms,double_quote,text", [
+    (["\r\n", "\n"], True, 'a,b\r\n"x\r\ny",1\r\n\n2,"""q"""\n'),
+    (["||"], True, 'a||"b||c"||d|||e||'),
+    (["\n"], False, 'a\n"x\\"\ny\\\\",1\nC:\\\nz\\'),
+])
+def test_split_file_reads_in_chunks_alike(tmp_path, terms, double_quote,
+                                          text):
+    """The splitter gives the same records whatever its read size, also
+    when a terminator or an escape straddles two reads."""
+    from rdf_tabular_spark.sources.csv_source import _split_file
+
+    p = tmp_path / "s.csv"
+    p.write_bytes(text.encode())
+    whole = list(_split_file(str(p), "utf-8", '"', terms, double_quote))
+    assert len(whole) > 2
+    for chunk in (1, 2, 3, 5):
+        assert list(_split_file(str(p), "utf-8", '"', terms, double_quote,
+                                chunk)) == whole
+
+
+def test_utf16_cell_with_embedded_newline(spark, tmp_path):
+    """A UTF-16 file (not byte-transparent) decodes with the dialect's
+    encoding before framing; a quoted LF stays inside its cell."""
+    from rdf_tabular_spark.csvw.metadata import parse_metadata
+    from rdf_tabular_spark.sources.csv_source import read_table
+
+    p = tmp_path / "u16.csv"
+    p.write_bytes('v,w\n"Zoë\nZürich",2\n'.encode("utf-16"))
+    table = parse_metadata(
+        {"url": "http://example.org/u16.csv",
+         "dialect": {"encoding": "utf-16"}},
+        base="http://example.org/u16.csv").tables[0]
+    scan = read_table(spark, table, str(p))
+    assert scan.header_titles == ["v", "w"]
+    assert [(r["_row"], r["_c0"], r["_c1"]) for r in scan.df.collect()] \
+        == [(1, "Zoë\nZürich", "2")]

@@ -9,12 +9,13 @@ import json
 import os
 import shutil
 
-from tests.conftest import FIXTURE_DIR
+from tests.conftest import FIXTURE_DIR, needs_reference
 from tests.ttl import compare_graphs, parse_ttl, spark_triples
 
 BASE = "http://example.org/"
 
 
+@needs_reference
 def test_sidecar_discovery_reproduces_tree_ops(spark):
     """Pointing at the bare tree-ops.csv (no metadata argument) finds the
     sidecar tree-ops.csv-metadata.json and reproduces the reference's
@@ -143,6 +144,7 @@ def test_direct_csv_no_base_uses_file_url(spark, tmp_path):
     assert all(r["pred"].startswith("file://") for r in rows)
 
 
+@needs_reference
 def test_sidecar_discovery_matches_explicit_metadata(spark, tmp_path):
     """Discovery result == passing the sidecar explicitly (same group, same
     triples)."""

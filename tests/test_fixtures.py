@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from tests.conftest import FIXTURE_DIR
+from tests.conftest import FIXTURE_DIR, needs_reference
 from tests.ttl import compare_graphs, parse_ttl, spark_triples
 
 BASE = "http://example.org/"
@@ -32,18 +32,22 @@ def run_fixture(spark, metadata_file: str, golden_ttl: str, url_map=None,
     return report
 
 
+@needs_reference
 def test_tree_ops_minimal(spark):
     run_fixture(spark, "tree-ops.csv-metadata.json", "tree-ops-minimal.ttl")
 
 
+@needs_reference
 def test_tree_ops_ext_minimal(spark):
     run_fixture(spark, "tree-ops-ext.json", "tree-ops-ext-minimal.ttl")
 
 
+@needs_reference
 def test_tree_ops_virtual_minimal(spark):
     run_fixture(spark, "tree-ops-virtual.json", "tree-ops-virtual-minimal.ttl")
 
 
+@needs_reference
 def test_countries_minimal(spark):
     run_fixture(spark, "countries.json", "countries-minimal.ttl", url_map={
         "http://example.org/countries.csv": os.path.join(FIXTURE_DIR, "countries.csv"),
@@ -51,6 +55,7 @@ def test_countries_minimal(spark):
     })
 
 
+@needs_reference
 def test_country_codes_and_names_minimal(spark):
     """No metadata: embedded header only (F6)."""
     from rdf_tabular_spark.reader import to_triples
@@ -82,15 +87,18 @@ def run_fixture_std(spark, metadata_file: str, golden_ttl: str, url_map=None):
     assert report["precision"] == 1.0 and report["recall"] == 1.0, report
 
 
+@needs_reference
 def test_tree_ops_standard(spark):
     """T2 envelope + T4 common properties (reader.rb:170-179, 258-298)."""
     run_fixture_std(spark, "tree-ops.csv-metadata.json", "tree-ops-standard.ttl")
 
 
+@needs_reference
 def test_tree_ops_ext_standard(spark):
     run_fixture_std(spark, "tree-ops-ext.json", "tree-ops-ext-standard.ttl")
 
 
+@needs_reference
 def test_country_codes_and_names_standard(spark):
     from rdf_tabular_spark.reader import to_triples
 
@@ -114,16 +122,19 @@ ROLES_URL_MAP = {
 }
 
 
+@needs_reference
 def test_roles_minimal(spark):
     """S10 multi-table fan-out + C15 suppressOutput table + schema-by-URL
     (roles.json: tableSchema: "senior-roles.json")."""
     run_fixture(spark, "roles.json", "roles-minimal.ttl", url_map=ROLES_URL_MAP)
 
 
+@needs_reference
 def test_roles_standard(spark):
     run_fixture_std(spark, "roles.json", "roles-standard.ttl", url_map=ROLES_URL_MAP)
 
 
+@needs_reference
 def test_countries_standard(spark):
     run_fixture_std(spark, "countries.json", "countries-standard.ttl", url_map={
         BASE + "countries.csv": os.path.join(FIXTURE_DIR, "countries.csv"),
@@ -147,25 +158,30 @@ def run_json_fixture(spark, metadata_file: str, golden_json: str,
     assert got == want
 
 
+@needs_reference
 def test_json_tree_ops_minimal(spark):
     run_json_fixture(spark, "tree-ops.csv-metadata.json", "tree-ops-minimal.json")
 
 
+@needs_reference
 def test_json_tree_ops_standard(spark):
     run_json_fixture(spark, "tree-ops.csv-metadata.json",
                      "tree-ops-standard.json", mode="standard")
 
 
+@needs_reference
 def test_json_tree_ops_ext_minimal(spark):
     run_json_fixture(spark, "tree-ops-ext.json", "tree-ops-ext-minimal.json")
 
 
+@needs_reference
 def test_json_tree_ops_virtual_minimal(spark):
     """J3 single-reference nesting resolved statically from templates."""
     run_json_fixture(spark, "tree-ops-virtual.json",
                      "tree-ops-virtual-minimal.json")
 
 
+@needs_reference
 def test_json_countries_minimal(spark):
     run_json_fixture(spark, "countries.json", "countries-minimal.json", url_map={
         BASE + "countries.csv": os.path.join(FIXTURE_DIR, "countries.csv"),
@@ -176,6 +192,7 @@ def test_json_countries_minimal(spark):
 # ---- validation mode: PK/FK integrity (A1/J1) ---------------------------
 
 
+@needs_reference
 def test_pk_violation_test232(spark):
     """Reference fixture test232: duplicate primary-key values are detected
     (reader.rb:652-660; reader_spec.rb:267-290)."""
@@ -195,6 +212,7 @@ def test_pk_violation_test232(spark):
     assert len(v) == 1 and v[0]["PK"] == "1" and v[0]["n"] == 2
 
 
+@needs_reference
 def test_fk_integrity_roles(spark):
     """J1: junior-roles FKs into senior-roles + professions are consistent
     (reader_spec.rb:292-300); a poisoned key is caught by the anti-join."""
@@ -238,6 +256,7 @@ def test_fk_integrity_roles(spark):
     assert len(bad) >= 1 and bad[0]["k0"] == "no-such-key"
 
 
+@needs_reference
 def test_validate_api_test232_and_roles(spark):
     """Top-level validation mode: test232 yields exactly one pk_duplicate
     problem; the consistent roles group yields none."""
@@ -260,6 +279,7 @@ def test_validate_api_test232_and_roles(spark):
     assert problems == [], problems
 
 
+@needs_reference
 def test_ntriples_roundtrip(spark):
     """S11 RDF text sink: serialize tree-ops minimal triples to N-Triples,
     re-parse with the Turtle parser, compare as graphs."""
@@ -277,6 +297,7 @@ def test_ntriples_roundtrip(spark):
     assert report["precision"] == 1.0 and report["recall"] == 1.0, report
 
 
+@needs_reference
 def test_countries_csv_direct_minimal(spark):
     """countries.csv opened directly, no found metadata: default TableGroup
     + embedded header (discovery step 4/5, metadata.rb:237-241) —
@@ -295,6 +316,7 @@ def test_countries_csv_direct_minimal(spark):
     assert report["precision"] == 1.0 and report["recall"] == 1.0, report
 
 
+@needs_reference
 def test_countries_csv_direct_standard(spark):
     from rdf_tabular_spark.reader import to_triples
 
@@ -310,16 +332,19 @@ def test_countries_csv_direct_standard(spark):
     assert report["precision"] == 1.0 and report["recall"] == 1.0, report
 
 
+@needs_reference
 def test_tree_ops_virtual_standard(spark):
     run_fixture_std(
         spark, "tree-ops-virtual.json", "tree-ops-virtual-standard.ttl")
 
 
+@needs_reference
 def test_json_roles_minimal(spark):
     run_json_fixture(spark, "roles.json", "roles-minimal.json",
                      url_map=ROLES_URL_MAP)
 
 
+@needs_reference
 def test_json_countries_csv_direct_minimal(spark):
     from rdf_tabular_spark.reader import to_json
 
@@ -348,6 +373,7 @@ def run_html_fixture(spark, html_file: str, golden_ttl: str, mode: str):
     assert report["precision"] == 1.0 and report["recall"] == 1.0, report
 
 
+@needs_reference
 def test_countries_html_minimal(spark):
     """S7: csvm+json script block is the metadata; tables are external CSVs
     (reader.rb:94-107)."""
@@ -355,11 +381,13 @@ def test_countries_html_minimal(spark):
                      "countries_html-minimal.ttl", "minimal")
 
 
+@needs_reference
 def test_countries_html_standard(spark):
     run_html_fixture(spark, "countries.html",
                      "countries_html-standard.ttl", "standard")
 
 
+@needs_reference
 def test_countries_embed_html_minimal(spark):
     """S7: fragment table urls (#countries) read the <th>/<td> rows of the
     HTML document itself (metadata.rb:851-873)."""
@@ -367,11 +395,13 @@ def test_countries_embed_html_minimal(spark):
                      "countries_embed-minimal.ttl", "minimal")
 
 
+@needs_reference
 def test_countries_embed_html_standard(spark):
     run_html_fixture(spark, "countries_embed.html",
                      "countries_embed-standard.ttl", "standard")
 
 
+@needs_reference
 def test_json_countries_html_standard(spark):
     from rdf_tabular_spark.reader import to_json
 
@@ -382,6 +412,7 @@ def test_json_countries_html_standard(spark):
     assert got == want
 
 
+@needs_reference
 def test_json_countries_embed_html_minimal(spark):
     from rdf_tabular_spark.reader import to_json
 
@@ -392,6 +423,7 @@ def test_json_countries_embed_html_minimal(spark):
     assert got == want
 
 
+@needs_reference
 def test_doap_self_description(spark):
     """The gem's own DOAP record (etc/doap.csv + metadata -> etc/doap.ttl):
     a real-world table exercising fixed aboutUrl (all rows one subject),
@@ -446,6 +478,7 @@ def test_row_titles_standard_mode(spark):
     assert row_nodes == rownum_nodes
 
 
+@needs_reference
 def test_tree_ops_html_csvm_block_minimal(spark):
     """tree-ops.html: S7 HTML input whose application/csvm+json block
     points at the EXTERNAL tree-ops.csv (unlike countries_embed.html's

@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from tests.conftest import FIXTURE_DIR
+from tests.conftest import FIXTURE_DIR, needs_reference
 
 BASE = "http://example.org/"
 SF_DIR = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.01"
@@ -24,6 +24,7 @@ def _read_jsonl(path: str) -> list[str]:
     return lines
 
 
+@needs_reference
 def test_jsonl_minimal_matches_in_memory_document(spark, tmp_path):
     """Concatenated JSONL part files == to_json's minimal object list,
     object for object, in document order."""
@@ -42,6 +43,7 @@ def test_jsonl_minimal_matches_in_memory_document(spark, tmp_path):
     assert got == want
 
 
+@needs_reference
 def test_jsonl_standard_row_envelopes(spark, tmp_path):
     """Standard mode: one row envelope per line with url/rownum/describes
     matching the in-memory standard document's row array."""

@@ -121,6 +121,12 @@ def _components(spark):
     return graph.components(_triples(spark), max_iter=6)
 
 
+def _eccentricity_probe(spark):
+    # not a loop of its own: two sssp_hops runs over one checkpoint
+    from rdf_tabular_spark.kg import graph
+    return graph.eccentricity_probe(_edges(spark), max_hops=6)
+
+
 def _connected_components(spark):
     from rdf_tabular_spark.kg import link
     mentions = spark.createDataFrame([(n,) for n in CHAIN], "mention string")
@@ -161,6 +167,7 @@ CASES = {
     "louvain": (_louvain, 3),
     "components": (_components, 1),
     "connected_components": (_connected_components, 1),
+    "eccentricity_probe": (_eccentricity_probe, 1),
     "earliest_arrival": (_earliest_arrival, 1),
     "latest_departure": (_latest_departure, 1),
     "owl_closure": (_owl_closure, 1),

@@ -497,3 +497,46 @@ def test_drained_sink_is_keyed_on_the_streaming_code(spark, tmp_path,
     changed.write_bytes(open(incremental.__file__, "rb").read() + b"\n#\n")
     monkeypatch.setattr(incremental, "__file__", str(changed))
     assert drain("second") == ["second"]
+
+
+def test_drained_sink_drops_parts_the_commit_log_does_not_list(
+        spark, tmp_path, monkeypatch):
+    """A retried task leaves its failed attempt's part file in a streaming
+    file sink; only the _spark_metadata commit log tells it apart. The
+    drained sink keeps the committed part files only: no row repeats."""
+    import json
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("us")),
+                             "user_id": [1]}), str(sf / "events.parquet"))
+
+    class Drained:
+        def awaitTermination(self, timeout):
+            return True
+
+    def runner(spark, src, sink, ckpt, schema):
+        os.makedirs(os.path.join(sink, "_spark_metadata"))
+        rows = pa.table({"tag": ["a", "b"]})
+        committed = os.path.join(sink, "part-00000-c000.snappy.parquet")
+        pq.write_table(rows, committed)
+        # the first attempt of a retried task, never committed
+        pq.write_table(rows, os.path.join(sink,
+                                          "part-00000-a1-c000.snappy.parquet"))
+        entry = {"path": "file://" + committed, "size": 1, "isDir": False,
+                 "modificationTime": 0, "blockReplication": 1,
+                 "blockSize": 1, "action": "add"}
+        with open(os.path.join(sink, "_spark_metadata", "0"), "w") as f:
+            f.write("v1\n" + json.dumps(entry) + "\n")
+        return Drained()
+
+    got = E._drained_stream_sink(spark, str(sf), "retried", runner)
+    assert sorted(r.tag for r in got.collect()) == ["a", "b"]

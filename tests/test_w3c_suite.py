@@ -27,7 +27,7 @@ import os
 
 import pytest
 
-from tests.conftest import FIXTURE_DIR
+from tests.conftest import FIXTURE_DIR, REFERENCE_DIR, needs_reference
 from tests.ttl import compare_graphs, parse_ttl, spark_triples
 
 BASE = "http://example.org/"
@@ -73,7 +73,11 @@ def _collect_entries():
     return out
 
 
-ENTRIES = _collect_entries()
+ENTRIES = [
+    pytest.param(*e, id=e[0]["id"].split("#")[-1],
+                 marks=needs_reference if e[1].startswith(REFERENCE_DIR)
+                 else ())
+    for e in _collect_entries()]
 
 
 _URL_MAPS: dict[tuple[str, str], dict[str, str]] = {}
@@ -94,8 +98,7 @@ def _url_map(data_dir: str, base: str) -> dict[str, str]:
     return _URL_MAPS[key]
 
 
-@pytest.mark.parametrize("entry,data_dir,base", ENTRIES,
-                         ids=[e[0]["id"].split("#")[-1] for e in ENTRIES])
+@pytest.mark.parametrize("entry,data_dir,base", ENTRIES)
 def test_w3c_entry(spark, entry, data_dir, base):
     from rdf_tabular_spark.reader import to_json, to_triples, validate
 
