@@ -8,7 +8,7 @@ prints ONE JSON line::
      "queries": {...per-query sec...}, "sf": 0.1,
      "kg_triples": N, "kg_triples_per_sec": N}
 
-``--scaling SF [--pair N,M] [--stage extract]`` mode (run manually,
+``--scaling SF [--pair N,M] [--stage full_ids|extract]`` mode (run manually,
 results recorded in BASELINE.md): runs the north-rule KG job at two
 parallelism levels (default local[2] vs local[8], the physically-backed
 N-vs-4N stand-in) in fresh confined JVMs and prints throughput at both
@@ -151,11 +151,17 @@ def ensure_kg_source(spark, n_files: int) -> str:
     return path
 
 
-def kg_job(spark, n_files: int, stage: str = "full"):
+def kg_job(spark, n_files: int, stage: str = "full_forced"):
     """The north-rule job: source table -> extract -> triples -> link ->
     canonical graph. Returns (n_rows, wall_s); source materialization is
     not timed (it is the input, not the pipeline).
 
+    *stage*="full_forced" evaluates every output column of the triple
+    stream (:func:`force_eval`); "full_ids" does the same for the 8B/term
+    id triples of kg/termdict.py — the pair that discriminates the
+    dictionary design's memory-bus claim. A plain COUNT is no basis: it
+    lets Catalyst prune the output columns, so its plan holds neither
+    url_encode (IRI construction) nor xxhash64 (id encoding).
     *stage*="extract" times only the scan + mapInPandas extraction — the
     stage that dominates a real 100 TB run (content bytes >> extracted
     rows) and whose scaling is CPU-bound rather than bound by the one
@@ -163,6 +169,8 @@ def kg_job(spark, n_files: int, stage: str = "full"):
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from rdf_tabular_spark.kg.pipeline import build_kg
 
+    if stage not in ("full_forced", "full_ids", "extract"):
+        raise ValueError(f"unknown stage {stage!r}")
     src_path = ensure_kg_source(spark, n_files)
     src = spark.read.parquet(src_path)
     # the pipeline persists its extraction stage; Spark's cache manager
@@ -176,27 +184,11 @@ def kg_job(spark, n_files: int, stage: str = "full"):
         n = extract.extract_structures(src).count()
         return n, time.time() - t0
     triples = build_kg(src)["triples"]
-    # Measurement bases (r5 finding, the r3 headline lesson recurring):
-    # a COUNT over the triple stream lets Catalyst PRUNE the output
-    # columns — the optimized plan contains neither url_encode (IRI
-    # construction) nor xxhash64 (id encoding), so "full" and
-    # "full_ids" counts time the IDENTICAL job (extract + link + dedup
-    # + row counting) and differences between them are host noise.
-    # stage="full" keeps the count basis — it is the r1-r5 comparable
-    # series. The *_forced stages force_eval every output column and
-    # are the honest PRODUCT measurement: "full_forced" materializes
-    # the ~60-180B/row IRI string triples, "full_ids" the 8B/term id
-    # triples of kg/termdict.py — the pair that actually discriminates
-    # the dictionary design's memory-bus claim.
-    if stage == "full_forced":
-        return force_eval(triples), time.time() - t0
     if stage == "full_ids":
         from rdf_tabular_spark.kg import termdict
 
-        return (force_eval(termdict.encode_triples(triples)),
-                time.time() - t0)
-    n = triples.count()
-    return n, time.time() - t0
+        triples = termdict.encode_triples(triples)
+    return force_eval(triples), time.time() - t0
 
 
 def force_eval(df) -> int:
@@ -350,7 +342,7 @@ def run_late(sf_dir: str, cpus: int) -> dict:
 
 
 def run_scaling(sf: float, pair: tuple[int, int] = (2, 8),
-                stage: str = "full") -> dict:
+                stage: str = "full_forced") -> dict:
     """Same KG job, same input, at local[N] and local[4N] in fresh
     confined JVMs (ActiveProcessorCount + GC threads = N).
 
@@ -395,7 +387,7 @@ def main() -> None:
             j = sys.argv.index("--pair")
             lo, hi = sys.argv[j + 1].split(",")
             pair = (int(lo), int(hi))
-        stage = "full"
+        stage = "full_forced"
         if "--stage" in sys.argv:
             stage = sys.argv[sys.argv.index("--stage") + 1]
         out = run_scaling(sf, pair, stage)

@@ -7,8 +7,9 @@ _sourceColumn`` (reference metadata.rb:1950-1962).
 Two paths:
 
 - :func:`compile_template` — the common forms (``{var}``, ``{+var}``,
-  ``{#var}``, multiple vars, literals) compile to **native Spark column
-  expressions** (concat + percent-encode), staying inside codegen.
+  ``{#var}``, multiple vars, literals) compile to **native Spark SQL
+  expressions** (concat + percent-encode, rendered as text by
+  :mod:`..expr`), staying inside codegen.
 - :func:`expand` — a pure-Python RFC 6570 expander covering all operators;
   used for driver-side constant folding, tests, and as the pandas-UDF
   fallback for exotic operators (``{/x*}``, ``{?x}``, ...).
@@ -19,8 +20,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from .. import expr as S
+from ..expr import Expr
 
 _EXPR_RE = re.compile(r"\{([+#./;?&]?)([^}]*)\}")
 
@@ -162,7 +163,7 @@ _RESERVED_ESCAPES = [
 ]
 
 
-def pct_encode_col(col: Column, keep_reserved: bool) -> Column:
+def pct_encode(col: Expr, keep_reserved: bool) -> Expr:
     """Percent-encode a string column RFC6570-style, JVM-side.
 
     ``url_encode`` is form-encoding; patch its deltas (space->'+', '~'
@@ -170,47 +171,47 @@ def pct_encode_col(col: Column, keep_reserved: bool) -> Column:
     reserved set (and existing %XX triplets) passes through, but everything
     else — spaces, non-ASCII — must still be encoded (RFC 6570 §3.2.3), so
     we fully encode then un-encode the reserved characters."""
-    enc = F.url_encode(col)
-    enc = F.replace(enc, F.lit("+"), F.lit("%20"))  # '+' here is a space
-    enc = F.replace(enc, F.lit("%7E"), F.lit("~"))
+    enc = S.url_encode(col)
+    enc = S.replace(enc, S.lit("+"), S.lit("%20"))  # '+' here is a space
+    enc = S.replace(enc, S.lit("%7E"), S.lit("~"))
     if keep_reserved:
         for ch, esc in _RESERVED_ESCAPES:
-            enc = F.replace(enc, F.lit(esc), F.lit(ch))
+            enc = S.replace(enc, S.lit(esc), S.lit(ch))
         # %25 last, and only when a valid pct-triplet follows: "%41" in the
         # input passes through as %41, but a bare '%' ("100%") must stay
         # %25 (RFC 6570 §3.2.3) — byte-parity with _pct above
-        enc = F.regexp_replace(enc, r"%25([0-9A-Fa-f]{2})", r"%$1")
+        enc = S.regexp_replace(enc, r"%25([0-9A-Fa-f]{2})", r"%$1")
     else:
-        enc = F.replace(enc, F.lit("*"), F.lit("%2A"))
+        enc = S.replace(enc, S.lit("*"), S.lit("%2A"))
     return enc
 
 
-def compile_template(template: str, bindings: dict[str, Column]) -> Column:
-    """Compile an RFC 6570 template to a Spark column expression.
+def compile_template(template: str, bindings: dict[str, Expr]) -> Expr:
+    """Compile an RFC 6570 template to a Spark SQL expression.
 
-    *bindings* maps variable name -> string Column (already the cell's
+    *bindings* maps variable name -> string expression (already the cell's
     canonical lexical value). Unbound variables expand to ''. Templates the
     native path can't express must be routed by the caller to the pandas-UDF
     fallback (see :func:`is_native_compilable`)."""
-    pieces: list[Column] = []
+    pieces: list[Expr] = []
     pos = 0
     for m in _EXPR_RE.finditer(template):
         if m.start() > pos:
-            pieces.append(F.lit(template[pos : m.start()]))
+            pieces.append(S.lit(template[pos : m.start()]))
         op, spec = m.group(1), m.group(2)
         keep_reserved = op in ("+", "#")
-        var_cols: list[Column] = []
+        var_cols: list[Expr] = []
         for var in _parse_varlist(spec):
             if var.name not in bindings:
                 continue
             var_cols.append(
-                F.coalesce(pct_encode_col(bindings[var.name], keep_reserved), F.lit("")))
+                S.coalesce(pct_encode(bindings[var.name], keep_reserved), S.lit("")))
         if var_cols:
-            body = F.concat_ws(",", *var_cols)
-            pieces.append(F.concat(F.lit(op if op == "#" else ""), body))
+            body = S.concat_ws(",", *var_cols)
+            pieces.append(S.concat(S.lit(op if op == "#" else ""), body))
         pos = m.end()
     if pos < len(template):
-        pieces.append(F.lit(template[pos:]))
+        pieces.append(S.lit(template[pos:]))
     if not pieces:
-        return F.lit("")
-    return F.concat(*pieces)
+        return S.lit("")
+    return S.concat(*pieces)

@@ -5,9 +5,11 @@ module get one canonical IRI. Pipeline — all set-level, skew-aware:
 
 1. distinct mentions (tiny vs. the triple stream: map-side-combined distinct)
 2. normalize + character-3-gram shingles (pure column expressions)
-3. minhash signatures: B bands x R rows, each minhash = ``array_min`` over
-   ``hash(shingle, seed)`` — native, no UDF (the reference has no analog;
-   this generalizes its cross-table IRI linking J2 into a similarity join)
+3. minhash signatures: B bands x R rows, each minhash the minimum of
+   ``hash(shingle, seed)`` over the shingles, all B x R kept by one
+   ``aggregate`` fold whose step ``zip_with``-s the running minima with
+   ``least`` — native, no UDF (the reference has no analog; this
+   generalizes its cross-table IRI linking J2 into a similarity join)
 4. LSH blocking: explode band keys, self-join per (band, key) bucket;
    bucket sizes are capped (hot-bucket guard) before the pair join
 5. verify, then dedup: every joined candidate row gets its exact Jaccard

@@ -2,8 +2,13 @@
 obj_lang) rows (reference reader.rb:258-343).
 
 Per row we assemble an ``array<struct<...>>`` of triples across all columns
-with pure column expressions, then ``explode`` — one narrow shuffle-free
-projection. Blank nodes are **deterministic skolem ids**
+with pure SQL expressions, then ``explode`` — one narrow shuffle-free
+projection. The whole array is rendered as SQL text on the driver
+(:mod:`..expr`) and crosses the py4j bridge in one ``selectExpr``. Template
+variables are bound once per table and each distinct about/property/value
+template expands once (:func:`template_compiler`); only templates the native
+path cannot express call a registered pandas UDF. Blank nodes are
+**deterministic skolem ids**
 (``_:r<sha256(table_url, sourceRow)>``) so distributed dedup/resume and
 re-runs are idempotent (SURVEY.md §7.4-1); fixture comparison canonicalizes
 both sides.
@@ -14,8 +19,7 @@ from __future__ import annotations
 import re
 from urllib.parse import unquote, urljoin
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from .. import TRIPLE_COLUMNS
 from ..csvw.context import PREFIXES, expand_iri
@@ -27,7 +31,9 @@ from ..csvw.datatypes import (
     RDF_TYPE,
     XSD,
 )
+from .. import expr as S
 from ..csvw.metadata import CompiledColumn, CompiledTable
+from ..expr import Expr
 from .cells import cell_binding, cell_binding_arr, cell_values
 from ..csvw.templates import (
     compile_template,
@@ -53,22 +59,22 @@ def _base_dir(base: str) -> str:
     return no_frag.rsplit("/", 1)[0] + "/" if "/" in no_frag else no_frag
 
 
-def triple(subj: Column, pred: Column, obj: Column, *, is_iri: bool | Column,
-           dt: Column | None = None, lang: Column | None = None) -> Column:
-    return F.struct(
+def triple(subj: Expr, pred: Expr, obj: Expr, *, is_iri: bool | Expr,
+           dt: Expr | None = None, lang: Expr | None = None) -> Expr:
+    return S.struct(
         subj.cast("string").alias("subj"),
         pred.cast("string").alias("pred"),
         obj.cast("string").alias("obj"),
-        (F.lit(is_iri) if isinstance(is_iri, bool) else is_iri).alias("obj_is_iri"),
-        (dt if dt is not None else F.lit(None).cast("string")).alias("obj_datatype"),
-        (lang if lang is not None else F.lit(None).cast("string")).alias("obj_lang"),
+        (S.lit(is_iri) if isinstance(is_iri, bool) else is_iri).alias("obj_is_iri"),
+        (dt if dt is not None else S.lit(None).cast("string")).alias("obj_datatype"),
+        (lang if lang is not None else S.lit(None).cast("string")).alias("obj_lang"),
     )
 
 
-def skolem(*parts: Column | str, prefix: str = "_:b") -> Column:
+def skolem(*parts: Expr | str, prefix: str = "_:b") -> Expr:
     """Deterministic blank-node id from its identifying parts."""
-    cols = [F.lit(p) if isinstance(p, str) else p.cast("string") for p in parts]
-    return F.concat(F.lit(prefix), F.substring(F.sha2(F.concat_ws("\u0000", *cols), 256), 1, 20))
+    cols = [S.lit(p) if isinstance(p, str) else p.cast("string") for p in parts]
+    return S.concat(S.lit(prefix), S.substring(S.sha2(S.concat_ws("\u0000", *cols), 256), 1, 20))
 
 
 def skolem_str(*parts: object, prefix: str = "_:b") -> str:
@@ -80,15 +86,15 @@ def skolem_str(*parts: object, prefix: str = "_:b") -> str:
 
 
 def compile_iri_template(
-    template: str | None, bindings: dict[str, Column], base: str
-) -> Column | None:
+    template: str | None, bindings: dict[str, Expr], base: str
+) -> Expr | None:
     """Compile an about/property/value URL template to a resolved-IRI column:
     RFC 6570 expansion, then pname expansion / document-relative resolution
     against the table url (reference Cell#set_urls metadata.rb:1950-1962)."""
     if template is None:
         return None
     if "{" not in template:
-        return F.lit(expand_iri(template, base=base))
+        return S.lit(expand_iri(template, base=base))
 
     # a compact-IRI template prefix (e.g. "schema:{_name}") expands statically
     static_prefix = template.split("{", 1)[0]
@@ -128,38 +134,37 @@ def compile_iri_template(
         # as-is, never resolved document-relative (JSON-LD expand_iri)
         return expanded
     if static_prefix.startswith("#"):
-        return F.concat(F.lit(_base_no_fragment(base)), expanded)
+        return S.concat(S.lit(_base_no_fragment(base)), expanded)
     if static_prefix == "":
         # resolution shape depends on the expanded value — runtime dispatch
         return (
-            F.when(expanded == "", F.lit(base))
+            S.when(expanded == "", S.lit(base))
             .when(expanded.startswith("_:"), expanded)
             .when(expanded.rlike(_SCHEME_RE), expanded)
-            .when(expanded.startswith("#"), F.concat(F.lit(_base_no_fragment(base)), expanded))
-            .otherwise(F.concat(F.lit(_base_dir(base)), expanded))
+            .when(expanded.startswith("#"), S.concat(S.lit(_base_no_fragment(base)), expanded))
+            .otherwise(S.concat(S.lit(_base_dir(base)), expanded))
         )
-    return F.concat(F.lit(_base_dir(base)), expanded)
+    return S.concat(S.lit(_base_dir(base)), expanded)
 
 
-def _fallback_expand(template: str, bindings: dict[str, Column]) -> Column:
+def _fallback_expand(template: str, bindings: dict[str, Expr]) -> Expr:
     """Arrow-batched pandas UDF fallback for RFC 6570 operators the native
     path can't express ({?x}, {/x*}, ...). Vectorized — never per-row Python
-    in the sense of a row-at-a-time Python UDF."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    in the sense of a row-at-a-time Python UDF. The UDF is registered in
+    the active session under a name derived from the template and its
+    bound variables, so the SQL text can call it."""
+    import hashlib
 
+    import pandas as pd
     from pyspark.sql import SparkSession
+    from pyspark.sql.functions import pandas_udf
 
     from ..csvw.templates import expand as py_expand
     from ..deploy import ensure_py_files
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        ensure_py_files(active)
-
     names = [n for n in template_variables(template) if n in bindings]
     if not names:
-        return F.lit(py_expand(template, {}))
+        return S.lit(py_expand(template, {}))
 
     from typing import Iterator, Tuple
 
@@ -182,27 +187,45 @@ def _fallback_expand(template: str, bindings: dict[str, Column]) -> Column:
         "it": Iterator[Tuple[pd.Series, ...]],
         "return": Iterator[pd.Series],
     }
-    return pandas_udf(_expand, "string")(*[bindings[n] for n in names])
+    spark = SparkSession.active()
+    ensure_py_files(spark)
+    key = "\u0000".join([template, *names]).encode("utf-8")
+    fn = "csvw_template_" + hashlib.sha256(key).hexdigest()[:16]
+    spark.udf.register(fn, pandas_udf(_expand, "string"))
+    return S.call(fn, *[bindings[n] for n in names])
 
 
-def _common_bindings(table: CompiledTable) -> dict[str, Column]:
-    return {
-        "_row": F.col("_row").cast("string"),
-        "_sourceRow": F.col("_sourceRow").cast("string"),
+def template_compiler(table: CompiledTable):
+    """``compile(template, col) -> Expr | None`` over one table: the
+    variable bindings (every column's value, ``_row``, ``_sourceRow``)
+    are built once, and each distinct template expands once, per set of
+    the column-level variables (``_name``, ``_column``, ``_sourceColumn``)
+    it reads."""
+    bindings: dict[str, Expr] = {
+        "_row": S.col("_row").cast("string"),
+        "_sourceRow": S.col("_sourceRow").cast("string"),
     }
-
-
-def _column_bindings(table: CompiledTable, col: CompiledColumn) -> dict[str, Column]:
-    b = _common_bindings(table)
     for c in table.columns:
         if c.separator:
-            b[c.name] = F.array_join(cell_binding_arr(c), ",")
+            bindings[c.name] = S.array_join(cell_binding_arr(c), ",")
         else:
-            b[c.name] = cell_binding(c)
-    b["_name"] = F.lit(unquote(col.name))
-    b["_column"] = F.lit(str(col.number))
-    b["_sourceColumn"] = F.lit(str(col.source_number))
-    return b
+            bindings[c.name] = cell_binding(c)
+    compiled: dict[tuple, Expr | None] = {}
+
+    def compile_(template: str | None, col: CompiledColumn) -> Expr | None:
+        if template is None:
+            return None
+        statics = {"_name": unquote(col.name), "_column": str(col.number),
+                   "_sourceColumn": str(col.source_number)}
+        used = tuple((k, v) for k, v in statics.items()
+                     if k in template_variables(template))
+        if (template, used) not in compiled:
+            compiled[template, used] = compile_iri_template(
+                template, {**bindings, **{k: S.lit(v) for k, v in used}},
+                table.url)
+        return compiled[template, used]
+
+    return compile_
 
 
 def emit_table_triples(
@@ -211,17 +234,16 @@ def emit_table_triples(
 ) -> DataFrame:
     """Cell structs -> triple rows for one table (T1 minimal / T2 standard)."""
     base = table.url
-    default_subject = skolem(table.url, F.col("_sourceRow"), prefix="_:r")
+    iri = template_compiler(table)
+    default_subject = skolem(table.url, S.col("_sourceRow"), prefix="_:r")
 
-    per_column_arrays: list[Column] = []
-    subjects: list[Column] = []
+    per_column_arrays: list[Expr] = []
+    subjects: list[Expr] = []
 
     for col in table.columns:
         values = cell_values(col.name)
-        bindings = _column_bindings(table, col)
-
-        about = compile_iri_template(col.about_url, bindings, base)
-        subject = F.coalesce(about, default_subject) if about is not None else default_subject
+        about = iri(col.about_url, col)
+        subject = S.coalesce(about, default_subject) if about is not None else default_subject
         if col.suppress_output:
             # suppressed cells contribute neither triples nor a
             # csvw:describes subject (reader.rb:308-315 skips before both)
@@ -229,40 +251,40 @@ def emit_table_triples(
         subjects.append(subject)
 
         if col.property_url:
-            pred = compile_iri_template(col.property_url, bindings, base)
+            pred = iri(col.property_url, col)
         else:
-            pred = F.lit(_base_no_fragment(base) + "#" + col.name)
+            pred = S.lit(_base_no_fragment(base) + "#" + col.name)
 
         if col.value_url:
-            value_url = compile_iri_template(col.value_url, bindings, base)
-            emit_cond = F.lit(True) if col.virtual else (F.size(values) > 0)
-            arr = F.when(
+            value_url = iri(col.value_url, col)
+            emit_cond = S.lit(True) if col.virtual else (S.size(values) > 0)
+            arr = S.when(
                 emit_cond & value_url.isNotNull(),
-                F.array(triple(subject, pred, value_url, is_iri=True)),
-            ).otherwise(F.array().cast(f"array<{_triple_struct_ddl()}>"))
+                S.array(triple(subject, pred, value_url, is_iri=True)),
+            ).otherwise(S.array().cast(f"array<{_triple_struct_ddl()}>"))
         elif col.ordered and col.separator:
             # RDF collection: bnode spine with deterministic ids (T3)
             node_at = lambda i: skolem(  # noqa: E731
-                table.url, F.col("_sourceRow"), col.name, i, prefix="_:l")
-            head = F.when(
-                F.size(values) > 0,
-                F.array(triple(subject, pred, node_at(F.lit(0)), is_iri=True)),
-            ).otherwise(F.array(triple(subject, pred, F.lit(RDF_NIL), is_iri=True)))
-            spine = F.flatten(F.transform(
+                table.url, S.col("_sourceRow"), col.name, i, prefix="_:l")
+            head = S.when(
+                S.size(values) > 0,
+                S.array(triple(subject, pred, node_at(S.lit(0)), is_iri=True)),
+            ).otherwise(S.array(triple(subject, pred, S.lit(RDF_NIL), is_iri=True)))
+            spine = S.flatten(S.transform(
                 values,
-                lambda v, i: F.array(
-                    triple(node_at(i), F.lit(RDF_FIRST), v["lex"],
+                lambda v, i: S.array(
+                    triple(node_at(i), S.lit(RDF_FIRST), v["lex"],
                            is_iri=False, dt=v["dt"], lang=v["lang"]),
                     triple(
-                        node_at(i), F.lit(RDF_REST),
-                        F.when(i == F.size(values) - 1, F.lit(RDF_NIL))
+                        node_at(i), S.lit(RDF_REST),
+                        S.when(i == S.size(values) - 1, S.lit(RDF_NIL))
                         .otherwise(node_at(i + 1)),
                         is_iri=True),
                 ),
             ))
-            arr = F.concat(head, spine)
+            arr = S.concat(head, spine)
         else:
-            arr = F.transform(
+            arr = S.transform(
                 values,
                 lambda v: triple(subject, pred, v["lex"], is_iri=False,
                                  dt=v["dt"], lang=v["lang"]),
@@ -270,42 +292,42 @@ def emit_table_triples(
         per_column_arrays.append(arr)
 
     if mode == "standard":
-        row_node = skolem(table.url, F.col("_sourceRow"), prefix="_:row")
-        tnode = F.lit(table_node if table_node is not None else table.id or None)
+        row_node = skolem(table.url, S.col("_sourceRow"), prefix="_:row")
+        tnode = S.lit(table_node if table_node is not None else table.id or None)
         if table_node is None and table.id is None:
             tnode = skolem(table.url, prefix="_:t")
         env = [
-            triple(tnode, F.lit(CSVW_NS + "row"), row_node, is_iri=True),
-            triple(row_node, F.lit(CSVW_NS + "rownum"), F.col("_row"),
-                   is_iri=False, dt=F.lit(XSD + "integer")),
-            triple(row_node, F.lit(RDF_TYPE), F.lit(CSVW_NS + "Row"), is_iri=True),
-            triple(row_node, F.lit(CSVW_NS + "url"),
-                   F.concat(F.lit(_base_no_fragment(base) + "#row="), F.col("_sourceRow")),
+            triple(tnode, S.lit(CSVW_NS + "row"), row_node, is_iri=True),
+            triple(row_node, S.lit(CSVW_NS + "rownum"), S.col("_row"),
+                   is_iri=False, dt=S.lit(XSD + "integer")),
+            triple(row_node, S.lit(RDF_TYPE), S.lit(CSVW_NS + "Row"), is_iri=True),
+            triple(row_node, S.lit(CSVW_NS + "url"),
+                   S.concat(S.lit(_base_no_fragment(base) + "#row="), S.col("_sourceRow")),
                    is_iri=True),
         ]
-        per_column_arrays.append(F.array(*env))
+        per_column_arrays.append(S.array(*env))
         # csvw:describes -> each distinct cell subject
-        describes = F.array_distinct(F.array(*subjects)) if subjects else F.array()
-        per_column_arrays.append(F.transform(
+        describes = S.array_distinct(S.array(*subjects)) if subjects else S.array()
+        per_column_arrays.append(S.transform(
             describes,
-            lambda s: triple(row_node, F.lit(CSVW_NS + "describes"), s, is_iri=True)))
+            lambda s: triple(row_node, S.lit(CSVW_NS + "describes"), s, is_iri=True)))
         # csvw:title from rowTitles
         for rt in table.row_titles:
             rcol = next((c for c in table.columns if c.name == rt), None)
             if rcol is None:
                 continue
-            per_column_arrays.append(F.transform(
+            per_column_arrays.append(S.transform(
                 cell_values(rcol.name),
-                lambda v: triple(row_node, F.lit(CSVW_NS + "title"), v["lex"],
+                lambda v: triple(row_node, S.lit(CSVW_NS + "title"), v["lex"],
                                  is_iri=False, dt=v["dt"], lang=v["lang"])))
 
     if not per_column_arrays:
         return cells_df.sparkSession.createDataFrame([], TRIPLE_SCHEMA)
 
-    all_triples = F.concat(*per_column_arrays) if len(per_column_arrays) > 1 else per_column_arrays[0]
+    all_triples = S.concat(*per_column_arrays) if len(per_column_arrays) > 1 else per_column_arrays[0]
     return (
-        cells_df.select(F.explode(all_triples).alias("t"))
-        .select(*[F.col(f"t.{c}").alias(c) for c in TRIPLE_COLUMNS])
+        cells_df.selectExpr(S.explode(all_triples).alias("t").sql)
+        .selectExpr(*[f"t.{c} AS {c}" for c in TRIPLE_COLUMNS])
     )
 
 

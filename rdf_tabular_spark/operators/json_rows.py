@@ -18,14 +18,16 @@ from __future__ import annotations
 import json
 from collections import Counter
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..csvw.context import PREFIXES, expand_iri
 from ..csvw.datatypes import RDF_TYPE
 from ..csvw.metadata import CompiledColumn, CompiledTable
+from .. import expr as S
+from ..expr import Expr
 from .cells import cell_values
-from .emit import _column_bindings, compile_iri_template
+from .emit import template_compiler
 
 _INT_BASES = {
     "integer", "long", "int", "short", "byte", "nonNegativeInteger",
@@ -49,16 +51,16 @@ def compact_iri(iri: str) -> str:
     return f"{best}:{local}"
 
 
-def compact_iri_col(c: Column) -> Column:
+def compact_iri_col(c: Expr) -> Expr:
     """Executor-side ``compact_iri``: longest-namespace-first chained
     ``when`` over the (bounded, 43-entry) CSVW context prefix map —
     driver-compiled constants, whole-stage-codegen friendly. Tie order
     matches the driver-side function (dict order, stable sort)."""
-    expr: Column | None = None
+    expr: Expr | None = None
     for pre, ns in sorted(PREFIXES.items(), key=lambda kv: -len(kv[1])):
-        cond = c.startswith(ns) & (F.length(c) > len(ns))
-        branch = F.concat(F.lit(pre + ":"), F.substring(c, len(ns) + 1, 2**24))
-        expr = (F.when(cond, branch) if expr is None
+        cond = c.startswith(ns) & (S.length(c) > len(ns))
+        branch = S.concat(S.lit(pre + ":"), S.substring(c, len(ns) + 1, 2**24))
+        expr = (S.when(cond, branch) if expr is None
                 else expr.when(cond, branch))
     return expr.otherwise(c)
 
@@ -89,7 +91,7 @@ def _json_key(col: CompiledColumn, table: CompiledTable) -> str:
     return compact_iri(expanded)
 
 
-def _typed_value(col: CompiledColumn, item: Column) -> Column:
+def _typed_value(col: CompiledColumn, item: Expr) -> Expr:
     base = col.datatype.base
     lex = item["lex"]
     if base in _INT_BASES:
@@ -101,11 +103,11 @@ def _typed_value(col: CompiledColumn, item: Column) -> Column:
     return lex
 
 
-def _is_nonfinite(d: Column) -> Column:
-    return F.isnan(d) | (d == float("inf")) | (d == float("-inf"))
+def _is_nonfinite(d: Expr) -> Expr:
+    return S.isnan(d) | (d == float("inf")) | (d == float("-inf"))
 
 
-def _special_float_expr(col: CompiledColumn) -> Column | None:
+def _special_float_expr(col: CompiledColumn) -> Expr | None:
     """String twin for a scalar float column: the canonical XSD lexical
     (NaN / INF / -INF) when the value is non-finite, else null. Spark's
     JSON writer would spell these "Infinity"/"-Infinity"; the reference
@@ -115,12 +117,12 @@ def _special_float_expr(col: CompiledColumn) -> Column | None:
             or col.datatype.base not in _FLOAT_BASES):
         return None
     values = cell_values(col.name)
-    d = F.try_element_at(values, F.lit(1))["lex"].cast("double")
-    return F.when(
-        (F.size(values) > 0) & _is_nonfinite(d),
-        F.when(F.isnan(d), F.lit("NaN"))
-        .when(d > 0, F.lit("INF"))
-        .otherwise(F.lit("-INF")))
+    d = S.try_element_at(values, S.lit(1))["lex"].cast("double")
+    return S.when(
+        (S.size(values) > 0) & _is_nonfinite(d),
+        S.when(S.isnan(d), S.lit("NaN"))
+        .when(d > 0, S.lit("INF"))
+        .otherwise(S.lit("-INF")))
 
 
 def _group_key(col: CompiledColumn) -> str:
@@ -156,9 +158,9 @@ def build_row_objects(
     vu_counts = Counter(
         c.value_url for cs in groups.values() for c in cs if c.value_url)
     inlined: set[str] = set()
+    iri = template_compiler(table)
 
-    def value_expr(col: CompiledColumn, own_group: str, depth: int) -> Column | None:
-        bindings = _column_bindings(table, col)
+    def value_expr(col: CompiledColumn, own_group: str, depth: int) -> Expr | None:
         values = cell_values(col.name)
         if col.value_url:
             target = col.value_url
@@ -166,22 +168,22 @@ def build_row_objects(
                     and target != "" and vu_counts[target] == 1):
                 inlined.add(target)
                 nested = group_struct(target, depth + 1)
-                cond = F.lit(True) if col.virtual else (F.size(values) > 0)
-                vu = compile_iri_template(col.value_url, bindings, base)
-                return F.when(cond & vu.isNotNull(), nested)
-            vu = compile_iri_template(col.value_url, bindings, base)
-            cond = F.lit(True) if col.virtual else (F.size(values) > 0)
+                cond = S.lit(True) if col.virtual else (S.size(values) > 0)
+                vu = iri(col.value_url, col)
+                return S.when(cond & vu.isNotNull(), nested)
+            vu = iri(col.value_url, col)
+            cond = S.lit(True) if col.virtual else (S.size(values) > 0)
             if _json_key(col, table) == "@type":
                 # rdf:type objects are compacted pnames in JSON
                 static = col.value_url if "{" not in col.value_url else None
-                v = F.lit(compact_iri(expand_iri(static, base=base))) \
+                v = S.lit(compact_iri(expand_iri(static, base=base))) \
                     if static else vu
-                return F.when(cond & vu.isNotNull(), v)
-            return F.when(cond & vu.isNotNull(), vu)
+                return S.when(cond & vu.isNotNull(), v)
+            return S.when(cond & vu.isNotNull(), vu)
         if col.separator is not None:
-            arr = F.transform(values, lambda it: _typed_value(col, it))
-            return F.when(F.size(values) > 0, arr)
-        v = _typed_value(col, F.try_element_at(values, F.lit(1)))
+            arr = S.transform(values, lambda it: _typed_value(col, it))
+            return S.when(S.size(values) > 0, arr)
+        v = _typed_value(col, S.try_element_at(values, S.lit(1)))
         if (_json_key(col, table) == "@type"
                 and col.datatype.base not in _INT_BASES
                 and col.datatype.base not in _FLOAT_BASES
@@ -195,16 +197,18 @@ def build_row_objects(
             # field below (reference keeps NaN/INF/-INF as strings while
             # finite values go native, reader.rb:575-576); null here so
             # exactly one of the pair survives ignoreNullFields
-            v = F.when(~_is_nonfinite(v), v)
-        return F.when(F.size(values) > 0, v)
+            v = S.when(~_is_nonfinite(v), v)
+        return S.when(S.size(values) > 0, v)
 
-    def group_struct(gkey: str, depth: int = 0) -> Column:
+    def group_struct(gkey: str, depth: int = 0) -> Expr:
         cols = groups[gkey]
-        fields: list[Column] = []
-        about = compile_iri_template(gkey or None, _all_bindings(table), base)
+        fields: list[Expr] = []
+        # the group's subject template sees the last column's _name,
+        # _column and _sourceColumn
+        about = iri(gkey or None, table.columns[-1])
         if about is not None:
             fields.append(about.alias("@id"))
-        present = F.lit(False)
+        present = S.lit(False)
         for col in cols:
             v = value_expr(col, gkey, depth)
             if v is None:
@@ -218,26 +222,26 @@ def build_row_objects(
                 # non-null, and ignoreNullFields keeps the JSON key unique
                 fields.append(special.alias(key))
                 present = present | special.isNotNull()
-        return F.when(present, F.struct(*fields)).otherwise(F.lit(None))
+        return S.when(present, S.struct(*fields)).otherwise(S.lit(None))
 
     # building order matters: value_expr marks inlined groups while structs
     # are constructed, so construct all structs first
     structs = {k: group_struct(k) for k in group_order}
-    top = [F.to_json(structs[k]) for k in group_order if k not in inlined]
-    objs = F.array_compact(F.array(*top))
+    top = [S.to_json(structs[k]) for k in group_order if k not in inlined]
+    objs = S.array_compact(S.array(*top))
     # row titles: the rowTitles columns' string values, in declaration
     # order (reader.rb:533 merge_compacted_value(r, "titles", t))
     title_arrays = []
     for rt in table.row_titles:
         rcol = next((c for c in table.columns if c.name == rt), None)
         if rcol is not None:
-            title_arrays.append(F.transform(
+            title_arrays.append(S.transform(
                 cell_values(rcol.name), lambda v: v["lex"]))
-    titles = (F.flatten(F.array(*title_arrays)) if title_arrays
-              else F.array().cast("array<string>"))
-    return cells_df.select(
-        F.col("_row"), F.col("_sourceRow"), objs.alias("objs"),
-        titles.alias("titles"))
+    titles = (S.flatten(S.array(*title_arrays)) if title_arrays
+              else S.array().cast("array<string>"))
+    return cells_df.selectExpr(
+        "_row", "_sourceRow", objs.alias("objs").sql,
+        titles.alias("titles").sql)
 
 
 def build_row_fragments(
@@ -308,16 +312,6 @@ def write_json_lines(
             .select("obj")
         )
     lines.write.mode("overwrite").text(path)
-
-
-def _all_bindings(table: CompiledTable):
-    # bindings across all columns (about templates may use any column)
-    from .emit import _column_bindings
-
-    merged = {}
-    for col in table.columns:
-        merged.update(_column_bindings(table, col))
-    return merged
 
 
 def simplify_common_value(value, base: str | None = None):

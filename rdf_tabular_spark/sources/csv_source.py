@@ -43,6 +43,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..csvw.metadata import CompiledTable, Dialect
+from ..deploy import ensure_py_files
 from . import framing
 
 
@@ -209,13 +210,16 @@ def _split_file(path: str, encoding: str, quote: str, terminators: list[str],
 def _split_records(spark: SparkSession, d: Dialect, path: str) -> DataFrame:
     """Splitter for the dialects ``frame_records`` declines: one executor
     task streams the file through :func:`_split_file`. Like any
-    sequential reader it does not split the file across tasks."""
+    sequential reader it does not split the file across tasks. The
+    records are checkpointed as they are read, so the header and comment
+    collects and every later action read the file once between them."""
+    ensure_py_files(spark)  # the task imports this module
     args = (path, d.encoding or "utf-8", d.quoteChar or '"',
             d.line_terminator_list, d.doubleQuote)
     return spark.createDataFrame(
         spark.sparkContext.parallelize([args], 1).flatMap(
             lambda a: enumerate(_split_file(*a), 1)),
-        "_sourceRow long, value string")
+        "_sourceRow long, value string").localCheckpoint()
 
 
 def _records(spark: SparkSession, d: Dialect, path: str,

@@ -49,6 +49,8 @@ from bisect import bisect_left
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..deploy import ensure_py_files
+
 #: charsets whose quote/terminator bytes cannot appear inside another
 #: character's encoding (ASCII-transparent); framing happens on raw bytes
 _BYTE_TRANSPARENT = {
@@ -179,6 +181,8 @@ def frame_records(spark: SparkSession, path: str, terminators: list[str],
     size = os.path.getsize(path)
     if size == 0:
         return spark.createDataFrame([], "_sourceRow long, value string")
+    # the chunk scanners below are closures over this module
+    ensure_py_files(spark)
     n_chunks = (size + chunk_bytes - 1) // chunk_bytes
     plan = [(i, i * chunk_bytes, min((i + 1) * chunk_bytes, size))
             for i in range(n_chunks)]

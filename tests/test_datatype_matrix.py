@@ -264,6 +264,7 @@ def _required_errors(cell, required: bool):
 @pytest.fixture(scope="module")
 def matrix(spark):
     """Evaluate every case's cell pipeline; one Spark job per chunk."""
+    from rdf_tabular_spark import expr as S
     from rdf_tabular_spark.csvw.metadata import parse_metadata
     from rdf_tabular_spark.operators.cells import cell_expr
 
@@ -295,9 +296,9 @@ def matrix(spark):
             table = tg.tables[0]
             col = table.columns[0]
             exprs.append(
-                cell_expr(F.lit(props["value"]), col, table).alias(f"c{i}"))
+                cell_expr(S.lit(props["value"]), col, table).alias(f"c{i}").sql)
             reqs.append(col.required)
-        stage1 = spark.range(0, 1, 1, 1).select(*exprs)
+        stage1 = spark.range(0, 1, 1, 1).selectExpr(*exprs)
         stage2 = stage1.select(
             "*",
             *[_required_errors(F.col(f"c{i}"), reqs[i]).alias(f"e{i}")

@@ -607,3 +607,98 @@ def test_utf16_cell_with_embedded_newline(spark, tmp_path):
     assert scan.header_titles == ["v", "w"]
     assert [(r["_row"], r["_c0"], r["_c1"]) for r in scan.df.collect()] \
         == [(1, "Zoë\nZürich", "2")]
+
+
+def _stages_running(spark, group: str, rdd_name: str) -> int:
+    """Completed stages of *group*'s jobs whose RDD graph holds an RDD
+    named *rdd_name* (read from Spark's status store)."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    seq = lambda s: [s.apply(i) for i in range(s.size())]  # noqa: E731
+
+    def names(cluster):
+        out = [n.name() for n in seq(cluster.childNodes())]
+        for c in seq(cluster.childClusters()):
+            out += names(c)
+        return out
+
+    stage_ids = {sid for j in seq(store.jobsList(None))
+                 if j.jobGroup().isDefined() and j.jobGroup().get() == group
+                 for sid in seq(j.stageIds())}
+    return sum(
+        store.lastStageAttempt(sid).status().toString() == "COMPLETE"
+        and rdd_name in names(store.operationGraphForStage(sid).rootCluster())
+        for sid in stage_ids)
+
+
+def test_splitter_reads_the_file_once(spark, tmp_path):
+    """A splitter-framed file (cp1252 here) is decoded once per scan: the
+    header collect, the data-region comment collect and the count all
+    read the checkpointed records."""
+    from rdf_tabular_spark.csvw.metadata import parse_metadata
+    from rdf_tabular_spark.sources.csv_source import read_table
+
+    p = tmp_path / "cp.csv"
+    p.write_bytes("name,city\nJosé,Málaga\n#mid\nZoë,Zürich\n"
+                  .encode("cp1252"))
+    table = parse_metadata(
+        {"url": "http://example.org/cp.csv",
+         "dialect": {"encoding": "windows-1252", "commentPrefix": "#"}},
+        base="http://example.org/cp.csv").tables[0]
+    sc = spark.sparkContext
+    sc.setJobGroup("splitter-once", "splitter-once")
+    try:
+        scan = read_table(spark, table, str(p))
+        assert scan.df.count() == 2
+    finally:
+        sc.setJobGroup("", "")
+    assert scan.header_titles == ["name", "city"]
+    assert scan.comments == ["mid"]
+    assert _stages_running(spark, "splitter-once", "PythonRDD") == 1
+
+
+_OUTSIDE_SCRIPT = r'''
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from rdf_tabular_spark.csvw.metadata import parse_metadata
+from rdf_tabular_spark.sources.csv_source import read_table
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+out = {}
+for name, data, encoding in [
+        ("bom.csv", '﻿v,w\n"a\nb",1\n'.encode("utf-8"), "utf-8"),
+        ("u16.csv", 'v,w\n"Zoë\nZürich",2\n'.encode("utf-16"), "utf-16")]:
+    with open(name, "wb") as f:
+        f.write(data)
+    table = parse_metadata(
+        {"url": "http://example.org/" + name,
+         "dialect": {"encoding": encoding}},
+        base="http://example.org/" + name).tables[0]
+    out[name] = [[r["_c0"], r["_c1"]]
+                 for r in read_table(spark, table, name).df.collect()]
+spark.stop()
+print(json.dumps(out))
+'''
+
+
+def test_python_framers_run_from_outside_the_checkout(tmp_path):
+    """The record framer and the splitter run Python on executors; a
+    driver started from another directory, with the package only on its
+    own sys.path, ships the package to its workers."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo)
+    script = tmp_path / "scan.py"
+    script.write_text(_OUTSIDE_SCRIPT)
+    proc = subprocess.run([sys.executable, str(script), repo], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {
+        "bom.csv": [["a\nb", "1"]], "u16.csv": [["Zoë\nZürich", "2"]]}

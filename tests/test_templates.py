@@ -5,7 +5,7 @@ Ports the reference's URL-expansion matrix (metadata_spec.rb:962-1027:
 over column names) and pins parity between the two expansion paths:
 
 - pure-Python :func:`expand` (driver-side constants, exotic operators)
-- :func:`compile_template` native Spark expressions (the executor hot path)
+- :func:`compile_template` native Spark SQL expressions (the executor hot path)
 
 The native path's percent-encoding is `url_encode` with deltas patched back
 to RFC 3986; the parity test is what keeps the two encoders in lock-step.
@@ -14,8 +14,8 @@ to RFC 3986; the parity test is what keeps the two encoders in lock-step.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
+from rdf_tabular_spark import expr as S
 from rdf_tabular_spark.csvw.templates import (
     compile_template,
     expand,
@@ -85,9 +85,9 @@ def test_native_matches_python_expansion(spark):
     cases = [(t, b, e) for t, b, e in EXPAND_CASES if is_native_compilable(t)]
     exprs = []
     for i, (template, bindings, _) in enumerate(cases):
-        cols = {k: F.lit(str(v)) for k, v in bindings.items()}
-        exprs.append(compile_template(template, cols).alias(f"t{i}"))
-    row = spark.range(1).select(*exprs).collect()[0]
+        cols = {k: S.lit(str(v)) for k, v in bindings.items()}
+        exprs.append(compile_template(template, cols).alias(f"t{i}").sql)
+    row = spark.range(1).selectExpr(*exprs).collect()[0]
     for i, (template, bindings, expected) in enumerate(cases):
         got = row[f"t{i}"]
         assert got == expected, f"{template!r} with {bindings!r}: {got!r}"
