@@ -1,8 +1,8 @@
 """Benchmark harness (driver contract).
 
 Default: runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+usable core count) and prints ONE JSON line::
 
     {"metric": "headline_suite_best_sum", "value": <sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": 0.1,
@@ -378,7 +378,8 @@ def run_scaling(sf: float, pair: tuple[int, int] = (2, 8),
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     if "--scaling" in sys.argv:
         i = sys.argv.index("--scaling")
         sf = float(sys.argv[i + 1]) if len(sys.argv) > i + 1 else 0.1

@@ -1,15 +1,17 @@
 """Stage 3: entity linking + canonicalization (north rule).
 
 Module mentions (import/dependency names) referring to the same logical
-module get one canonical IRI. Pipeline — all set-level, skew-aware:
+module get one canonical IRI. The contract is one definition, whatever
+the vocabulary size: labels = connected_components(vocabulary,
+candidate_pairs(vocabulary)). Pipeline — all set-level, skew-aware:
 
 1. distinct mentions (tiny vs. the triple stream: map-side-combined distinct)
 2. normalize + character-3-gram shingles (pure column expressions)
 3. minhash signatures: B bands x R rows, each minhash the minimum of
-   ``hash(shingle, seed)`` over the shingles, all B x R kept by one
-   ``aggregate`` fold whose step ``zip_with``-s the running minima with
-   ``least`` — native, no UDF (the reference has no analog; this
-   generalizes its cross-table IRI linking J2 into a similarity join)
+   ``hash(shingle, seed)`` over the shingles (``ops.dedup.
+   minhash_signature``, one native fold, no UDF; the reference has no
+   analog; this generalizes its cross-table IRI linking J2 into a
+   similarity join)
 4. LSH blocking: explode band keys, self-join per (band, key) bucket;
    bucket sizes are capped (hot-bucket guard) before the pair join
 5. verify, then dedup: every joined candidate row gets its exact Jaccard
@@ -21,32 +23,31 @@ module get one canonical IRI. Pipeline — all set-level, skew-aware:
 6. connected components by fixed-step min-label propagation: a self-loop
    per vertex makes a round one edges ⋈ labels join plus one aggregate;
    convergence is checked only every 3rd round and on the last one, where
-   a localCheckpoint cuts the plan. canonical = min mention
+   a localCheckpoint cuts the plan. canonical = min mention. The one
+   driver step: for a vocabulary of at most SMALL_VOCAB names,
+   link_mentions collects the verified pairs and runs the same rounds in
+   Python, which saves the distributed loop's scheduling latency
 7. canonicalize_mentions: a broadcast alias join rewrites the mention
    names on the narrow extracted rows, before assembly emits any triple
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .annotate import KGI, module_iri
+from ..ops.dedup import minhash_signature
+from .annotate import module_iri
 
 N_BANDS = 8
 ROWS_PER_BAND = 2
 MAX_BUCKET = 256  # hot-bucket guard: drop LSH buckets larger than this
-#: vocabulary size below which linking runs driver-local (the mention
-#: vocabulary is broadcast-sized anyway; a distributed LSH self-join + CC
-#: loop on a few thousand rows is pure scheduling latency). Same adaptive
-#: philosophy as AQE's broadcast-vs-SMJ choice from runtime stats.
-#: The two paths bucket differently: the driver twin's minhash is crc32,
-#: the distributed path's is Spark's murmur3 ``hash``, so they find
-#: different LSH candidates and the same names can group differently on
-#: either side of this threshold (the 4,837 names of the seed-401 kg_build
-#: benchmark input give 1,671 entities through the driver twin and 1,478
-#: through the distributed path).
+#: vocabulary size at or below which the propagation runs on the driver:
+#: a distributed loop on a few thousand names is scheduling latency. The
+#: pairs are the distributed LSH's either way, so the labels are the same
 SMALL_VOCAB = 4096
+#: label-propagation rounds of connected_components (and of its driver step)
+CC_ROUNDS = 10
 
 
 def normalize_mention(c):
@@ -77,18 +78,7 @@ def shingle_code(t):
 
 def minhash_bands(sh):
     """array of N_BANDS band-hash values over ROWS_PER_BAND minhashes each."""
-    n_hashes = N_BANDS * ROWS_PER_BAND
-    # single fold updating all minima at once (keeps codegen small); the
-    # lambda takes exactly the declared params — an extra default-arg param
-    # would be bound by Spark to the element index
-    init = F.array_repeat(F.lit(9223372036854775807).cast("long"), n_hashes)
-    sig = F.aggregate(
-        sh, init,
-        lambda acc, x: F.zip_with(
-            acc,
-            F.array(*[F.hash(x, F.lit(s)).cast("long") for s in range(n_hashes)]),
-            lambda u, v: F.least(u, v)),
-    )
+    sig = minhash_signature(sh, N_BANDS * ROWS_PER_BAND)
     bands = []
     for b in range(N_BANDS):
         row_hashes = [
@@ -99,91 +89,61 @@ def minhash_bands(sh):
     return F.array(*bands)
 
 
-def _norm_py(s: str) -> str:
-    import re as _re
-
-    return _re.sub(r"[/._-]+", ".", _re.sub(r"^\./", "", s.lower()))
-
-
-def _shingles_py(s: str, k: int = 3) -> frozenset:
-    padded = "^" + s + "$"
-    if len(padded) <= k:
-        return frozenset([padded[:k]])
-    return frozenset(padded[i:i + k] for i in range(len(padded) - k + 1))
-
-
-def link_mentions_local(names: list[str],
-                        jaccard_threshold: float = 0.55) -> list[tuple[str, str]]:
-    """Driver-local twin of candidate_pairs + connected_components for
-    sub-broadcast vocabularies: crc32 minhash banding -> exact-Jaccard
-    verification -> union-find. Deterministic (crc32, no PYTHONHASHSEED
-    dependence) so resumed runs relink identically. Returns
-    (mention, canonical) rows."""
-    from zlib import crc32
-
-    n_hashes = N_BANDS * ROWS_PER_BAND
-    sh: dict[str, frozenset] = {}
-    buckets: dict[tuple[int, int], list[str]] = {}
-    for nm in names:
-        s = _shingles_py(_norm_py(nm))
-        sh[nm] = s
-        sig = [
-            min(crc32(t.encode("utf-8"), seed) for t in s)
-            for seed in range(n_hashes)
-        ]
-        for b in range(N_BANDS):
-            key = (b, crc32(repr(sig[b * ROWS_PER_BAND:(b + 1) * ROWS_PER_BAND]).encode()))
-            buckets.setdefault(key, []).append(nm)
-
-    parent: dict[str, str] = {nm: nm for nm in names}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    seen: set[tuple[str, str]] = set()
-    for members in buckets.values():
-        if len(members) > MAX_BUCKET:
-            continue  # same hot-bucket guard as the distributed path
-        for i, a in enumerate(members):
-            for b in members[i + 1:]:
-                pair = (a, b) if a < b else (b, a)
-                if pair in seen:
-                    continue
-                seen.add(pair)
-                sa, sb = sh[a], sh[b]
-                if len(sa & sb) / len(sa | sb) >= jaccard_threshold:
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                        parent[hi] = lo
-    return [(nm, find(nm)) for nm in names]
-
-
 def link_mentions(mentions: DataFrame,
                   jaccard_threshold: float = 0.55) -> DataFrame:
-    """Adaptive entity linking: mentions(mention) -> labels
-    (mention, canonical).
+    """Entity linking: mentions(mention) -> labels (mention, canonical),
+    always ``connected_components(distinct, candidate_pairs(distinct))``.
 
-    The distinct-mention vocabulary decides the physical strategy (checked
-    with a LIMIT probe, not a full count): at or below SMALL_VOCAB rows the
-    whole link runs on the driver; above it, the distributed minhash-LSH
-    self-join + label-propagation CC path runs."""
-    spark = mentions.sparkSession
+    The distinct-mention vocabulary (checked with a LIMIT probe, not a
+    full count) decides only where the propagation runs: at or below
+    SMALL_VOCAB names the verified pairs are collected and propagated on
+    the driver; above it, in Spark."""
+    from .. import caching
+
     distinct = mentions.select("mention").distinct()
     probe = distinct.limit(SMALL_VOCAB + 1).collect()
-    if len(probe) <= SMALL_VOCAB:
-        names = sorted(r["mention"] for r in probe)
-        rows = link_mentions_local(names, jaccard_threshold)
-        return spark.createDataFrame(rows, "mention string, canonical string")
-    return connected_components(
-        distinct, candidate_pairs(distinct, jaccard_threshold))
+    sig, pairs = _lsh_pairs(distinct, jaccard_threshold)
+    try:
+        if len(probe) > SMALL_VOCAB:
+            # the propagation loop ends on a checkpoint of its own, so
+            # nothing reads the signatures once it returns
+            return connected_components(distinct, pairs)
+        pairs = pairs.select("a", "b").collect()
+    finally:
+        caching.release(sig)
+    labels = _propagate([r["mention"] for r in probe], pairs)
+    return mentions.sparkSession.createDataFrame(
+        sorted(labels.items(), key=lambda kv: (kv[0] is not None, kv[0])),
+        "mention string, canonical string")
+
+
+def _propagate(names: list, pairs: list) -> dict:
+    """connected_components' rule on the driver: for CC_ROUNDS rounds,
+    every name takes the min of its own and its neighbours' labels; a
+    None name has no pairs and keeps the None label."""
+    adj: dict = {n: [] for n in names}
+    for a, b in pairs:
+        adj[a].append(b)
+        adj[b].append(a)
+    label = {n: n for n in names}
+    for _ in range(CC_ROUNDS):
+        new = {n: min([label[n], *(label[m] for m in adj[n])])
+               for n in names}
+        if new == label:
+            break
+        label = new
+    return label
 
 
 def candidate_pairs(mentions: DataFrame, jaccard_threshold: float = 0.55) -> DataFrame:
     """mentions(mention) -> similar pairs (a, b, jaccard), a < b."""
+    return _lsh_pairs(mentions, jaccard_threshold)[1]
+
+
+def _lsh_pairs(mentions: DataFrame,
+               jaccard_threshold: float) -> tuple[DataFrame, DataFrame]:
+    """(signature checkpoint, pairs) of :func:`candidate_pairs`; the
+    caller releases the checkpoint once nothing reads the pairs."""
     m = (
         mentions.select(F.col("mention"))
         .distinct()
@@ -229,7 +189,7 @@ def candidate_pairs(mentions: DataFrame, jaccard_threshold: float = 0.55) -> Dat
         .select("a", "b", "jaccard")
         .dropDuplicates(["a", "b"])
     )
-    return pairs
+    return m, pairs
 
 
 #: hot-shingle guard for the blocked candidate generator: shingles in
@@ -337,7 +297,7 @@ def tfidf_rescore(mentions: DataFrame, pairs: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    mentions: DataFrame, pairs: DataFrame, max_iter: int = 10
+    mentions: DataFrame, pairs: DataFrame, max_iter: int = CC_ROUNDS
 ) -> DataFrame:
     """(mention, canonical) via fixed-step min-label propagation: after
     *max_iter* rounds (or earlier, once a round changes nothing) each

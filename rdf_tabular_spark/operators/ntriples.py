@@ -9,6 +9,8 @@ semantics).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -116,14 +118,20 @@ def _parse_frames_native(framed: DataFrame) -> DataFrame:
     return framed.select(*_parse_frames_native_cols())
 
 
-def _parse_lines_python(lines: DataFrame, column: str) -> DataFrame:
+def _parse_lines_python(lines: DataFrame, column: str,
+                        grammar: str = TRIPLE_RE) -> DataFrame:
     """Arrow-batched decoder for lines with \\u numeric escapes — the
     only path where native string functions cannot express the decode.
-    Batch-vectorized regex over pandas Series; never the hot path."""
+    Batch-vectorized regex over pandas Series; never the hot path.
+    *grammar* is :data:`TRIPLE_RE` or :data:`QUAD_RE`; the quad grammar's
+    fourth group adds the nullable ``graph`` column."""
     import re
 
-    frame = re.compile(TRIPLE_RE)
+    frame = re.compile(grammar)
+    quads = frame.groups == 4
     tri = _python_term_decoder()
+    names = ["subj", "pred", "obj", "obj_is_iri", "obj_datatype",
+             "obj_lang"] + (["graph"] if quads else [])
 
     def batches(it):
         import pandas as pd
@@ -134,12 +142,16 @@ def _parse_lines_python(lines: DataFrame, column: str) -> DataFrame:
                 if m:
                     subj, pred, (obj, is_iri, dt, lang) = tri(
                         m.group(1), m.group(2), m.group(3))
-                    rows.append((subj, pred, obj, is_iri, dt, lang))
-            yield pd.DataFrame(
-                rows, columns=["subj", "pred", "obj", "obj_is_iri",
-                               "obj_datatype", "obj_lang"])
+                    row = (subj, pred, obj, is_iri, dt, lang)
+                    if quads:
+                        g4 = m.group(4)
+                        row += (None if g4 is None
+                                else g4 if g4.startswith("_:")
+                                else tri.decode(g4[1:-1]),)
+                    rows.append(row)
+            yield pd.DataFrame(rows, columns=names)
 
-    return lines.mapInPandas(batches, NT_SCHEMA)
+    return lines.mapInPandas(batches, NQ_SCHEMA if quads else NT_SCHEMA)
 
 
 def parse_ntriples_lines(lines: DataFrame, column: str = "line") -> DataFrame:
@@ -219,7 +231,7 @@ def parse_nquads_lines(lines: DataFrame, column: str = "line") -> DataFrame:
     nat_framed = framed.filter(~has_u).withColumn("_graph", graph)
     native = _parse_frames_native_with(nat_framed, F.col("_graph"))
     hard = framed.filter(has_u).select(F.col("_raw").alias(column))
-    return native.unionByName(_parse_quads_python(hard, column))
+    return native.unionByName(_parse_lines_python(hard, column, QUAD_RE))
 
 
 def _parse_frames_native_with(framed: DataFrame, extra) -> DataFrame:
@@ -249,37 +261,9 @@ def _parse_frames_native_cols():
     ]
 
 
-def _parse_quads_python(lines: DataFrame, column: str) -> DataFrame:
-    """Arrow-batched quad decoder for \\u-escape lines."""
-    import re
-
-    frame = re.compile(QUAD_RE)
-    tri = _python_term_decoder()
-
-    def batches(it):
-        import pandas as pd
-        for pdf in it:
-            rows = []
-            for line in pdf[column]:
-                m = frame.match(line)
-                if m:
-                    subj, pred, (obj, is_iri, dt, lang) = tri(
-                        m.group(1), m.group(2), m.group(3))
-                    g4 = m.group(4)
-                    graph = (None if g4 is None
-                             else g4 if g4.startswith("_:")
-                             else tri.decode(g4[1:-1]))
-                    rows.append((subj, pred, obj, is_iri, dt, lang, graph))
-            yield pd.DataFrame(
-                rows, columns=["subj", "pred", "obj", "obj_is_iri",
-                               "obj_datatype", "obj_lang", "graph"])
-
-    return lines.mapInPandas(batches, NQ_SCHEMA)
-
-
 def _python_term_decoder():
-    """(raw_s, raw_p, raw_o) -> decoded terms; shared by the triple and
-    quad Python paths. Returned callable carries .decode for reuse."""
+    """(raw_s, raw_p, raw_o) -> decoded terms for the Python decoder.
+    Returned callable carries .decode for reuse (graph labels)."""
     import re
 
     lit = re.compile(r'^"((?:[^"\\]|\\.)*)"')
@@ -320,24 +304,21 @@ def _python_term_decoder():
     return tri
 
 
-def ntriples_parse_problems(lines: DataFrame,
-                            column: str = "line") -> DataFrame:
-    """Lines that are neither blank, comment, nor a well-formed triple —
-    the scan-problems channel (same shape as the CSV scan's ragged-row
-    surfacing: the engine never silently eats a bad line)."""
+def ntriples_parse_problems(lines: DataFrame, column: str = "line",
+                            grammar: str = TRIPLE_RE) -> DataFrame:
+    """Lines that are neither blank, comment, nor well-formed under
+    *grammar* (:data:`TRIPLE_RE` or :data:`QUAD_RE`) — the scan-problems
+    channel (same shape as the CSV scan's ragged-row surfacing: the
+    engine never silently eats a bad line)."""
     c = F.col(column)
     return (lines
-            .filter(~c.rlike(r"^[ \t]*(#.*)?$") & ~c.rlike(TRIPLE_RE))
+            .filter(~c.rlike(r"^[ \t]*(#.*)?$") & ~c.rlike(grammar))
             .select(c.alias("line")))
 
 
-def nquads_parse_problems(lines: DataFrame,
-                          column: str = "line") -> DataFrame:
-    """Non-blank, non-comment lines that fail the N-Quads grammar."""
-    c = F.col(column)
-    return (lines
-            .filter(~c.rlike(r"^[ \t]*(#.*)?$") & ~c.rlike(QUAD_RE))
-            .select(c.alias("line")))
+#: non-blank, non-comment lines that fail the N-Quads grammar
+nquads_parse_problems = functools.partial(ntriples_parse_problems,
+                                          grammar=QUAD_RE)
 
 
 def read_ntriples(spark, path: str) -> DataFrame:

@@ -205,9 +205,6 @@ def to_triples(
     group_node = group.id or skolem_str("group", *(t.url for t in group.tables))
 
     for table in group.tables:
-        if table.suppress_output and mode != "validate":
-            # still scanned when validating; suppressed for output (C15)
-            pass
         scan = _scan_table(spark, table, html_text, url_map, search_dir)
         scans[table.url] = scan
         table = _effective_table(table, scan)

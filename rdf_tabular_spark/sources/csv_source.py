@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
+from .. import expr as S
 from ..csvw.metadata import CompiledTable, Dialect
 from ..deploy import ensure_py_files
 from . import framing
@@ -318,17 +319,20 @@ def read_table(
         F.col("_sourceRow").alias("source_row"),
         F.lit(f"ragged row wider than the {n_cols}-column schema")
         .alias("detail"))
+    # the per-column projection and the blank-row test are SQL text: one
+    # bridge call each, whatever the width
     width = n_cols - d.skipColumns
-    out = parsed.select(
+    out = parsed.selectExpr(
         "_sourceRow", "value",
-        *[F.col(f"r._x{i + d.skipColumns}").alias(f"_c{i}")
+        *[S.col("r")[f"_x{i + d.skipColumns}"].alias(f"_c{i}").sql
           for i in range(width)])
 
     # S4: a blank row has only empty cells (",," is blank too)
     if d.skipBlankRows:
-        cells = F.concat_ws("", *[F.coalesce(F.col(f"_c{i}"), F.lit(""))
+        cells = S.concat_ws("", *[S.coalesce(S.col(f"_c{i}"), "")
                                   for i in range(width)])
-        out = out.filter((F.trim(F.col("value")) != "") & (cells != ""))
+        out = out.filter(
+            ((S.trim(S.col("value")) != "") & (cells != "")).sql)
 
     # data-row numbering (C16): per single-file table a window over the
     # record number is exact; arithmetic when no data row was dropped

@@ -146,8 +146,8 @@ def test_lineitem_plan_budget(spark, tmp_path):
     assert tags == {"fragile", "bulk"}
 
 
-@pytest.mark.parametrize("n_cols,budget", [(10, 5000), (40, 5000),
-                                           (80, 5000)])
+@pytest.mark.parametrize("n_cols,budget", [(10, 1500), (40, 1500),
+                                           (80, 1500)])
 def test_wide_plan_budget(spark, tmp_path, n_cols, budget):
     metadata, rows = _wide(n_cols)
     res, trips = _to_triples(spark, tmp_path, "wide.csv", metadata, rows)

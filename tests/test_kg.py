@@ -75,10 +75,32 @@ def test_resume_skips_completed_stages(spark, results, tmp_path_factory):
     assert all(d["resumed"] or d["wall_s"] < 5.0 for d in pipe2.lineage)
 
 
-def test_adaptive_linking_parity(spark):
-    """Driver-local linking (sub-SMALL_VOCAB fast path) groups the same
-    aliases as the distributed LSH + CC path on a vocabulary with real
-    near-duplicates, and link_mentions picks the local path for it."""
+def _labels(df) -> dict:
+    out = df.collect()
+    assert len(out) == len({r["mention"] for r in out})
+    return {r["mention"]: r["canonical"] for r in out}
+
+
+def _link_parity(spark, names: list) -> dict:
+    """link_mentions' labels for *names*, asserted equal to those of
+    connected_components over candidate_pairs, the one linking contract;
+    the call leaves no persisted RDD behind."""
+    from rdf_tabular_spark.kg import link
+
+    mentions = spark.createDataFrame([(n,) for n in names], "mention string")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    got = _labels(link.link_mentions(mentions, 0.55))
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+    distinct = mentions.select("mention").distinct()
+    assert got == _labels(link.connected_components(
+        distinct, link.candidate_pairs(distinct, 0.55)))
+    return got
+
+
+def test_adaptive_linking_parity(spark, monkeypatch):
+    """A vocabulary with real near-duplicates links to the same labels on
+    either side of SMALL_VOCAB (driver or distributed propagation)."""
     from rdf_tabular_spark.kg import link
 
     names = [
@@ -88,41 +110,33 @@ def test_adaptive_linking_parity(spark):
         "left-pad", "left_pad", "./left-pad",
         "completely.unrelated.module",
     ]
-    mentions = spark.createDataFrame([(n,) for n in names], "mention string")
-
-    local_rows = dict(link.link_mentions_local(sorted(names), 0.55))
-    dist = {
-        r["mention"]: r["canonical"]
-        for r in link.connected_components(
-            mentions, link.candidate_pairs(mentions, 0.55)).collect()
-    }
-
-    def groups(lab):
-        g = {}
-        for m, c in lab.items():
-            g.setdefault(c, set()).add(m)
-        return sorted(tuple(sorted(v)) for v in g.values())
-
-    # same grouping; identical canonical choice (min of each group) follows
-    assert groups(local_rows) == groups(dist)
-    # exact-normalization aliases must merge on both paths
-    assert local_rows["lo-dash"] == local_rows["lo_dash"]
-    assert local_rows["left-pad"] == local_rows["./left-pad"]
-    assert (local_rows["completely.unrelated.module"]
+    small = _link_parity(spark, names)
+    # exact-normalization aliases merge
+    assert small["lo-dash"] == small["lo_dash"]
+    assert small["left-pad"] == small["./left-pad"]
+    assert (small["completely.unrelated.module"]
             == "completely.unrelated.module")
 
-    via_adaptive = {
-        r["mention"]: r["canonical"]
-        for r in link.link_mentions(mentions, 0.55).collect()
-    }
-    assert groups(via_adaptive) == groups(local_rows)
+    monkeypatch.setattr(link, "SMALL_VOCAB", len(names) - 1)
+    mentions = spark.createDataFrame([(n,) for n in names], "mention string")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    labels = link.link_mentions(mentions, 0.55)
+    # the distributed call keeps only the checkpoint its labels scan
+    leaves = labels._jdf.queryExecution().analyzed().collectLeaves()
+    read = {leaves.apply(i).rdd().id() for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "LogicalRDD"}
+    assert set(jsc.getPersistentRDDs().keySet()) - before <= read
+    assert _labels(labels) == small
 
 
-def test_local_linking_deterministic():
-    from rdf_tabular_spark.kg.link import link_mentions_local
+def test_local_linking_deterministic(spark):
+    from rdf_tabular_spark.kg.link import link_mentions
 
     names = sorted(f"pkg{i // 3}.mod{i}" for i in range(60))
-    assert link_mentions_local(names) == link_mentions_local(list(names))
+    m = spark.createDataFrame([(n,) for n in names], "mention string")
+    assert (_labels(link_mentions(m))
+            == _labels(link_mentions(m.repartition(5))))
 
 
 def test_per_partition_lineage(spark, results):
@@ -143,7 +157,7 @@ def test_per_partition_lineage(spark, results):
     assert per_stage == got
 
 
-def test_kg_oracle_linker_equals_norm_grouping():
+def test_kg_oracle_linker_equals_norm_grouping(spark):
     """The driver-contract KG oracle (sql_kg_triples/sql_kg_entities)
     replicates entity linking as normalized-equality grouping with
     canonical = min(mention). Assert the REAL linker produces exactly that
@@ -155,7 +169,7 @@ def test_kg_oracle_linker_equals_norm_grouping():
 
     from __spark_entry__ import _kg_oracle_source_path
     from rdf_tabular_spark.kg.extract import LANG_RULES
-    from rdf_tabular_spark.kg.link import _norm_py, link_mentions_local
+    from rdf_tabular_spark.kg.link import link_mentions
 
     tbl = pq.read_table(_kg_oracle_source_path()).to_pydict()
     vocab: set[str] = set()
@@ -164,10 +178,13 @@ def test_kg_oracle_linker_equals_norm_grouping():
             if kind in ("import", "dep"):
                 for m in re.finditer(rx, content, fl):
                     vocab.add(m.group("name"))
-    linked = dict(link_mentions_local(sorted(vocab), 0.55))
+    mentions = spark.createDataFrame([(v,) for v in sorted(vocab)],
+                                     "mention string")
+    linked = _labels(link_mentions(mentions, 0.55))
     groups: dict[str, list[str]] = {}
     for m in vocab:
-        groups.setdefault(_norm_py(m), []).append(m)
+        norm = re.sub(r"[/._-]+", ".", re.sub(r"^\./", "", m.lower()))
+        groups.setdefault(norm, []).append(m)
     expect = {m: min(g) for g in groups.values() for m in g}
     assert linked == expect
     assert any(m != c for m, c in linked.items())
@@ -265,8 +282,7 @@ def test_shingle_blocked_pairs_shared_and_cap(spark):
 def test_tfidf_rescore_hand_computed(spark):
     import math
 
-    from rdf_tabular_spark.kg.link import (
-        _shingles_py, tfidf_rescore)
+    from rdf_tabular_spark.kg.link import tfidf_rescore
 
     names = ["numpy", "numpi", "flask"]
     m = spark.createDataFrame([(n,) for n in names], "mention string")
@@ -275,7 +291,8 @@ def test_tfidf_rescore_hand_computed(spark):
     got = {(r.a, r.b): r.tfidf_micro for r in
            tfidf_rescore(m, pairs).collect()}
 
-    sh = {n: _shingles_py(n) for n in names}
+    # character 3-grams of "^name$" (these names normalize to themselves)
+    sh = {n: {f"^{n}$"[i:i + 3] for i in range(len(n))} for n in names}
     df = {}
     for s in sh.values():
         for t in s:
@@ -380,6 +397,42 @@ def test_candidate_pairs_equals_python_reference(spark):
     got = {(r["a"], r["b"]): r["jaccard"] for r in out}
     assert len(out) == len(got)
     assert got == expect
+
+
+def test_link_parity_seeded_vocabulary(spark):
+    """The seeded near-duplicate vocabulary (hot buckets, non-ASCII and
+    astral names) links to connected_components' labels."""
+    labels = _link_parity(spark, _seeded_vocabulary())
+    assert any(m != c for m, c in labels.items())
+
+
+#: 29 windows of 12 characters over a string with no repeated 3-gram:
+#: neighbours share 9 of 15 shingles (Jaccard 0.6), windows two apart 8
+#: of 16 (0.5), so the verified pairs form one path of 28 hops
+CHAIN = [("mynbiqpmzjplsgqejeydtzirwztejdxcvkprdlnk")[i:i + 12]
+         for i in range(29)]
+
+
+def test_link_parity_long_chain(spark):
+    """A near-duplicate chain longer than the propagation's 10 rounds:
+    the far end keeps the min label within 10 hops, as in
+    connected_components, not the chain's global min."""
+    from rdf_tabular_spark.kg import link
+
+    mentions = spark.createDataFrame([(n,) for n in CHAIN], "mention string")
+    pairs = {(r["a"], r["b"]) for r in
+             link.candidate_pairs(mentions, 0.55).collect()}
+    assert pairs == {tuple(sorted(p)) for p in zip(CHAIN, CHAIN[1:])}
+    labels = _link_parity(spark, CHAIN)
+    assert labels == _python_cc(CHAIN, pairs, link.CC_ROUNDS)
+    assert len(set(labels.values())) > 1
+
+
+def test_link_parity_null_mention(spark):
+    """A null mention stays its own (null) entity."""
+    labels = _link_parity(spark, ["numpy", "numpyy", None, "flask"])
+    assert labels[None] is None
+    assert labels["numpyy"] == "numpy"
 
 
 def _python_cc(vertices, pairs, max_iter):

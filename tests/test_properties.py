@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the driver-side compilers — a
 layer the reference's spec suite does not have (SURVEY §5.4). All pure
-Python: no Spark session.
+Python except the entity-linking property, which needs a Spark session.
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 
 from rdf_tabular_spark.csvw import uax35
 from rdf_tabular_spark.csvw.templates import expand, is_native_compilable
-from rdf_tabular_spark.kg.link import link_mentions_local
+from rdf_tabular_spark.kg import link
 
 # ---------------------------------------------------------------------------
 # UAX-35 number normalization
@@ -140,7 +140,7 @@ def test_native_compilable_is_total(template):
 
 
 # ---------------------------------------------------------------------------
-# entity linking (driver-local path)
+# entity linking (a vocabulary small enough for the driver propagation)
 # ---------------------------------------------------------------------------
 
 _mention = st.text(
@@ -148,21 +148,20 @@ _mention = st.text(
     max_size=16)
 
 
-@settings(max_examples=25)
-@given(st.lists(_mention, min_size=1, max_size=40, unique=True))
-def test_local_linking_properties(names):
-    labels = dict(link_mentions_local(sorted(names)))
-    # total: every mention labeled
-    assert set(labels) == set(names)
-    # canonical is a member of its own group and is the group minimum
-    groups: dict[str, list[str]] = {}
-    for m, c in labels.items():
-        groups.setdefault(c, []).append(m)
-    for canon, members in groups.items():
-        assert canon in members
-        assert canon == min(members)
-    # idempotent/deterministic
-    assert dict(link_mentions_local(sorted(names))) == labels
+@settings(max_examples=10, deadline=None)
+@given(names=st.lists(_mention, min_size=1, max_size=40, unique=True))
+def test_local_linking_properties(spark, names):
+    def labels(df):
+        return {r["mention"]: r["canonical"] for r in df.collect()}
+
+    mentions = spark.createDataFrame([(n,) for n in names], "mention string")
+    got = labels(link.link_mentions(mentions))
+    # total: every mention labeled, by a member of the vocabulary
+    assert set(got) == set(names)
+    assert set(got.values()) <= set(names)
+    # the one contract: connected_components over candidate_pairs
+    assert got == labels(link.connected_components(
+        mentions, link.candidate_pairs(mentions)))
 
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,8 @@ Measured jobs (SURVEY §7.4-5):
 - lsh_bands        MinHash-LSH candidate pairs (band groupBy self-join)
 
 Usage: python tools/bench_skew.py [n_files]  (default 20000; uses
-$SPARK_GRAFT_CPUS or 32 cores). Prints one JSON line; numbers recorded
-in BASELINE.md (round 3).
+$SPARK_GRAFT_CPUS or the usable core count). Prints one JSON line;
+numbers recorded in BASELINE.md (round 3).
 """
 
 from __future__ import annotations
@@ -137,7 +137,8 @@ def jobs(spark, src_path: str) -> dict[str, float]:
 
 def main() -> None:
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     from pyspark.sql import SparkSession
 
     spark = (
