@@ -5086,6 +5086,28 @@ def _keep_committed_parts(sink: str) -> None:
                 os.remove(os.path.join(root, name))
 
 
+def _code_key(root: str | None = None) -> str:
+    """Fingerprint of the code a drained sink was made by: every
+    ``rdf_tabular_spark/**/*.py`` file and ``__spark_entry__.py`` under
+    *root* (default: this file's directory), by relative path and
+    content. A runner reaches past ``streaming/incremental.py`` (the
+    funnel merge calls ``ops/funnel``, its stage list is in this file),
+    so hashing one module served stale sinks."""
+    import glob
+    import hashlib
+    import os
+
+    root = root or os.path.dirname(os.path.abspath(__file__))
+    files = sorted(glob.glob(os.path.join(
+        root, "rdf_tabular_spark", "**", "*.py"), recursive=True))
+    h = hashlib.sha256()
+    for path in [*files, os.path.join(root, "__spark_entry__.py")]:
+        h.update(os.path.relpath(path, root).encode() + b"\0")
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:12]
+
+
 def _drained_stream_sink(spark: SparkSession, sf_dir: str, kind: str,
                          runner) -> DataFrame:
     """Run a Structured Streaming query to completion into a
@@ -5098,19 +5120,15 @@ def _drained_stream_sink(spark: SparkSession, sf_dir: str, kind: str,
     awaitTermination orphaned the checkpoint). A failed drain now
     removes its .tmp work dir before raising; the committed dir is
     bounded at one per (kind, source-content, code) triple: the key also
-    hashes streaming/incremental.py's source, so a sink drained by other
-    code is never served for this code's output."""
-    import hashlib
+    hashes the engine's code (:func:`_code_key`), so a sink drained by
+    other code is never served for this code's output."""
     import os
     import shutil
     import tempfile
 
-    from rdf_tabular_spark.streaming import incremental
-
     src = _event_stream_dir(sf_dir)
     key = _staging_key(f"{sf_dir}/events.parquet")
-    with open(incremental.__file__, "rb") as f:
-        code = hashlib.sha256(f.read()).hexdigest()[:12]
+    code = _code_key()
     work = os.path.join(
         tempfile.gettempdir(), f"rdf_tabular_spark_{kind}_sink_{key}_{code}")
     marker = os.path.join(work, "_DRAINED")

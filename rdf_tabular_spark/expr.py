@@ -180,6 +180,18 @@ class Case(Expr):
         return Case(self.branches, value)
 
 
+class Struct(Expr):
+    """``named_struct(...)`` over its :class:`Alias` *fields*."""
+
+    __slots__ = ("fields",)
+
+    def __init__(self, fields: tuple[Alias, ...]):
+        super().__init__(call(
+            "named_struct",
+            *[a for f in fields for a in (f.name, f.child)]).sql)
+        self.fields = fields
+
+
 def call(name: str, *args: object) -> Expr:
     """``name(args...)``: a SQL function, by its registered name."""
     return Expr(f"{name}({', '.join(map(sql, args))})")
@@ -233,8 +245,12 @@ def aggregate(arr: Expr, initial: object, merge) -> Expr:
     return Expr(f"aggregate({arr.sql}, {sql(initial)}, {_lambda(merge)})")
 
 
-def struct(*fields: Alias) -> Expr:
-    return call("named_struct", *[a for f in fields for a in (f.name, f.child)])
+def zip_with(left: Expr, right: Expr, fn) -> Expr:
+    return Expr(f"zip_with({left.sql}, {right.sql}, {_lambda(fn)})")
+
+
+def struct(*fields: Alias) -> Struct:
+    return Struct(fields)
 
 
 def _function(name: str):
@@ -249,6 +265,8 @@ array = _function("array")
 array_compact = _function("array_compact")
 array_distinct = _function("array_distinct")
 array_join = _function("array_join")
+array_repeat = _function("array_repeat")
+ascii = _function("ascii")
 coalesce = _function("coalesce")
 concat = _function("concat")
 concat_ws = _function("concat_ws")
@@ -256,7 +274,9 @@ element_at = _function("element_at")
 explode = _function("explode")
 flatten = _function("flatten")
 greatest = _function("greatest")
+hash = _function("hash")
 isnan = _function("isnan")
+least = _function("least")
 length = _function("length")
 lower = _function("lower")
 lpad = _function("lpad")
@@ -265,7 +285,9 @@ regexp_extract = _function("regexp_extract")
 regexp_replace = _function("regexp_replace")
 replace = _function("replace")
 rtrim = _function("rtrim")
+sequence = _function("sequence")
 sha2 = _function("sha2")
+shiftleft = _function("shiftleft")
 size = _function("size")
 slice = _function("slice")
 split = _function("split")

@@ -19,9 +19,8 @@ Verified set-identical to the per-occurrence + global-dedup formulation at
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .. import TRIPLE_COLUMNS
+from .. import expr as S
 from . import annotate, link
 
 
@@ -35,17 +34,17 @@ def build_graph(files: DataFrame, extracted: DataFrame,
     output, which keeps the whole job on one content scan. *extracted*
     may include the file rows; only the structure kinds are read."""
     canon = link.canonicalize_mentions(extracted, labels)
-    defs = extracted.filter(F.col("kind").isin("def", "class"))
+    is_def = S.col("kind").isin("def", "class")
+    defs = extracted.filter(is_def.sql)
     # one dedup shuffle for all edges, on ONLY the columns edge emission
     # reads — dropDuplicates shuffles whole rows, so projecting first
     # roughly halves the shuffled bytes; def/class collapse to one key
     # value because both emit the same (file defines sym) edge
     edge_cols = ["repo", "path", "kind", "name"]
     edge_stream = canon.select(*edge_cols).unionByName(
-        defs.select(*edge_cols)).withColumn(
-        "_ekey",
-        F.when(F.col("kind").isin("def", "class"), F.lit("defsym"))
-        .otherwise(F.col("kind")))
+        defs.select(*edge_cols)).selectExpr(
+        *edge_cols,
+        S.when(is_def, "defsym").otherwise(S.col("kind")).alias("_ekey").sql)
     edges = edge_stream.dropDuplicates(
         ["repo", "path", "_ekey", "name"]).drop("_ekey")
     return (
@@ -54,5 +53,4 @@ def build_graph(files: DataFrame, extracted: DataFrame,
         .unionByName(annotate.symbol_metadata_triples(defs))
         .unionByName(annotate.file_level_triples(files))
         .unionByName(annotate.repo_triples(files))
-        .select(*TRIPLE_COLUMNS)
     )

@@ -6,7 +6,7 @@ the vocabulary size: labels = connected_components(vocabulary,
 candidate_pairs(vocabulary)). Pipeline — all set-level, skew-aware:
 
 1. distinct mentions (tiny vs. the triple stream: map-side-combined distinct)
-2. normalize + character-3-gram shingles (pure column expressions)
+2. normalize + character-3-gram shingles (native SQL expressions)
 3. minhash signatures: B bands x R rows, each minhash the minimum of
    ``hash(shingle, seed)`` over the shingles (``ops.dedup.
    minhash_signature``, one native fold, no UDF; the reference has no
@@ -29,6 +29,10 @@ candidate_pairs(vocabulary)). Pipeline — all set-level, skew-aware:
    Python, which saves the distributed loop's scheduling latency
 7. canonicalize_mentions: a broadcast alias join rewrites the mention
    names on the narrow extracted rows, before assembly emits any triple
+
+The expression builders (normalize_mention, shingles, shingle_code,
+minhash_bands) take and return Spark SQL text (:mod:`..expr`); the plans
+cross the py4j bridge once per projection.
 """
 
 from __future__ import annotations
@@ -36,8 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import expr as S
+from ..csvw.datatypes import RDF_TYPE
+from ..expr import Expr
+from ..operators.emit import triple, triple_rows
 from ..ops.dedup import minhash_signature
-from .annotate import module_iri
+from .annotate import KG, module_iri
 
 N_BANDS = 8
 ROWS_PER_BAND = 2
@@ -50,43 +58,39 @@ SMALL_VOCAB = 4096
 CC_ROUNDS = 10
 
 
-def normalize_mention(c):
-    n = F.lower(c)
-    n = F.regexp_replace(n, r"^\./", "")
-    n = F.regexp_replace(n, r"[/._-]+", ".")
-    return n
+def normalize_mention(c: Expr) -> Expr:
+    n = S.regexp_replace(S.lower(c), r"^\./", "")
+    return S.regexp_replace(n, r"[/._-]+", ".")
 
 
-def shingles(c, k: int = 3):
-    padded = F.concat(F.lit("^"), c, F.lit("$"))
-    idx = F.sequence(F.lit(1), F.greatest(F.length(padded) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(padded, i, k)))
+def shingles(c: Expr, k: int = 3) -> Expr:
+    padded = S.concat("^", c, "$")
+    idx = S.sequence(1, S.greatest(S.length(padded) - (k - 1), 1))
+    return S.array_distinct(
+        S.transform(idx, lambda i: S.substring(padded, i, k)))
 
 
-def shingle_code(t):
+def shingle_code(t: Expr) -> Expr:
     """The shingle *t* (at most 3 characters) as a long: code point + 1 of
     each character in its own 21 bits, 0 for no character. Injective, so
     set sizes over codes equal those over the strings, and set operations
     on them run on primitive longs."""
-    code = F.lit(0).cast("long")
+    code = S.lit(0).cast("long")
     for p in range(3):
-        cp = F.ascii(F.substring(t, p + 1, 1)).cast("long") + 1
-        code = code + F.shiftleft(
-            F.when(F.length(t) > p, cp).otherwise(F.lit(0)), 21 * p)
+        cp = S.ascii(S.substring(t, p + 1, 1)).cast("long") + 1
+        code = code + S.shiftleft(
+            S.when(S.length(t) > p, cp).otherwise(0), 21 * p)
     return code
 
 
-def minhash_bands(sh):
+def minhash_bands(sh: Expr) -> Expr:
     """array of N_BANDS band-hash values over ROWS_PER_BAND minhashes each."""
     sig = minhash_signature(sh, N_BANDS * ROWS_PER_BAND)
-    bands = []
-    for b in range(N_BANDS):
-        row_hashes = [
-            F.element_at(sig, b * ROWS_PER_BAND + r + 1)
-            for r in range(ROWS_PER_BAND)
-        ]
-        bands.append(F.hash(*row_hashes, F.lit(b)))
-    return F.array(*bands)
+    return S.array(*[
+        S.hash(*[S.element_at(sig, b * ROWS_PER_BAND + r + 1)
+                 for r in range(ROWS_PER_BAND)], b)
+        for b in range(N_BANDS)
+    ])
 
 
 def link_mentions(mentions: DataFrame,
@@ -145,47 +149,39 @@ def _lsh_pairs(mentions: DataFrame,
     """(signature checkpoint, pairs) of :func:`candidate_pairs`; the
     caller releases the checkpoint once nothing reads the pairs."""
     m = (
-        mentions.select(F.col("mention"))
-        .distinct()
-        .withColumn("norm", normalize_mention(F.col("mention")))
-        .withColumn("sh", shingles(F.col("norm")))
-        .withColumn("bands", minhash_bands(F.col("sh")))
+        mentions.select("mention").distinct()
+        .selectExpr("*", normalize_mention(S.col("mention")).alias("norm").sql)
+        .selectExpr("*", shingles(S.col("norm")).alias("sh").sql)
+        .selectExpr("*", minhash_bands(S.col("sh")).alias("bands").sql)
     )
     # the distinct-mention set is orders of magnitude smaller than the
     # mention stream; localCheckpoint it so the LSH self-join's two sides
     # (and the downstream CC loop) don't each re-run the distinct + minhash
     # over the full extraction output. From here on the shingles are
     # codes: the verification below intersects arrays of longs
-    m = m.withColumn("sh", F.transform("sh", shingle_code)) \
-        .localCheckpoint(eager=False)
-    exploded = m.select(
-        "mention", "sh", F.posexplode("bands").alias("band", "key"))
-
+    m = m.selectExpr(
+        "mention", "norm",
+        S.transform(S.col("sh"), shingle_code).alias("sh").sql, "bands",
+    ).localCheckpoint(eager=False)
     # hot-bucket guard: drop degenerate buckets via a windowed count —
     # one shuffle on (band, key), which the self-join below reuses
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "key")
     bucketed = (
-        exploded.withColumn("n", F.count(F.lit(1)).over(w))
-        .filter(F.col("n") <= MAX_BUCKET)
+        m.selectExpr("mention", "sh", "posexplode(bands) AS (band, key)")
+        .selectExpr("*", "count(1) OVER (PARTITION BY band, key) AS n")
+        .filter(f"n <= {MAX_BUCKET}")
         .drop("n")
     )
-    a = bucketed.select(
-        "band", "key", F.col("mention").alias("a"), F.col("sh").alias("sh_a"))
-    b = bucketed.select(
-        "band", "key", F.col("mention").alias("b"), F.col("sh").alias("sh_b"))
+    a = bucketed.selectExpr("band", "key", "mention AS a", "sh AS sh_a")
+    b = bucketed.selectExpr("band", "key", "mention AS b", "sh AS sh_b")
     # verify before the dedup: the shuffle then carries the few kept
     # (a, b, jaccard) rows instead of every candidate with both shingle
     # arrays; |A∪B| comes from the set sizes, one array_intersect per row
     pairs = (
         a.join(b, ["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("i", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("i") / (F.size("sh_a") + F.size("sh_b") - F.col("i")))
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter("a < b")
+        .selectExpr("*", "size(array_intersect(sh_a, sh_b)) AS i")
+        .selectExpr("*", "i / (size(sh_a) + size(sh_b) - i) AS jaccard")
+        .filter((S.col("jaccard") >= jaccard_threshold).sql)
         .select("a", "b", "jaccard")
         .dropDuplicates(["a", "b"])
     )
@@ -209,26 +205,24 @@ def shingle_blocked_pairs(mentions: DataFrame,
     once. The df cap bounds the per-shingle join fan-out to max_df², and
     the agg is map-side combined; the mention VOCABULARY (distinct
     names, not the 10^12-row mention stream) is the join input."""
-    from pyspark.sql import Window
-
     m = (
         mentions.select("mention").distinct()
-        .withColumn("norm", normalize_mention(F.col("mention")))
-        .select("mention", F.explode(shingles(F.col("norm"))).alias("t"))
+        .selectExpr("mention", S.explode(shingles(
+            normalize_mention(S.col("mention")))).alias("t").sql)
     )
     live = (
-        m.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("t")))
-        .filter(F.col("df") <= max_df)
+        m.selectExpr("*", "count(1) OVER (PARTITION BY t) AS df")
+        .filter(f"df <= {max_df}")
         .drop("df")
     )
-    a = live.select(F.col("t"), F.col("mention").alias("a"))
-    b = live.select(F.col("t"), F.col("mention").alias("b"))
+    a = live.selectExpr("t", "mention AS a")
+    b = live.selectExpr("t", "mention AS b")
     return (
         a.join(b, "t")
-        .filter(F.col("a") < F.col("b"))
+        .filter("a < b")
         .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
+        .agg(F.expr("count(1) AS shared"))
+        .filter(f"shared >= {min_shared}")
     )
 
 
@@ -256,44 +250,34 @@ def tfidf_rescore(mentions: DataFrame, pairs: DataFrame) -> DataFrame:
     nothing rescans the corpus."""
     m = (
         mentions.select("mention").distinct()
-        .withColumn("norm", normalize_mention(F.col("mention")))
-        .withColumn("sh", shingles(F.col("norm")))
+        .selectExpr("mention", shingles(
+            normalize_mention(S.col("mention"))).alias("sh").sql)
         .localCheckpoint(eager=False)
     )
     n = m.count()
     idf = (
-        m.select(F.explode("sh").alias("t"))
-        .groupBy("t").agg(F.count(F.lit(1)).alias("df"))
-        .select(
-            "t",
-            F.round(F.log((F.lit(float(n + 1))) / (F.col("df") + 1)) * 1e6)
-            .cast("long").alias("idf_micro"))
+        m.selectExpr("explode(sh) AS t")
+        .groupBy("t").agg(F.expr("count(1) AS df"))
+        .selectExpr("t", f"CAST(round(ln({S.sql(float(n + 1))} / (df + 1))"
+                         " * 1000000.0D) AS long) AS idf_micro")
     )
     pa = (
         pairs.select("a", "b")
-        .join(m.select(F.col("mention").alias("a"),
-                       F.col("sh").alias("sh_a")), "a")
-        .join(m.select(F.col("mention").alias("b"),
-                       F.col("sh").alias("sh_b")), "b")
-        .select("a", "b", "sh_a", "sh_b",
-                F.explode(F.array_union("sh_a", "sh_b")).alias("t"))
-        .select("a", "b", "t",
-                (F.array_contains("sh_a", F.col("t"))
-                 & F.array_contains("sh_b", F.col("t"))).alias("_probe"))
+        .join(m.selectExpr("mention AS a", "sh AS sh_a"), "a")
+        .join(m.selectExpr("mention AS b", "sh AS sh_b"), "b")
+        .selectExpr("a", "b", "sh_a", "sh_b",
+                    "explode(array_union(sh_a, sh_b)) AS t")
+        .selectExpr("a", "b", "t", "array_contains(sh_a, t) "
+                    "AND array_contains(sh_b, t) AS _probe")
     )
-    scored = (
+    return (
         pa.join(F.broadcast(idf), "t")
         .groupBy("a", "b")
-        .agg(
-            F.sum(F.when(F.col("_probe"), F.col("idf_micro"))
-                  .otherwise(F.lit(0))).alias("num"),
-            F.sum("idf_micro").alias("den"))
-        .select(
-            "a", "b",
-            F.expr("(2 * 1000000 * num + den) div (2 * den)")
-            .alias("tfidf_micro"))
+        .agg(F.expr("sum(CASE WHEN _probe THEN idf_micro ELSE 0 END) AS num"),
+             F.expr("sum(idf_micro) AS den"))
+        .selectExpr("a", "b", "(2 * 1000000 * num + den) div (2 * den) "
+                    "AS tfidf_micro")
     )
-    return scored
 
 
 def connected_components(
@@ -309,23 +293,22 @@ def connected_components(
     # a self-loop per vertex folds the vertex's own label into the
     # neighbour min, so a round is one join + one aggregate; the self-loop
     # also tells vertices from pair endpoints missing from `mentions`
-    own = F.col("x").eqNullSafe(F.col("y"))
-    p = pairs.filter(F.col("a") != F.col("b"))
+    own = "x <=> y"
+    p = pairs.filter("a != b")
     edges = (
-        p.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .union(p.select(F.col("b").alias("x"), F.col("a").alias("y")))
-        .union(mentions.select(F.col("mention").alias("x"),
-                               F.col("mention").alias("y")).distinct())
+        p.selectExpr("a AS x", "b AS y")
+        .union(p.selectExpr("b AS x", "a AS y"))
+        .union(mentions.selectExpr("mention AS x", "mention AS y").distinct())
     ).persist()
 
     def step(state: DataFrame, _: int) -> DataFrame:
-        labels = state.select(F.col("x").alias("mention"), "label")
+        labels = state.selectExpr("x AS mention", "label")
         return (
-            edges.join(labels, F.col("y").eqNullSafe(F.col("mention")))
+            edges.join(labels, F.expr("y <=> mention"))
             .groupBy("x")
-            .agg(F.min("label").alias("label"),
-                 F.min(F.when(own, F.col("label"))).alias("old"))
-            .filter(F.col("old").isNotNull() | F.col("x").isNull())
+            .agg(F.expr("min(label) AS label"),
+                 F.expr(f"min(CASE WHEN {own} THEN label END) AS old"))
+            .filter("old IS NOT NULL OR x IS NULL")
         )
 
     # Each round references the previous labels once, so the plan grows
@@ -334,26 +317,21 @@ def connected_components(
     # a fixed point change nothing, so stopping there keeps the
     # fixed-step result the SQL twins compute.
     state, _ = caching.iterate(
-        edges.filter(own).select("x", F.col("y").alias("label")), step,
+        edges.filter(own).selectExpr("x", "y AS label"), step,
         max_iter, cut_every=3,
-        until=lambda s, _: not s.filter(F.col("label") != F.col("old"))
-        .limit(1).count(),
+        until=lambda s, _: not s.filter("label != old").limit(1).count(),
         bases=(edges,))
-    return state.select(F.col("x").alias("mention"),
-                        F.col("label").alias("canonical"))
+    return state.selectExpr("x AS mention", "label AS canonical")
 
 
 def entity_table(labels: DataFrame) -> DataFrame:
     """Canonical entity table: (iri, kind, canonical_key, aliases)."""
     return (
         labels.groupBy("canonical")
-        .agg(F.sort_array(F.collect_set("mention")).alias("aliases"))
-        .select(
-            module_iri(F.col("canonical")).alias("iri"),
-            F.lit("Module").alias("kind"),
-            F.col("canonical").alias("canonical_key"),
-            F.col("aliases"),
-        )
+        .agg(F.expr("sort_array(collect_set(mention)) AS aliases"))
+        .selectExpr(module_iri(S.col("canonical")).alias("iri").sql,
+                    "'Module' AS kind", "canonical AS canonical_key",
+                    "aliases")
     )
 
 
@@ -363,12 +341,11 @@ def canonicalize_mentions(extracted: DataFrame, labels: DataFrame) -> DataFrame:
     rows instead of ~300-byte IRI triples. Downstream edge emission is then
     globally unique by construction and the triple-level set-dedup shuffle
     disappears from the hot path."""
-    alias_map = F.broadcast(
-        labels.filter(F.col("mention") != F.col("canonical")))
+    alias_map = F.broadcast(labels.filter("mention != canonical"))
     return (
-        extracted.filter(F.col("kind").isin("import", "dep"))
-        .join(alias_map, F.col("name") == F.col("mention"), "left")
-        .withColumn("name", F.coalesce(F.col("canonical"), F.col("name")))
+        extracted.filter("kind IN ('import', 'dep')")
+        .join(alias_map, F.expr("name = mention"), "left")
+        .withColumn("name", F.expr("coalesce(canonical, name)"))
         .drop("mention", "canonical")
     )
 
@@ -377,38 +354,17 @@ def module_metadata_from_labels(labels: DataFrame, canon_deps: DataFrame) -> Dat
     """Module type/mention/versionSpec triples straight from the label map
     (canonical vocabulary) — replaces remapping + dedup of per-occurrence
     metadata."""
-    from .. import TRIPLE_COLUMNS
-    from .annotate import KG, module_iri, _t
-    from ..csvw.datatypes import RDF_TYPE
-
-    canon_iri = module_iri(F.col("canonical"))
-    type_rows = labels.select("canonical").distinct().select(
-        module_iri(F.col("canonical")).alias("subj"),
-        F.lit(RDF_TYPE).alias("pred"),
-        F.lit(KG + "Module").alias("obj"),
-        F.lit(True).alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-        F.lit(None).cast("string").alias("obj_lang"),
-    )
-    mention_rows = labels.select(
-        canon_iri.alias("subj"),
-        F.lit(KG + "mention").alias("pred"),
-        F.col("mention").alias("obj"),
-        F.lit(False).alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-        F.lit(None).cast("string").alias("obj_lang"),
+    canon_iri = module_iri(S.col("canonical"))
+    type_rows = triple_rows(
+        labels.select("canonical").distinct(),
+        triple(canon_iri, RDF_TYPE, KG + "Module", is_iri=True))
+    mention_rows = triple_rows(
+        labels, triple(canon_iri, KG + "mention", S.col("mention"),
+                       is_iri=False),
     ).dropDuplicates(["subj", "obj"])
-    version_rows = (
-        canon_deps.filter((F.col("kind") == "dep") & F.col("detail").isNotNull())
-        .select("name", "detail").distinct()
-        .select(
-            module_iri(F.col("name")).alias("subj"),
-            F.lit(KG + "versionSpec").alias("pred"),
-            F.col("detail").alias("obj"),
-            F.lit(False).alias("obj_is_iri"),
-            F.lit(None).cast("string").alias("obj_datatype"),
-            F.lit(None).cast("string").alias("obj_lang"),
-        )
-    )
-    return type_rows.unionByName(mention_rows).unionByName(version_rows) \
-        .select(*TRIPLE_COLUMNS)
+    version_rows = triple_rows(
+        canon_deps.filter("kind = 'dep' AND detail IS NOT NULL")
+        .select("name", "detail").distinct(),
+        triple(module_iri(S.col("name")), KG + "versionSpec",
+               S.col("detail"), is_iri=False))
+    return type_rows.unionByName(mention_rows).unionByName(version_rows)

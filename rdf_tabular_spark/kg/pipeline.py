@@ -35,6 +35,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import expr as S
 from . import annotate, extract, link, synth
 from .assemble import build_graph
 
@@ -54,10 +55,9 @@ def _stages(stage, source, extract_stage,
     src = stage("source", source)
     extracted_all = stage("extract", lambda: extract_stage(src))
     extracted = extracted_all.filter(
-        F.col("kind") != extract.FILE_ROW_KIND)
+        (S.col("kind") != extract.FILE_ROW_KIND).sql)
     mentions = extracted.filter(
-        F.col("kind").isin("import", "dep")).select(
-        F.col("name").alias("mention"))
+        S.col("kind").isin("import", "dep").sql).selectExpr("name AS mention")
     labels = stage(
         "labels", lambda: link.link_mentions(mentions, jaccard_threshold))
     entities = stage("entities", lambda: link.entity_table(labels))
@@ -232,11 +232,11 @@ class KGPipeline:
     def verify_invariant(self, results: dict[str, DataFrame]) -> bool:
         """sha256(content) equality end-to-end: the set of (file, sha) pairs
         in the final graph must equal the set recomputed from the source."""
-        src = results["source"].select(
-            annotate.file_iri(F.col("repo"), F.col("path")).alias("subj"),
-            F.sha2(F.col("content"), 256).alias("obj"))
+        src = results["source"].selectExpr(
+            annotate.file_iri(S.col("repo"), S.col("path")).alias("subj").sql,
+            "sha2(content, 256) AS obj")
         graph = results["triples"].filter(
-            F.col("pred") == annotate.KG + "sha256").select("subj", "obj")
+            (S.col("pred") == annotate.KG + "sha256").sql).select("subj", "obj")
         return (
             src.exceptAll(graph).isEmpty()
             and graph.exceptAll(src).isEmpty()

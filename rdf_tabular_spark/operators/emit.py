@@ -59,16 +59,31 @@ def _base_dir(base: str) -> str:
     return no_frag.rsplit("/", 1)[0] + "/" if "/" in no_frag else no_frag
 
 
-def triple(subj: Expr, pred: Expr, obj: Expr, *, is_iri: bool | Expr,
-           dt: Expr | None = None, lang: Expr | None = None) -> Expr:
+def triple(subj: Expr | str, pred: Expr | str, obj: Expr | str, *,
+           is_iri: bool | Expr, dt: Expr | None = None,
+           lang: Expr | None = None) -> Expr:
+    """One triple struct (``TRIPLE_COLUMNS``); a Python ``str`` term is a
+    literal."""
     return S.struct(
-        subj.cast("string").alias("subj"),
-        pred.cast("string").alias("pred"),
-        obj.cast("string").alias("obj"),
+        S.lit(subj).cast("string").alias("subj"),
+        S.lit(pred).cast("string").alias("pred"),
+        S.lit(obj).cast("string").alias("obj"),
         (S.lit(is_iri) if isinstance(is_iri, bool) else is_iri).alias("obj_is_iri"),
         (dt if dt is not None else S.lit(None).cast("string")).alias("obj_datatype"),
         (lang if lang is not None else S.lit(None).cast("string")).alias("obj_lang"),
     )
+
+
+def triple_rows(df: DataFrame, t: Expr) -> DataFrame:
+    """The triple rows of *t* over *df*. A :func:`triple` is one row per
+    input row, its fields projected directly (the optimizer does not
+    inline a struct with two computed fields into an aggregate below it);
+    any other struct expression, or the ``explode`` of an array of
+    triples, is un-nested."""
+    if isinstance(t, S.Struct):
+        return df.selectExpr(*[f.sql for f in t.fields])
+    return (df.selectExpr(t.alias("t").sql)
+            .selectExpr(*[f"t.{c} AS {c}" for c in TRIPLE_COLUMNS]))
 
 
 def skolem(*parts: Expr | str, prefix: str = "_:b") -> Expr:
@@ -325,10 +340,7 @@ def emit_table_triples(
         return cells_df.sparkSession.createDataFrame([], TRIPLE_SCHEMA)
 
     all_triples = S.concat(*per_column_arrays) if len(per_column_arrays) > 1 else per_column_arrays[0]
-    return (
-        cells_df.selectExpr(S.explode(all_triples).alias("t").sql)
-        .selectExpr(*[f"t.{c} AS {c}" for c in TRIPLE_COLUMNS])
-    )
+    return triple_rows(cells_df, S.explode(all_triples))
 
 
 def _triple_struct_ddl() -> str:

@@ -15,8 +15,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _escape_literal(c: Column) -> Column:
-    # N-Triples string escaping: backslash first, then quote, then controls
+def escape_literal(c: Column) -> Column:
+    """A literal's lexical form escaped for a double-quoted N-Triples or
+    Turtle string: backslash first, then quote, then controls."""
     e = F.replace(c, F.lit("\\"), F.lit("\\\\"))
     e = F.replace(e, F.lit('"'), F.lit('\\"'))
     e = F.replace(e, F.lit("\n"), F.lit("\\n"))
@@ -33,7 +34,7 @@ def _stmt_expr() -> Column:
     """``subj pred obj`` statement text (no terminating dot) — shared
     by the N-Triples and N-Quads sinks."""
     obj_iri = _term(F.col("obj"))
-    lit = F.concat(F.lit('"'), _escape_literal(F.col("obj")), F.lit('"'))
+    lit = F.concat(F.lit('"'), escape_literal(F.col("obj")), F.lit('"'))
     obj_lit = (
         F.when(F.col("obj_lang").isNotNull(),
                F.concat(lit, F.lit("@"), F.col("obj_lang")))

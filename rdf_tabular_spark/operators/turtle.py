@@ -24,6 +24,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ntriples import escape_literal
+
 #: default prefix table (insertion order = longest-match preference is
 #: enforced in code, not order)
 DEFAULT_PREFIXES: dict[str, str] = {
@@ -36,13 +38,6 @@ DEFAULT_PREFIXES: dict[str, str] = {
 #: conservative PN_LOCAL: compaction only applies when the local part
 #: needs no grammar escapes
 _LOCAL_SAFE = "^[A-Za-z0-9_][A-Za-z0-9_.-]*$"
-
-
-def _escape_literal(c: Column) -> Column:
-    for raw, esc in (("\\", "\\\\"), ('"', '\\"'),
-                     ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t")):
-        c = F.replace(c, F.lit(raw), F.lit(esc))
-    return c
 
 
 def _iri_term(c: Column, prefixes: dict[str, str]) -> Column:
@@ -62,7 +57,7 @@ def _iri_term(c: Column, prefixes: dict[str, str]) -> Column:
 
 
 def _object_term(prefixes: dict[str, str]) -> Column:
-    lit = F.concat(F.lit('"'), _escape_literal(F.col("obj")), F.lit('"'))
+    lit = F.concat(F.lit('"'), escape_literal(F.col("obj")), F.lit('"'))
     lit = F.when(
         F.col("obj_lang").isNotNull(),
         F.concat(lit, F.lit("@"), F.col("obj_lang")),

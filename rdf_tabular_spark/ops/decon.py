@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import expr as S
 from .text import normalize_text
 
 
@@ -92,7 +93,8 @@ def fuzzy_decon_pairs(
             base = base.withColumn(
                 "shh", F.transform("sh", lambda s: F.xxhash64(s))
             ).withColumn(
-                "sig", minhash_signature(F.col("shh"), bands * rows_per_band))
+                "sig", F.expr(minhash_signature(
+                    S.col("shh"), bands * rows_per_band).sql))
             keys = F.array(*[
                 F.hash(F.lit(b), *[
                     F.element_at("sig", b * rows_per_band + r + 1)

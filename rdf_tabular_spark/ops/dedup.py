@@ -21,7 +21,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import expr as S
 from ..caching import cache_bounded as _cache
+from ..expr import Expr
 from .text import normalize_text
 
 
@@ -129,18 +131,19 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(sh: Column, n_hashes: int = 32) -> Column:
-    """n_hashes MinHash values, each = min(hash(shingle, seed)). Native."""
+def minhash_signature(sh: Expr, n_hashes: int = 32) -> Expr:
+    """n_hashes MinHash values, each = min(hash(shingle, seed)). Native;
+    SQL text (:mod:`..expr`), so a Column caller wraps it in ``F.expr``."""
     # One fold over the shingle array updating all n_hashes minima at once —
     # 32 separate transform+array_min expressions bloat whole-stage codegen
     # (multi-MiB task binaries); this keeps the tree linear in n_hashes.
-    init = F.array_repeat(F.lit(9223372036854775807).cast("long"), n_hashes)
-    return F.aggregate(
+    init = S.array_repeat(S.lit(9223372036854775807).cast("long"), n_hashes)
+    return S.aggregate(
         sh, init,
-        lambda acc, x: F.zip_with(
+        lambda acc, x: S.zip_with(
             acc,
-            F.array(*[F.hash(x, F.lit(s)).cast("long") for s in range(n_hashes)]),
-            lambda u, v: F.least(u, v)),
+            S.array(*[S.hash(x, s).cast("long") for s in range(n_hashes)]),
+            lambda u, v: S.least(u, v)),
     )
 
 
@@ -173,7 +176,8 @@ def minhash_lsh_pairs(
     hashed = _cache(with_shingles(df, text_col, k, id_col).select(
         "id", F.transform("sh", lambda s: F.xxhash64(s)).alias("shh"),
     ).withColumn(
-        "sig", minhash_signature(F.col("shh"), bands * rows_per_band)
+        "sig", F.expr(minhash_signature(S.col("shh"),
+                                        bands * rows_per_band).sql)
     ))
     band_keys = F.array(*[
         F.hash(F.lit(bnd), *[

@@ -276,29 +276,32 @@ def construct_merge_batch(batch_df: DataFrame, sink_path: str,
     tri = SnapshotTable(os.path.join(sink_path, "triples"))
     view = SnapshotTable(os.path.join(sink_path, "view"))
     tri_sid = tri.current_snapshot_id()
-    if tri_sid is None:
-        tri.commit(fresh.localCheckpoint(), "append")
-        view.commit(
-            construct(fresh, patterns, template=template,
-                      filters=filters).localCheckpoint(), "append")
-        return
-    old = tri.read(spark)
     view_sid = view.current_snapshot_id()
-    old_view = view.read(spark)
-    delta = (fresh.join(old.select("subj", "pred", "obj"),
-                        ["subj", "pred", "obj"], "left_anti")
-             .localCheckpoint())
-    if delta.isEmpty():  # replayed batch: publish nothing (r5)
-        return
-    inc = construct_incremental(old, delta, patterns, template,
-                                filters=filters, old_view=old_view) \
-        .localCheckpoint()
+    old_view = None if view_sid is None else view.read(spark)
+    if tri_sid is None:
+        delta = fresh.localCheckpoint()
+        inc = construct(fresh, patterns, template=template, filters=filters)
+        if old_view is not None:
+            inc = inc.join(old_view.select("subj", "pred", "obj"),
+                           ["subj", "pred", "obj"], "left_anti")
+    else:
+        old = tri.read(spark)
+        delta = (fresh.join(old.select("subj", "pred", "obj"),
+                            ["subj", "pred", "obj"], "left_anti")
+                 .localCheckpoint())
+        if delta.isEmpty():  # replayed batch: publish nothing (r5)
+            return
+        inc = construct_incremental(old, delta, patterns, template,
+                                    filters=filters, old_view=old_view)
     # both maintenance streams are monotone (plain-BGP CONSTRUCT is
     # insert-only), so both sinks take append-only conditional commits
     # — delta-sized data, no rewrite of old files (r5; the pre-r5
-    # full-sink overwrite was the documented stand-in)
+    # full-sink overwrite was the documented stand-in). The view commits
+    # first: after a crash between the two commits the triple sink still
+    # lacks the batch, so its replay derives the same delta, and the
+    # anti-join against the view adds only the rows the view lacks.
+    view.commit(inc.localCheckpoint(), "append", require_parent=view_sid)
     tri.commit(delta, "append", require_parent=tri_sid)
-    view.commit(inc, "append", require_parent=view_sid)
 
 
 def run_streaming_construct(

@@ -17,9 +17,9 @@ from __future__ import annotations
 from typing import Any, Iterable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import expr as S
 from ..kg.link import normalize_mention
 
 OUTPUT_SCHEMA = "entity_key string, mention string, n_known int"
@@ -55,9 +55,9 @@ def _registry_update(
 def incremental_entity_registry(mentions: DataFrame) -> DataFrame:
     """mentions(mention) [streaming] -> stream of first-seen
     (entity_key, mention, n_known) rows."""
-    keyed = mentions.select(
-        normalize_mention(F.col("mention")).alias("entity_key"),
-        F.col("mention"))
+    keyed = mentions.selectExpr(
+        normalize_mention(S.col("mention")).alias("entity_key").sql,
+        "mention")
     return keyed.groupBy("entity_key").applyInPandasWithState(
         _registry_update,
         outputStructType=OUTPUT_SCHEMA,

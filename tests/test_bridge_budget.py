@@ -1,19 +1,24 @@
-"""Bridge-call budget of csv2rdf plan construction.
+"""Bridge-call budget of plan construction, for both products.
 
 ``reader.to_triples`` compiles CSVW metadata into one cell pipeline and one
-set of triple templates per column. Each ``pyspark.sql.functions`` call is
-several py4j round trips, so building those expressions node by node costs
-tens of thousands of round trips per call, growing with the square of the
-column count when every column rebuilds every template binding. The
-expressions are rendered as Spark SQL text instead, one bridge call per
-projection; these tests count the round trips ``to_triples`` makes and
-check the wide table's output against a set computed in plain Python.
+set of triple templates per column; the KG job's ``assemble.build_graph``
+and ``link.candidate_pairs`` build IRIs, triples, shingles and minhash
+bands. Each ``pyspark.sql.functions`` call is several py4j round trips, so
+building those expressions node by node costs thousands of round trips
+per call (for csv2rdf, growing with the square of the column count when
+every column rebuilds every template binding). The expressions are
+rendered as Spark SQL text instead, one bridge call per projection; these
+tests count the round trips each plan builder makes, check the wide
+table's output against a set computed in plain Python, and pin the LSH
+band keys, which the SQL text must compute as the column calls did.
 """
 
 from __future__ import annotations
 
 import contextlib
 import csv
+import hashlib
+import json
 
 import pytest
 from py4j.clientserver import ClientServerConnection
@@ -75,14 +80,16 @@ LINEITEM_ROWS = [
 
 @contextlib.contextmanager
 def count_round_trips():
-    """Count py4j commands sent to the JVM (each one is a round trip)."""
-    counter = {"n": 0}
+    """Count py4j commands sent to the JVM (each one is a round trip);
+    ``detach`` counts those that release a Python-side reference."""
+    counter = {"n": 0, "detach": 0}
     saved = []
     for cls in (ClientServerConnection, GatewayConnection):
         orig = cls.send_command
 
         def counted(self, command, *args, _orig=orig, **kwargs):
             counter["n"] += 1
+            counter["detach"] += command.startswith("m\nd\n")
             return _orig(self, command, *args, **kwargs)
 
         saved.append((cls, orig))
@@ -163,3 +170,63 @@ def test_wide_plan_budget(spark, tmp_path, n_cols, budget):
     }
     got = {tuple(r) for r in res.triples.collect()}
     assert got == expected
+
+
+@pytest.fixture(scope="module")
+def kg_inputs(spark):
+    """(files, structure rows, labels, mentions) of a small synth table;
+    every frame is lazy, and the labels map each mention to itself."""
+    from rdf_tabular_spark.kg import extract, synth
+
+    ext = extract.extract_structures(synth.synth_source_table(spark, 20))
+    structures = ext.filter(f"kind != '{extract.FILE_ROW_KIND}'")
+    mentions = structures.filter("kind IN ('import', 'dep')") \
+        .selectExpr("name AS mention")
+    labels = mentions.selectExpr("mention", "mention AS canonical")
+    return extract.unpack_files(ext), structures, labels, mentions
+
+
+# building these plans with column calls took 5,263-5,855 (build_graph)
+# and 1,537-2,560 (the candidate_pairs query) round trips on a 300-file
+# table; the budgets are one fifth of the lower counts
+@pytest.mark.parametrize("plan,budget", [("build_graph", 1050),
+                                         ("candidate_pairs", 300)])
+def test_kg_plan_budget(kg_inputs, plan, budget):
+    from rdf_tabular_spark import caching
+    from rdf_tabular_spark.kg import assemble, link
+
+    files, structures, labels, mentions = kg_inputs
+    with count_round_trips() as counter:
+        if plan == "build_graph":
+            assemble.build_graph(files, structures, labels)
+        else:
+            sig, _ = link._lsh_pairs(mentions, 0.55)
+    if plan == "candidate_pairs":
+        caching.release(sig)
+    # detach commands are left out: how many objects the garbage collector
+    # releases inside the count depends on what earlier tests left behind
+    trips = counter["n"] - counter["detach"]
+    assert trips <= budget, (
+        f"{plan}: {trips} py4j round trips building the plan")
+
+
+#: sha256 of the sorted (mention, band keys) of ``_seeded_vocabulary()``,
+#: as the column-call ``minhash_bands`` computed them
+SEEDED_BAND_KEYS = (
+    "e0a1da5f2420629729df4bdd88a2ad29bbc5b407838ab815fb05d83178003e39")
+
+
+def test_minhash_band_keys_unchanged(spark):
+    from test_kg import _seeded_vocabulary
+
+    from rdf_tabular_spark import expr as S
+    from rdf_tabular_spark.kg import link
+
+    mentions = spark.createDataFrame(
+        [(n,) for n in _seeded_vocabulary()], "mention string")
+    sh = link.shingles(link.normalize_mention(S.col("mention")))
+    rows = mentions.selectExpr("*", sh.alias("sh").sql).selectExpr(
+        "mention", link.minhash_bands(S.col("sh")).alias("bands").sql)
+    keys = sorted((r["mention"], list(r["bands"])) for r in rows.collect())
+    assert hashlib.sha256(json.dumps(keys).encode()).hexdigest() \
+        == SEEDED_BAND_KEYS

@@ -14,6 +14,18 @@ from rdf_tabular_spark.kg import graph
 from rdf_tabular_spark.kg.annotate import KG
 
 
+def _import_triples(spark, rows):
+    """(file, module) rows -> kg:imports triples of repo "r"."""
+    from rdf_tabular_spark import expr as S
+    from rdf_tabular_spark.kg.annotate import file_iri, module_iri
+    from rdf_tabular_spark.operators.emit import triple, triple_rows
+
+    return triple_rows(
+        spark.createDataFrame(rows, "f string, m string"),
+        triple(file_iri(S.lit("r"), S.col("f")), KG + "imports",
+               module_iri(S.col("m")), is_iri=True))
+
+
 def _triples(spark, edges, extra=()):
     rows = [
         (s, KG + p, o, True, None, None) for s, p, o in edges
@@ -239,8 +251,6 @@ def test_orient_by_degree_bounds_hub_fanout(spark):
 
 def test_clustering_coefficient_closed_form(spark):
     from rdf_tabular_spark.kg import graph
-    from rdf_tabular_spark.kg.annotate import KG, file_iri, module_iri
-    from pyspark.sql import functions as F
 
     # 4 files all importing {a,b,c} (a triangle) and one of them also d:
     # d has degree 3 but closes no triangle beyond a-b-c... build edges
@@ -253,13 +263,7 @@ def test_clustering_coefficient_closed_form(spark):
     for f in ("f3", "f4"):
         for m in ("a", "b", "d"):
             rows.append((f, m))
-    df = spark.createDataFrame(rows, "f string, m string").select(
-        file_iri(F.lit("r"), F.col("f")).alias("subj"),
-        F.lit(KG + "imports").alias("pred"),
-        module_iri(F.col("m")).alias("obj"),
-        F.lit(True).alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-        F.lit(None).cast("string").alias("obj_lang"))
+    df = _import_triples(spark, rows)
     got = {r.node.rsplit("/", 1)[-1]: (r.degree, r.triangles, r.clustering)
            for r in graph.clustering_coefficient(df, min_files=2).collect()}
     # a,b: degree 3 (b/c/d resp a/c/d), 2 triangles (abc, abd)
@@ -275,10 +279,8 @@ def test_clustering_oriented_equals_plain(spark):
 
     src = __import__("rdf_tabular_spark.kg.synth", fromlist=["synth"])
     table = src.synth_source_table(spark, 300)
-    from rdf_tabular_spark.kg import annotate, extract
-    from pyspark.sql import functions as F
-    ext = extract.extract_structures(table)
-    triples = annotate.structure_triples(ext)
+    from rdf_tabular_spark.kg.pipeline import build_kg
+    triples = build_kg(table)["triples"]
     a = sorted(map(tuple, graph.clustering_coefficient(
         triples, orient=True).collect()))
     b = sorted(map(tuple, graph.clustering_coefficient(
@@ -287,9 +289,7 @@ def test_clustering_oriented_equals_plain(spark):
 
 
 def test_kcore_peels_tail(spark):
-    from pyspark.sql import functions as F
     from rdf_tabular_spark.kg import graph
-    from rdf_tabular_spark.kg.annotate import KG, file_iri, module_iri
 
     # K4 on {a,b,c,d} plus a pendant chain d-e: 2-core = K4 only after
     # peeling e (deg 1) and then re-checking d
@@ -301,13 +301,7 @@ def test_kcore_peels_tail(spark):
              ("d","e"), ("d","e")] * 1):
         for f in (f"f{i}x", f"f{i}y"):
             rows += [(f, x), (f, y)]
-    df = spark.createDataFrame(rows, "f string, m string").select(
-        file_iri(F.lit("r"), F.col("f")).alias("subj"),
-        F.lit(KG + "imports").alias("pred"),
-        module_iri(F.col("m")).alias("obj"),
-        F.lit(True).alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-        F.lit(None).cast("string").alias("obj_lang"))
+    df = _import_triples(spark, rows)
     got = {r.node.rsplit("/", 1)[-1]: r.core_degree
            for r in graph.kcore(df, k=3, min_files=2).collect()}
     assert set(got) == {"a", "b", "c", "d"}
@@ -474,20 +468,12 @@ def test_predict_links_partition_invariant(spark):
 
 
 def _coimport_df(spark, edges):
-    from pyspark.sql import functions as F
-    from rdf_tabular_spark.kg.annotate import KG, file_iri, module_iri
 
     rows = []
     for i, (x, y) in enumerate(edges):
         for f in (f"f{i}x", f"f{i}y"):
             rows += [(f, x), (f, y)]
-    return spark.createDataFrame(rows, "f string, m string").select(
-        file_iri(F.lit("r"), F.col("f")).alias("subj"),
-        F.lit(KG + "imports").alias("pred"),
-        module_iri(F.col("m")).alias("obj"),
-        F.lit(True).alias("obj_is_iri"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-        F.lit(None).cast("string").alias("obj_lang"))
+    return _import_triples(spark, rows)
 
 
 def test_ktruss_tighter_than_kcore(spark):

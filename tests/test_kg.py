@@ -366,14 +366,15 @@ def test_candidate_pairs_equals_python_reference(spark):
     exact Jaccard reaches the threshold, once however many bands hit."""
     from collections import Counter, defaultdict
 
+    from rdf_tabular_spark import expr as S
     from rdf_tabular_spark.kg import link
 
     names = _seeded_vocabulary()
     mentions = spark.createDataFrame([(n,) for n in names], "mention string")
     rows = (
-        mentions.withColumn("sh", link.shingles(
-            link.normalize_mention(F.col("mention"))))
-        .withColumn("bands", link.minhash_bands(F.col("sh")))
+        mentions.selectExpr("*", link.shingles(link.normalize_mention(
+            S.col("mention"))).alias("sh").sql)
+        .selectExpr("*", link.minhash_bands(S.col("sh")).alias("bands").sql)
         .collect())
     sh = {r["mention"]: set(r["sh"]) for r in rows}
     buckets: dict[tuple[int, int], list[str]] = defaultdict(list)

@@ -298,6 +298,56 @@ def test_streaming_construct_matches_batch(spark, tmp_path):
             construct(asserted, pats, template=tmpl,
                       filters=["f < g"]).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("crash_batch", [0, 1])
+def test_construct_merge_replay_after_crash(spark, tmp_path, monkeypatch,
+                                            crash_batch):
+    """A crash between a CONSTRUCT merge batch's two sink commits: the
+    replay of that batch completes the view, so the view equals batch
+    construct over all delivered triples, with no row twice."""
+    from rdf_tabular_spark.kg.query import construct
+    from rdf_tabular_spark.operators.emit import TRIPLE_SCHEMA
+    from rdf_tabular_spark.sources.snapshots import SnapshotTable
+    from rdf_tabular_spark.streaming.incremental import construct_merge_batch
+
+    kg = "http://rdf-tabular-spark.dev/kg#"
+    pats = [("?f", kg + "imports", "?m"), ("?g", kg + "imports", "?m")]
+    tmpl = [("?f", kg + "coImports", "?g")]
+    sink = str(tmp_path / "sink")
+
+    def imports(pairs):
+        return spark.createDataFrame(
+            [(f"f{a}", kg + "imports", f"m{b}", True, None, None)
+             for a, b in pairs], TRIPLE_SCHEMA)
+
+    batches = [imports([(1, 1), (2, 1), (3, 2)]),
+               imports([(4, 1), (5, 2), (3, 1)])]
+    commit = SnapshotTable.commit
+    for i, batch in enumerate(batches):
+        if i == crash_batch:
+            calls = []
+
+            def crash_second(self, df, *args, **kwargs):
+                calls.append(self.path)
+                if len(calls) == 2:
+                    raise RuntimeError("crash between the commits")
+                return commit(self, df, *args, **kwargs)
+
+            monkeypatch.setattr(SnapshotTable, "commit", crash_second)
+            with pytest.raises(RuntimeError, match="between the commits"):
+                construct_merge_batch(batch, sink, pats, tmpl, ["f < g"])
+            monkeypatch.setattr(SnapshotTable, "commit", commit)
+        # the delivery, or the replay of the batch that crashed
+        construct_merge_batch(batch, sink, pats, tmpl, ["f < g"])
+
+    got = [tuple(r) for r in _read_sink(spark, sink + "/view")
+           .select("subj", "pred", "obj").collect()]
+    want = {tuple(r) for r in construct(
+        batches[0].unionByName(batches[1]), pats, template=tmpl,
+        filters=["f < g"]).select("subj", "pred", "obj").collect()}
+    assert len(got) == len(set(got))
+    assert set(got) == want
     assert got  # the view is non-vacuous: co-import pairs exist
 
 
@@ -458,14 +508,16 @@ def test_stream_stream_join_pairs_cross_batches(spark, tmp_path):
 def test_drained_sink_is_keyed_on_the_streaming_code(spark, tmp_path,
                                                      monkeypatch):
     """A drained sink is served again only to the code that drained it:
-    once streaming/incremental.py changes, the sink is drained anew."""
+    once any module of the package or __spark_entry__.py changes (the
+    funnel runner's merge reaches ops/funnel.py, its stage list is in
+    __spark_entry__.py), the sink is drained anew."""
+    import shutil
     import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     import __spark_entry__ as E
-    from rdf_tabular_spark.streaming import incremental
 
     (tmp_path / "tmp").mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
@@ -474,6 +526,14 @@ def test_drained_sink_is_keyed_on_the_streaming_code(spark, tmp_path,
     pq.write_table(pa.table({"ts": pa.array([3, 1, 2], pa.timestamp("us")),
                              "user_id": [1, 1, 2]}),
                    str(sf / "events.parquet"))
+    # the code key hashes a copy of the code, which the test then edits
+    code = tmp_path / "code"
+    repo = os.path.dirname(os.path.abspath(E.__file__))
+    shutil.copytree(os.path.join(repo, "rdf_tabular_spark"),
+                    code / "rdf_tabular_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    shutil.copy(E.__file__, code / "__spark_entry__.py")
+    monkeypatch.setattr(E, "__file__", str(code / "__spark_entry__.py"))
 
     class Drained:
         def awaitTermination(self, timeout):
@@ -493,10 +553,11 @@ def test_drained_sink_is_keyed_on_the_streaming_code(spark, tmp_path,
 
     assert drain("first") == ["first"]
     assert drain("unused") == ["first"]  # same code: the sink is reused
-    changed = tmp_path / "incremental.py"
-    changed.write_bytes(open(incremental.__file__, "rb").read() + b"\n#\n")
-    monkeypatch.setattr(incremental, "__file__", str(changed))
-    assert drain("second") == ["second"]
+    for changed in ("rdf_tabular_spark/streaming/incremental.py",
+                    "rdf_tabular_spark/ops/funnel.py", "__spark_entry__.py"):
+        with open(code / changed, "ab") as f:
+            f.write(b"\n#\n")
+        assert drain(changed) == [changed]
 
 
 def test_drained_sink_drops_parts_the_commit_log_does_not_list(

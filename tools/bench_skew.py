@@ -47,8 +47,12 @@ def build(spark, n_files: int, skewed: bool, path: str):
 def jobs(spark, src_path: str) -> dict[str, float]:
     from pyspark.sql import functions as F
 
-    from rdf_tabular_spark.kg.annotate import edge_triples, structure_triples
+    from rdf_tabular_spark.kg.annotate import (
+        edge_triples,
+        symbol_metadata_triples,
+    )
     from rdf_tabular_spark.kg.extract import extract_structures
+    from rdf_tabular_spark.kg.link import module_metadata_from_labels
     from rdf_tabular_spark.operators.dedup import dedupe_triples, salted_agg_count
     from rdf_tabular_spark.ops.dedup import minhash_lsh_pairs
     from rdf_tabular_spark.ops.vocab import vocab_counts
@@ -61,6 +65,13 @@ def jobs(spark, src_path: str) -> dict[str, float]:
     extracted.write.mode("overwrite").parquet(src_path + ".extracted")
     extracted = spark.read.parquet(src_path + ".extracted")
     edges = edge_triples(extracted)
+    # the mention-level candidate table: per-occurrence edges plus module
+    # metadata (each mention its own entity) and symbol metadata
+    mentions = extracted.filter("kind IN ('import', 'dep')").selectExpr(
+        "name AS mention", "name AS canonical").distinct()
+    candidates = edges.unionByName(
+        module_metadata_from_labels(mentions, extracted)).unionByName(
+        symbol_metadata_triples(extracted))
     docs = src.select(
         F.concat_ws("/", "repo", "path").alias("doc_id"),
         F.col("content").alias("text"))
@@ -81,7 +92,7 @@ def jobs(spark, src_path: str) -> dict[str, float]:
               ["obj"]).count())
     timed("a3_dedup",
           lambda: dedupe_triples(
-              structure_triples(extracted).unionByName(edges)).count())
+              candidates.unionByName(edges)).count())
     timed("vocab_counts",
           lambda: vocab_counts(docs).count())
     timed("lsh_bands",
