@@ -5086,18 +5086,17 @@ def _keep_committed_parts(sink: str) -> None:
                 os.remove(os.path.join(root, name))
 
 
-def _code_key(root: str | None = None) -> str:
+def _code_key() -> str:
     """Fingerprint of the code a drained sink was made by: every
-    ``rdf_tabular_spark/**/*.py`` file and ``__spark_entry__.py`` under
-    *root* (default: this file's directory), by relative path and
-    content. A runner reaches past ``streaming/incremental.py`` (the
+    ``rdf_tabular_spark/**/*.py`` file and ``__spark_entry__.py`` next
+    to this file, by relative path and content. A runner reaches past ``streaming/incremental.py`` (the
     funnel merge calls ``ops/funnel``, its stage list is in this file),
     so hashing one module served stale sinks."""
     import glob
     import hashlib
     import os
 
-    root = root or os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(os.path.abspath(__file__))
     files = sorted(glob.glob(os.path.join(
         root, "rdf_tabular_spark", "**", "*.py"), recursive=True))
     h = hashlib.sha256()

@@ -263,12 +263,12 @@ def construct_merge_batch(batch_df: DataFrame, sink_path: str,
     """One micro-batch of triples -> maintain a CONSTRUCT materialized
     view. Two sinks under *sink_path*: ``triples`` (the accumulated
     asserted graph — the delta rule probes it) and ``view`` (the
-    maintained CONSTRUCT graph). First batch materializes the view in
-    full; every later batch anti-joins the arrivals against the triple
-    sink (replay idempotence) and runs kg/query.construct_incremental —
+    maintained CONSTRUCT graph). Every batch anti-joins the arrivals
+    against the triple sink (replay idempotence; the first batch
+    against an empty one) and runs kg/query.construct_incremental —
     only delta-sized join chains, the old graph never re-joins itself.
     The full-sink rewrite is the test-scale stand-in for MERGE INTO."""
-    from ..kg.query import construct, construct_incremental
+    from ..kg.query import construct_incremental
     from ..sources.snapshots import SnapshotTable
 
     spark = batch_df.sparkSession
@@ -277,22 +277,15 @@ def construct_merge_batch(batch_df: DataFrame, sink_path: str,
     view = SnapshotTable(os.path.join(sink_path, "view"))
     tri_sid = tri.current_snapshot_id()
     view_sid = view.current_snapshot_id()
+    old = fresh.limit(0) if tri_sid is None else tri.read(spark)
     old_view = None if view_sid is None else view.read(spark)
-    if tri_sid is None:
-        delta = fresh.localCheckpoint()
-        inc = construct(fresh, patterns, template=template, filters=filters)
-        if old_view is not None:
-            inc = inc.join(old_view.select("subj", "pred", "obj"),
-                           ["subj", "pred", "obj"], "left_anti")
-    else:
-        old = tri.read(spark)
-        delta = (fresh.join(old.select("subj", "pred", "obj"),
-                            ["subj", "pred", "obj"], "left_anti")
-                 .localCheckpoint())
-        if delta.isEmpty():  # replayed batch: publish nothing (r5)
-            return
-        inc = construct_incremental(old, delta, patterns, template,
-                                    filters=filters, old_view=old_view)
+    delta = (fresh.join(old.select("subj", "pred", "obj"),
+                        ["subj", "pred", "obj"], "left_anti")
+             .localCheckpoint())
+    if delta.isEmpty():  # replayed batch: publish nothing (r5)
+        return
+    inc = construct_incremental(old, delta, patterns, template,
+                                filters=filters, old_view=old_view)
     # both maintenance streams are monotone (plain-BGP CONSTRUCT is
     # insert-only), so both sinks take append-only conditional commits
     # — delta-sized data, no rewrite of old files (r5; the pre-r5

@@ -298,6 +298,7 @@ def test_streaming_construct_matches_batch(spark, tmp_path):
             construct(asserted, pats, template=tmpl,
                       filters=["f < g"]).collect()}
     assert got == want
+    assert got  # the view is non-vacuous: co-import pairs exist
 
 
 @pytest.mark.parametrize("crash_batch", [0, 1])
