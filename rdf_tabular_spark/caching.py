@@ -76,15 +76,27 @@ def release_caches() -> None:
         _LIVE_CACHES.pop().unpersist()
 
 
+def _scanned_rdds(df: DataFrame) -> list:
+    """The RDDs (checkpoints among them) that *df*'s plan scans."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).rdd() for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "LogicalRDD"]
+
+
+def release_scanned(df: DataFrame) -> None:
+    """Free every checkpoint *df*'s plan scans. Only once nothing reads
+    *df* or those checkpoints any more."""
+    for rdd in _scanned_rdds(df):
+        rdd.unpersist(False)
+
+
 def release_unread(frames: list[DataFrame],
                    reader: DataFrame | None = None) -> None:
     """:func:`release` each of *frames* except a checkpoint that
     *reader*'s plan still scans."""
     keep = set()
     if reader is not None:
-        leaves = reader._jdf.queryExecution().analyzed().collectLeaves()
-        keep = {leaves.apply(i).rdd().id() for i in range(leaves.size())
-                if leaves.apply(i).nodeName() == "LogicalRDD"}
+        keep = {rdd.id() for rdd in _scanned_rdds(reader)}
     for df in frames:
         plan = df._jdf.queryExecution().logical()
         if plan.nodeName() != "LogicalRDD" or plan.rdd().id() not in keep:

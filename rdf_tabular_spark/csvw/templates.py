@@ -4,15 +4,13 @@ CSVW expands ``aboutUrl`` / ``propertyUrl`` / ``valueUrl`` templates per row
 with variables bound to cell values plus ``_row/_sourceRow/_name/_column/
 _sourceColumn`` (reference metadata.rb:1950-1962).
 
-Two paths:
-
-- :func:`compile_template` — the common forms (``{var}``, ``{+var}``,
-  ``{#var}``, multiple vars, literals) compile to **native Spark SQL
-  expressions** (concat + percent-encode, rendered as text by
-  :mod:`..expr`), staying inside codegen.
-- :func:`expand` — a pure-Python RFC 6570 expander covering all operators;
-  used for driver-side constant folding, tests, and as the pandas-UDF
-  fallback for exotic operators (``{/x*}``, ``{?x}``, ...).
+- :func:`compile_template` renders every level-4 form (all eight
+  operators, the prefix modifier ``{v:n}`` and the explode modifier
+  ``*``) as Spark SQL text (concat + percent-encode, through
+  :mod:`..expr`); it is the only renderer of a template over rows.
+- :func:`expand` — a pure-Python RFC 6570 expander; it folds constant
+  templates on the driver and is the oracle the compiler is tested
+  against.
 """
 
 from __future__ import annotations
@@ -141,18 +139,6 @@ def template_variables(template: str) -> list[str]:
     return names
 
 
-def is_native_compilable(template: str) -> bool:
-    """True when every expression uses only the simple/+/# operators with
-    single non-exploded, non-prefixed variables — the native Spark path."""
-    for m in _EXPR_RE.finditer(template):
-        if m.group(1) not in ("", "+", "#"):
-            return False
-        for v in _parse_varlist(m.group(2)):
-            if v.explode or v.prefix is not None:
-                return False
-    return True
-
-
 #: reserved char -> its Java URLEncoder escape (for the +/# un-encode pass).
 #: '*' is absent: URLEncoder leaves it literal, which reserved expansion wants.
 _RESERVED_ESCAPES = [
@@ -189,26 +175,30 @@ def pct_encode(col: Expr, keep_reserved: bool) -> Expr:
 def compile_template(template: str, bindings: dict[str, Expr]) -> Expr:
     """Compile an RFC 6570 template to a Spark SQL expression.
 
-    *bindings* maps variable name -> string expression (already the cell's
-    canonical lexical value). Unbound variables expand to ''. Templates the
-    native path can't express must be routed by the caller to the pandas-UDF
-    fallback (see :func:`is_native_compilable`)."""
+    *bindings* maps variable name -> non-null string expression (the
+    cell's canonical lexical value; a list is bound as its comma-joined
+    values, so ``{v*}`` expands like ``{v}``, as :func:`expand` does with a
+    string). Unbound variables expand to nothing."""
     pieces: list[Expr] = []
     pos = 0
     for m in _EXPR_RE.finditer(template):
         if m.start() > pos:
             pieces.append(S.lit(template[pos : m.start()]))
-        op, spec = m.group(1), m.group(2)
-        keep_reserved = op in ("+", "#")
-        var_cols: list[Expr] = []
-        for var in _parse_varlist(spec):
+        first, sep, named, ifemp, keep_reserved = _OPS[m.group(1)]
+        parts: list[Expr] = []
+        for var in _parse_varlist(m.group(2)):
             if var.name not in bindings:
                 continue
-            var_cols.append(
-                S.coalesce(pct_encode(bindings[var.name], keep_reserved), S.lit("")))
-        if var_cols:
-            body = S.concat_ws(",", *var_cols)
-            pieces.append(S.concat(S.lit(op if op == "#" else ""), body))
+            value = bindings[var.name]
+            if var.prefix is not None:
+                value = S.substring(value, 1, var.prefix)
+            enc = S.coalesce(pct_encode(value, keep_reserved), S.lit(""))
+            if named:
+                enc = (S.when(value == "", S.lit(var.name + ifemp))
+                       .otherwise(S.concat(S.lit(var.name + "="), enc)))
+            parts.append(enc)
+        if parts:
+            pieces.append(S.concat(S.lit(first), S.concat_ws(sep, *parts)))
         pos = m.end()
     if pos < len(template):
         pieces.append(S.lit(template[pos:]))

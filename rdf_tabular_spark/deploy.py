@@ -1,8 +1,8 @@
 """Executor-side code shipping (the programmatic twin of
 ``spark-submit --py-files``, north-rule launch requirement).
 
-Python UDF closures (``mapInPandas`` extractors, pandas UDF template
-expansion) are pickled *by reference* to this package, so executor worker
+Python UDF closures (``mapInPandas`` extractors, the Python record
+framers) are pickled *by reference* to this package, so executor worker
 processes must be able to ``import rdf_tabular_spark`` themselves. Under
 ``spark-submit --py-files rdf_tabular_spark.zip`` that is automatic; for a
 plain driver process launched from an arbitrary cwd (the test driver, a

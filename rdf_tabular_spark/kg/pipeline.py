@@ -35,6 +35,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caching
 from .. import expr as S
 from . import annotate, extract, link, synth
 from .assemble import build_graph
@@ -152,7 +153,14 @@ class KGPipeline:
         t0 = time.time()
         resumed = self._done(name)
         if not resumed:
-            build().write.mode("overwrite").parquet(path)
+            built = build()
+            try:
+                built.write.mode("overwrite").parquet(path)
+            finally:
+                # later stages read the parquet, never the built frame:
+                # the checkpoints it scanned (the link stage's last
+                # propagation round) are dead
+                caching.release_scanned(built)
         df = self.spark.read.parquet(path)
         # per-partition lineage (north rule): row count per part file of
         # the checkpointed output, straight from the parquet footers —

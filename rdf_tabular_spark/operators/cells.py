@@ -495,13 +495,13 @@ def cell_errors_expr(col: CompiledColumn) -> Expr:
 
 
 def cell_binding(col: CompiledColumn) -> Expr:
-    """Template variable value: first value's lexical form (or all values
-    comma-joined for separator columns happens at the template layer)."""
-    return S.coalesce(S.try_element_at(cell_values(col.name), S.lit(1))["lex"], S.lit(""))
-
-
-def cell_binding_arr(col: CompiledColumn) -> Expr:
-    return S.transform(cell_values(col.name), lambda t: t["lex"])
+    """Template variable value, never null: the first value's lexical form
+    ('' when the cell has none); for a separator column all values'
+    lexical forms, comma-joined."""
+    values = cell_values(col.name)
+    if col.separator:
+        return S.array_join(S.transform(values, lambda t: t["lex"]), ",")
+    return S.coalesce(S.try_element_at(values, S.lit(1))["lex"], S.lit(""))
 
 
 def build_cells(df: DataFrame, table: CompiledTable) -> DataFrame:

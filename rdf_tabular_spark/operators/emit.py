@@ -6,9 +6,9 @@ with pure SQL expressions, then ``explode`` — one narrow shuffle-free
 projection. The whole array is rendered as SQL text on the driver
 (:mod:`..expr`) and crosses the py4j bridge in one ``selectExpr``. Template
 variables are bound once per table and each distinct about/property/value
-template expands once (:func:`template_compiler`); only templates the native
-path cannot express call a registered pandas UDF. Blank nodes are
-**deterministic skolem ids**
+template compiles once to SQL (:func:`template_compiler`), whatever its
+RFC 6570 operators, so no template runs Python on the executors. Blank
+nodes are **deterministic skolem ids**
 (``_:r<sha256(table_url, sourceRow)>``) so distributed dedup/resume and
 re-runs are idempotent (SURVEY.md §7.4-1); fixture comparison canonicalizes
 both sides.
@@ -34,12 +34,8 @@ from ..csvw.datatypes import (
 from .. import expr as S
 from ..csvw.metadata import CompiledColumn, CompiledTable
 from ..expr import Expr
-from .cells import cell_binding, cell_binding_arr, cell_values
-from ..csvw.templates import (
-    compile_template,
-    is_native_compilable,
-    template_variables,
-)
+from .cells import cell_binding, cell_values
+from ..csvw.templates import compile_template, template_variables
 
 TRIPLE_SCHEMA = (
     "subj string, pred string, obj string, obj_is_iri boolean, "
@@ -137,10 +133,7 @@ def compile_iri_template(
         template = resolved + template[len(static_prefix):]
         static_prefix = template.split("{", 1)[0]
 
-    if not is_native_compilable(template):
-        expanded = _fallback_expand(template, bindings)
-    else:
-        expanded = compile_template(template, bindings)
+    expanded = compile_template(template, bindings)
 
     if re.match(_SCHEME_RE, static_prefix):
         return expanded
@@ -162,54 +155,6 @@ def compile_iri_template(
     return S.concat(S.lit(_base_dir(base)), expanded)
 
 
-def _fallback_expand(template: str, bindings: dict[str, Expr]) -> Expr:
-    """Arrow-batched pandas UDF fallback for RFC 6570 operators the native
-    path can't express ({?x}, {/x*}, ...). Vectorized — never per-row Python
-    in the sense of a row-at-a-time Python UDF. The UDF is registered in
-    the active session under a name derived from the template and its
-    bound variables, so the SQL text can call it."""
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql import SparkSession
-    from pyspark.sql.functions import pandas_udf
-
-    from ..csvw.templates import expand as py_expand
-    from ..deploy import ensure_py_files
-
-    names = [n for n in template_variables(template) if n in bindings]
-    if not names:
-        return S.lit(py_expand(template, {}))
-
-    from typing import Iterator, Tuple
-
-    # scalar-iterator form: the only pandas-UDF shape that admits a
-    # variable number of input columns (a variadic `*cols` signature is
-    # rejected by the type-hint inference). Annotations are assigned as
-    # REAL typing objects — inline hints would be stringified by
-    # `from __future__ import annotations` and the local Iterator/pd
-    # names are unresolvable from module globals at inference time.
-    def _expand(it):
-        for cols in it:
-            if not isinstance(cols, tuple):
-                cols = (cols,)
-            yield pd.Series(
-                [py_expand(template, dict(zip(names, row)))
-                 for row in zip(*cols)],
-                dtype=object)
-
-    _expand.__annotations__ = {
-        "it": Iterator[Tuple[pd.Series, ...]],
-        "return": Iterator[pd.Series],
-    }
-    spark = SparkSession.active()
-    ensure_py_files(spark)
-    key = "\u0000".join([template, *names]).encode("utf-8")
-    fn = "csvw_template_" + hashlib.sha256(key).hexdigest()[:16]
-    spark.udf.register(fn, pandas_udf(_expand, "string"))
-    return S.call(fn, *[bindings[n] for n in names])
-
-
 def template_compiler(table: CompiledTable):
     """``compile(template, col) -> Expr | None`` over one table: the
     variable bindings (every column's value, ``_row``, ``_sourceRow``)
@@ -221,10 +166,7 @@ def template_compiler(table: CompiledTable):
         "_sourceRow": S.col("_sourceRow").cast("string"),
     }
     for c in table.columns:
-        if c.separator:
-            bindings[c.name] = S.array_join(cell_binding_arr(c), ",")
-        else:
-            bindings[c.name] = cell_binding(c)
+        bindings[c.name] = cell_binding(c)
     compiled: dict[tuple, Expr | None] = {}
 
     def compile_(template: str | None, col: CompiledColumn) -> Expr | None:

@@ -4,13 +4,15 @@ Minimal mode: a flat list of per-subject objects in row order. Standard
 mode: a ``{"tables": [{url, common-props, row: [...]}]}`` envelope where
 each row carries ``url``/``rownum``/``titles``/``describes``.
 
-Spark-first shape: each row's objects are assembled **as JSON text with
-pure column expressions** — per about-template group a ``to_json(struct)``
-whose field order fixes key order, single-reference ``valueUrl`` nesting
-(J3, reader.rb:592-601) resolved *statically* from template identity so the
-nesting is part of the expression tree, not a runtime join. The driver only
-concatenates per-row fragments (at 10^12 scale you would instead write the
-fragments as JSONL and never collect).
+One renderer: :func:`json_lines` builds, as Spark SQL text, the frame of
+JSON lines both outputs read — a subject object per line in minimal mode,
+a row envelope per line in standard mode. Each subject object is a
+``to_json(struct)`` per about-template group whose field order fixes key
+order; single-reference ``valueUrl`` nesting (J3, reader.rb:592-601) is
+resolved *statically* from template identity, so the nesting is part of
+the expression tree, not a runtime join. :func:`write_json_lines` writes
+the lines from the executors; ``reader.to_json`` collects and parses them
+and adds only the table- and group-level envelope.
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ import json
 from collections import Counter
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..csvw.context import PREFIXES, expand_iri
 from ..csvw.datatypes import RDF_TYPE
@@ -129,12 +130,16 @@ def _group_key(col: CompiledColumn) -> str:
     return col.about_url or ""
 
 
-def build_row_objects(
-    cells_df: DataFrame, table: CompiledTable,
+def json_lines(
+    cells_df: DataFrame, table: CompiledTable, mode: str = "minimal",
 ) -> DataFrame:
-    """cells DF -> (_row, _sourceRow, objs array<string>): one JSON text per
-    subject object of the row — the executor-side unit both the in-memory
-    document assembly and the distributed JSONL sink build from."""
+    """cells DF -> (_row, pos, line): one JSON text per line, lines in
+    document order by (_row, pos).
+
+    - mode="minimal": one subject object per line;
+    - mode="standard": one row envelope per line (pos 0,
+      ``{"url": ..#row=N, "rownum": n[, "titles": ...], "describes":
+      [...]}``)."""
     base = table.url
 
     # group columns by aboutUrl template (row subjects)
@@ -229,6 +234,8 @@ def build_row_objects(
     structs = {k: group_struct(k) for k in group_order}
     top = [S.to_json(structs[k]) for k in group_order if k not in inlined]
     objs = S.array_compact(S.array(*top))
+    if mode == "minimal":
+        return cells_df.selectExpr("_row", f"posexplode({objs.sql}) AS (pos, line)")
     # row titles: the rowTitles columns' string values, in declaration
     # order (reader.rb:533 merge_compacted_value(r, "titles", t))
     title_arrays = []
@@ -239,79 +246,47 @@ def build_row_objects(
                 cell_values(rcol.name), lambda v: v["lex"]))
     titles = (S.flatten(S.array(*title_arrays)) if title_arrays
               else S.array().cast("array<string>"))
-    return cells_df.selectExpr(
+    rows = cells_df.selectExpr(
         "_row", "_sourceRow", objs.alias("objs").sql,
         titles.alias("titles").sql)
-
-
-def build_row_fragments(
-    cells_df: DataFrame, table: CompiledTable,
-) -> DataFrame:
-    """cells DF -> (_row, _sourceRow, frag, titles) where *frag* is the JSON
-    text of this row's objects, comma-joined (wrap in [] to parse)."""
-    rows = build_row_objects(cells_df, table)
-    return rows.select(
-        "_row", "_sourceRow", F.concat_ws(",", "objs").alias("frag"),
-        "titles")
+    t, tj = S.col("titles"), S.to_json(S.col("titles"))
+    # a single title is a scalar (merge_compacted_value): the one-element
+    # array's JSON without its brackets
+    titles_field = (
+        S.when(S.size(t) <= 0, S.lit(""))
+        .when(S.size(t) == 1, S.concat(
+            S.lit('"titles":'), S.substring(tj, 2, S.length(tj) - 2),
+            S.lit(",")))
+        .otherwise(S.concat(S.lit('"titles":'), tj, S.lit(","))))
+    url_prefix = json.dumps(f"{table.url.split('#', 1)[0]}#row=")[:-1]
+    line = S.concat(
+        S.lit('{"url":' + url_prefix), S.col("_sourceRow").cast("string"),
+        S.lit('","rownum":'), S.col("_row").cast("string"), S.lit(","),
+        titles_field,
+        S.lit('"describes":['), S.concat_ws(",", S.col("objs")), S.lit("]}"))
+    return rows.selectExpr("_row", "0 AS pos", line.alias("line").sql)
 
 
 def write_json_lines(
     cells_df: DataFrame, table: CompiledTable, path: str,
     mode: str = "minimal", order_partitions: int | None = None,
 ) -> None:
-    """Distributed JSONL sink (S12 at scale): writes one JSON text per line
-    straight from the executors — no ``collect``, so a lineitem-scale (or
-    10^12-row) table serializes without any driver materialization.
-    ``reader.to_json`` keeps its driver-side assembly ONLY for the
-    in-memory document return value (reference reader.rb:398-624 semantics,
-    page-sized inputs); this sink is the path a pipeline uses.
+    """Distributed JSONL sink (S12 at scale): writes the
+    :func:`json_lines` of a table straight from the executors — no
+    ``collect``, so a lineitem-scale (or 10^12-row) table serializes
+    without any driver materialization. The table/group envelope of
+    standard mode is driver-side metadata, not row data, and is written by
+    the caller if needed.
 
-    - mode="minimal": one subject object per line;
-    - mode="standard": one row envelope per line
-      (``{"url": ..#row=N, "rownum": n, "describes": [...]}``) — the
-      table/group envelope is driver-side metadata, not row data, and is
-      written by the caller if needed.
-
-    Output files are globally row-ordered: rows are range-partitioned and
-    sorted within partitions on (_row) before the write, so concatenating
-    part files in name order reproduces document order."""
-    rows = build_row_objects(cells_df, table)
+    Output files are globally row-ordered: lines are range-partitioned and
+    sorted within partitions on (_row, pos) before the write, so
+    concatenating part files in name order reproduces document order."""
     n = order_partitions or cells_df.sparkSession.sparkContext.defaultParallelism
-    if mode == "minimal":
-        lines = (
-            rows.select("_row", F.posexplode("objs").alias("pos", "obj"))
-            .repartitionByRange(n, "_row", "pos")
-            .sortWithinPartitions("_row", "pos")
-            .select("obj")
-        )
-    else:
-        url_prefix = json.dumps(f"{table.url.split('#', 1)[0]}#row=")[:-1]
-        t = F.col("titles")
-        tj = F.to_json(t)
-        # single title -> scalar (merge_compacted_value): strip the
-        # one-element array's outer brackets, safe for any content
-        titles_frag = (
-            F.when(F.size(t) <= 0, F.lit(""))
-            .when(F.size(t) == 1, F.concat(
-                F.lit('"titles":'),
-                F.substring(tj, 2, 2**24).substr(
-                    F.lit(1), F.length(tj) - 2),
-                F.lit(",")))
-            .otherwise(F.concat(F.lit('"titles":'), tj, F.lit(","))))
-        line = F.concat(
-            F.lit('{"url":' + url_prefix),
-            F.col("_sourceRow").cast("string"), F.lit('",'),
-            F.lit('"rownum":'), F.col("_row").cast("string"), F.lit(","),
-            titles_frag,
-            F.lit('"describes":['), F.concat_ws(",", "objs"), F.lit("]}"),
-        )
-        lines = (
-            rows.select("_row", line.alias("obj"))
-            .repartitionByRange(n, "_row")
-            .sortWithinPartitions("_row")
-            .select("obj")
-        )
-    lines.write.mode("overwrite").text(path)
+    (json_lines(cells_df, table, mode)
+     .repartitionByRange(n, "_row", "pos")
+     .sortWithinPartitions("_row", "pos")
+     .select("line")
+     .write.mode("overwrite").text(path))
 
 
 def simplify_common_value(value, base: str | None = None):
@@ -332,19 +307,11 @@ def simplify_common_value(value, base: str | None = None):
     return value
 
 
-def assemble_minimal(frag_rows: list[tuple[int, str]]) -> list:
-    objs: list = []
-    for _row, frag in sorted(frag_rows):
-        if frag:
-            objs.extend(json.loads(f"[{frag}]"))
-    return objs
-
-
 def assemble_standard_table(
-    table: CompiledTable,
-    frag_rows: list[tuple[int, int, str]] | list[tuple[int, int, str, list]],
+    table: CompiledTable, rows: list[dict],
     comments: list[str] | None = None,
 ) -> dict:
+    """The standard-mode table object around its parsed row envelopes."""
     out: dict = {}
     if table.id:
         out["@id"] = table.id  # reader.rb:504
@@ -355,18 +322,5 @@ def assemble_standard_table(
         out[k] = simplify_common_value(v, base=table.url)
     if table.notes is not None:
         out["notes"] = simplify_common_value(table.notes, base=table.url)
-    rows = []
-    for rec in sorted(frag_rows, key=lambda t: t[:2]):
-        _row, _source_row, frag = rec[0], rec[1], rec[2]
-        titles = list(rec[3]) if len(rec) > 3 and rec[3] else []
-        row_obj: dict = {
-            "url": f"{table.url.split('#', 1)[0]}#row={_source_row}",
-            "rownum": _row,
-        }
-        if titles:
-            # merge_compacted_value: one title -> scalar (reader.rb:533)
-            row_obj["titles"] = titles[0] if len(titles) == 1 else titles
-        row_obj["describes"] = json.loads(f"[{frag}]") if frag else []
-        rows.append(row_obj)
     out["row"] = rows
     return out

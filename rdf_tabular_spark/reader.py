@@ -169,6 +169,23 @@ def _scan_table(spark: SparkSession, table: CompiledTable,
     return read_table(spark, table, path)
 
 
+def _table_cells(spark: SparkSession, table: CompiledTable,
+                 html_text: str | None, url_map: dict[str, str] | None,
+                 search_dir: str | None, headers: dict | None,
+                 ) -> tuple[TableScan, CompiledTable, DataFrame]:
+    """The front end of every output: scan -> effective table -> header
+    defaults -> cells."""
+    scan = _scan_table(spark, table, html_text, url_map, search_dir)
+    table = _effective_table(table, scan)
+    if headers:
+        from .csvw.http_headers import apply_headers_to_table
+
+        # re-apply after title-merge: columns derived from the header
+        # row must also pick up the Content-Language default
+        table = apply_headers_to_table(table, headers)
+    return scan, table, build_cells(scan.df, table)
+
+
 def to_triples(
     spark: SparkSession,
     metadata: dict | str,
@@ -194,9 +211,6 @@ def to_triples(
       fetched it out-of-band — applies the reference's Content-Type dialect
       overrides and Content-Language lang default (reader.rb:113-132).
     """
-    from .csvw import metadata as metadata_mod
-    from .csvw.http_headers import apply_headers_to_table
-
     group, html_text, search_dir = _load_group(
         metadata, base, search_dir, headers)
 
@@ -205,17 +219,11 @@ def to_triples(
     group_node = group.id or skolem_str("group", *(t.url for t in group.tables))
 
     for table in group.tables:
-        scan = _scan_table(spark, table, html_text, url_map, search_dir)
+        scan, table, cells = _table_cells(
+            spark, table, html_text, url_map, search_dir, headers)
         scans[table.url] = scan
-        table = _effective_table(table, scan)
-        if headers:
-            # re-apply after title-merge: columns derived from the header
-            # row must also pick up the Content-Language default
-            table = apply_headers_to_table(table, headers)
         if table.suppress_output:
             continue
-
-        cells = build_cells(scan.df, table)
         table_node = table.id or skolem_str("table", table.url)
         parts.append(emit_table_triples(cells, table, mode=mode, table_node=table_node))
 
@@ -278,48 +286,42 @@ def to_json(
     """EP3/S12: csv2json serialization (reader.rb:398-624).
 
     Returns the parsed JSON value: minimal -> list of per-subject objects;
-    standard -> {"tables": [...]} envelope. Row objects are assembled
-    distributed as JSON text (operators/json_rows.py); the driver only
-    concatenates fragments in row order.
+    standard -> {"tables": [...]} envelope. The lines are the ones
+    :func:`to_json_lines` writes (``operators/json_rows.json_lines``):
+    the driver collects them, orders them by (_row, pos) and parses each;
+    only the table- and group-level envelope is built here.
 
     DRIVER-SIZED TABLES ONLY: this is the in-memory-document API — the
-    per-table ``collect()`` materializes every row fragment on the
-    driver, which is the point (the caller wants a Python value). For
-    tables that don't fit a driver, use :func:`to_json_lines`, the
-    distributed sink with identical serialization (property-pinned:
-    tests/test_properties_reader.py).
+    per-table ``collect()`` materializes every line on the driver, which
+    is the point (the caller wants a Python value). For tables that don't
+    fit a driver, use :func:`to_json_lines`.
     """
     from .operators.json_rows import (
-        assemble_minimal,
         assemble_standard_table,
-        build_row_fragments,
+        json_lines,
         simplify_common_value,
     )
 
     group, html_text, search_dir = _load_group(
         metadata, base, search_dir, headers)
 
-    tables_out = []
-    minimal_objs: list = []
+    out: list = []
     for table in group.tables:
         if table.suppress_output:
             continue
-        scan = _scan_table(spark, table, html_text, url_map, search_dir)
-        table = _effective_table(table, scan)
-        cells = build_cells(scan.df, table)
-        frags = build_row_fragments(cells, table).collect()
+        scan, table, cells = _table_cells(
+            spark, table, html_text, url_map, search_dir, headers)
+        lines = sorted(json_lines(cells, table, mode).collect(),
+                       key=lambda r: (r["_row"], r["pos"]))
+        rows = [json.loads(r["line"]) for r in lines]
         if mode == "minimal":
-            minimal_objs.extend(
-                assemble_minimal([(r["_row"], r["frag"]) for r in frags]))
+            out.extend(rows)
         else:
-            tables_out.append(assemble_standard_table(
-                table, [(r["_row"], r["_sourceRow"], r["frag"], r["titles"])
-                        for r in frags],
-                comments=scan.comments))
+            out.append(assemble_standard_table(table, rows, scan.comments))
 
     if mode == "minimal":
-        return minimal_objs
-    envelope: dict = {"tables": tables_out}
+        return out
+    envelope: dict = {"tables": out}
     if group.id:
         envelope["@id"] = group.id  # reader.rb:457
     for k, v in group.common_properties.items():
@@ -353,9 +355,8 @@ def to_json_lines(
     tables = [t for t in group.tables if not t.suppress_output]
     out_dirs: list[str] = []
     for i, table in enumerate(tables):
-        scan = _scan_table(spark, table, html_text, url_map, search_dir)
-        table = _effective_table(table, scan)
-        cells = build_cells(scan.df, table)
+        _scan, table, cells = _table_cells(
+            spark, table, html_text, url_map, search_dir, headers)
         dest = out_path if len(tables) == 1 else os.path.join(
             out_path, f"table_{i}")
         write_json_lines(cells, table, dest, mode=mode)

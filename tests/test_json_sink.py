@@ -8,11 +8,13 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import FIXTURE_DIR, needs_reference
 
 BASE = "http://example.org/"
+EXTRA_DIR = os.path.join(os.path.dirname(__file__), "w3c", "extra")
 SF_DIR = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata") + "/sf0.01"
 
 
@@ -24,40 +26,46 @@ def _read_jsonl(path: str) -> list[str]:
     return lines
 
 
-@needs_reference
-def test_jsonl_minimal_matches_in_memory_document(spark, tmp_path):
+#: (data dir, metadata file): the reference's tree-ops fixture and an
+#: in-repo one with rowTitles, so both sinks are checked on any host
+DOCUMENTS = [
+    pytest.param(FIXTURE_DIR, "tree-ops.csv-metadata.json", id="tree-ops",
+                 marks=needs_reference),
+    pytest.param(EXTRA_DIR, "x73.json", id="x73-row-titles"),
+]
+
+
+def _document_and_lines(spark, tmp_path, data_dir, meta_file, mode):
+    """(to_json's document, the parsed lines of to_json_lines) for one
+    metadata file."""
+    from rdf_tabular_spark.reader import to_json, to_json_lines
+
+    with open(os.path.join(data_dir, meta_file)) as f:
+        doc = json.load(f)
+    kw = {"base": BASE + meta_file, "search_dir": data_dir, "mode": mode}
+    want = to_json(spark, doc, **kw)
+    out = str(tmp_path / "jsonl")
+    assert to_json_lines(spark, doc, out, **kw) == [out]
+    return want, [json.loads(ln) for ln in _read_jsonl(out)]
+
+
+@pytest.mark.parametrize("data_dir,meta_file", DOCUMENTS)
+def test_jsonl_minimal_matches_in_memory_document(spark, tmp_path, data_dir,
+                                                  meta_file):
     """Concatenated JSONL part files == to_json's minimal object list,
     object for object, in document order."""
-    from rdf_tabular_spark.reader import to_json, to_json_lines
-
-    with open(os.path.join(FIXTURE_DIR, "tree-ops.csv-metadata.json")) as f:
-        doc = json.load(f)
-    want = to_json(spark, doc, base=BASE + "tree-ops.csv-metadata.json",
-                   search_dir=FIXTURE_DIR, mode="minimal")
-    out = str(tmp_path / "jsonl")
-    dirs = to_json_lines(spark, doc, out,
-                         base=BASE + "tree-ops.csv-metadata.json",
-                         search_dir=FIXTURE_DIR, mode="minimal")
-    assert dirs == [out]
-    got = [json.loads(ln) for ln in _read_jsonl(out)]
-    assert got == want
+    want, got = _document_and_lines(spark, tmp_path, data_dir, meta_file,
+                                    "minimal")
+    assert want and got == want
 
 
-@needs_reference
-def test_jsonl_standard_row_envelopes(spark, tmp_path):
+@pytest.mark.parametrize("data_dir,meta_file", DOCUMENTS)
+def test_jsonl_standard_row_envelopes(spark, tmp_path, data_dir, meta_file):
     """Standard mode: one row envelope per line with url/rownum/describes
     matching the in-memory standard document's row array."""
-    from rdf_tabular_spark.reader import to_json, to_json_lines
-
-    with open(os.path.join(FIXTURE_DIR, "tree-ops.csv-metadata.json")) as f:
-        doc = json.load(f)
-    want = to_json(spark, doc, base=BASE + "tree-ops.csv-metadata.json",
-                   search_dir=FIXTURE_DIR, mode="standard")
-    out = str(tmp_path / "jsonl")
-    to_json_lines(spark, doc, out, base=BASE + "tree-ops.csv-metadata.json",
-                  search_dir=FIXTURE_DIR, mode="standard")
-    got = [json.loads(ln) for ln in _read_jsonl(out)]
-    assert got == want["tables"][0]["row"]
+    want, got = _document_and_lines(spark, tmp_path, data_dir, meta_file,
+                                    "standard")
+    assert want["tables"][0]["row"] and got == want["tables"][0]["row"]
 
 
 def test_jsonl_scales_without_driver_materialization(spark, tmp_path):

@@ -225,6 +225,29 @@ def test_resume_after_partial_stage_failure(spark, tmp_path):
     assert got == want
 
 
+def test_pipeline_releases_stage_checkpoints(spark, tmp_path, monkeypatch):
+    """A run leaves no persisted RDD behind: the checkpoint a distributed
+    link stage returns is released once the stage is on disk. The labels
+    frames are held here, so the JVM cannot collect their checkpoint
+    before the check and only the release frees it."""
+    from rdf_tabular_spark.kg import link
+    from rdf_tabular_spark.kg.pipeline import KGConfig, KGPipeline
+
+    monkeypatch.setattr(link, "SMALL_VOCAB", 0)
+    held = []
+    link_mentions = link.link_mentions
+    monkeypatch.setattr(link, "link_mentions", lambda *a: held.append(
+        link_mentions(*a)) or held[-1])
+    jsc = spark.sparkContext._jsc
+    for i in range(3):
+        before = set(jsc.getPersistentRDDs().keySet())
+        KGPipeline(spark, KGConfig(checkpoint_dir=str(tmp_path / f"chk{i}"),
+                                   n_files=5)).run()
+        # RDDs other tests left may be collected meanwhile; none is added
+        assert set(jsc.getPersistentRDDs().keySet()) <= before
+    assert len(held) == 3
+
+
 def test_materialize_graph_partition_pruning(spark, tmp_path):
     """Final graph tables: triple table partitioned by pred (a constant-
     predicate read carries a PartitionFilter — the BGP layer's scan

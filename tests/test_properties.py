@@ -12,7 +12,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rdf_tabular_spark.csvw import uax35
-from rdf_tabular_spark.csvw.templates import expand, is_native_compilable
+from rdf_tabular_spark import expr as S
+from rdf_tabular_spark.csvw.templates import (
+    compile_template,
+    expand,
+    template_variables,
+)
 from rdf_tabular_spark.kg import link
 
 # ---------------------------------------------------------------------------
@@ -132,11 +137,13 @@ def test_multi_var_expansion_is_concatenation(name, v1, v2):
 
 @given(st.text(alphabet=string.ascii_lowercase + "{}+#?/;*:1", max_size=20))
 def test_native_compilable_is_total(template):
-    """The classifier never crashes; every template is classified."""
+    """Every template compiles to SQL."""
     try:
-        assert is_native_compilable(template) in (True, False)
+        names = template_variables(template)
+        out = compile_template(template, {n: S.lit(n) for n in names})
     except ValueError:
-        pass  # malformed prefix like {v:} — expander would reject too
+        return  # malformed prefix like {v:} — expander would reject too
+    assert isinstance(out, S.Expr)
 
 
 # ---------------------------------------------------------------------------
